@@ -102,6 +102,8 @@ object GraftFunctions {
     classOf[BloomMightContain].getName, "bloom_might_contain")
   val pqAdcInfo = new ExpressionInfo(
     classOf[PqAdc].getName, "pq_adc")
+  val corrInfo = new ExpressionInfo(
+    classOf[NullSafeCorr].getName, "null_safe_corr")
 
   def builder(args: Seq[Expression]): Expression =
     SortedLongIntersectSize(args(0), args(1))
@@ -115,6 +117,8 @@ object GraftFunctions {
     BloomMightContain(args(0), args(1))
   def pqAdcBuilder(args: Seq[Expression]): Expression =
     PqAdc(args(0), args(1))
+  def corrBuilder(args: Seq[Expression]): Expression =
+    NullSafeCorr(args(0), args(1))
 
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -129,6 +133,14 @@ object GraftFunctions {
       "bloom_might_contain", bloomBuilder, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "pq_adc", pqAdcBuilder, "scala_udf")
+    registerCorr(spark)
+  }
+
+  /** Registers `null_safe_corr` alone, once per session. */
+  def registerCorr(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("null_safe_corr")))
+      registry.createOrReplaceTempFunction("null_safe_corr", corrBuilder, "scala_udf")
   }
 }
 
@@ -152,6 +164,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(
       (FunctionIdentifier("pq_adc"), GraftFunctions.pqAdcInfo,
         GraftFunctions.pqAdcBuilder))
+    ext.injectFunction(
+      (FunctionIdentifier("null_safe_corr"), GraftFunctions.corrInfo,
+        GraftFunctions.corrBuilder))
     // Custom optimizer rule: band inequality joins -> bucket equi-joins
     // (see graft.plans.BandedRangeJoinRule for scope and proof sketch).
     ext.injectOptimizerRule(_ => graft.plans.BandedRangeJoinRule)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.wdi.{Regions, WdiPipelines, WdiSchemas, WdiEtl}
+import graft.wdi.{Regions, WdiEtl, WdiPipelines, WdiSchemas, WdiStats}
 
 /** Driver-checkable WDI queries.
   *
@@ -21,17 +21,17 @@ object WdiQueries {
     val sd = v.sdNames.map(_._2)
     Seq(
       ("sd_country", s"sd_by_country_${v.goldenSuffix}", true,
-        sd ++ WdiPipelines.ratioCols),
+        sd ++ WdiStats.ratioCols),
       ("sd_region", s"sd_by_region_${v.goldenSuffix}", false,
         sd.flatMap(c => Seq(s"${c}_mean", s"${c}_sd"))),
       ("sd_ratio_region", s"sd_ratio_by_region_${v.goldenSuffix}", false,
-        WdiPipelines.ratioCols.flatMap(c => Seq(s"${c}_mean", s"${c}_sd"))),
-      ("corr_country", s"corr_by_country_${v.goldenSuffix}", true, WdiPipelines.corrCols),
+        WdiStats.ratioCols.flatMap(c => Seq(s"${c}_mean", s"${c}_sd"))),
+      ("corr_country", s"corr_by_country_${v.goldenSuffix}", true, WdiStats.corrCols),
       ("corr_region", s"corr_by_region_${v.goldenSuffix}", false,
-        WdiPipelines.corrCols.flatMap(c => Seq(s"${c}_mean", s"${c}_sd"))),
-      ("acf_country", s"acf_by_country_${v.goldenSuffix}", true, WdiPipelines.acfCols),
+        WdiStats.corrCols.flatMap(c => Seq(s"${c}_mean", s"${c}_sd"))),
+      ("acf_country", s"acf_by_country_${v.goldenSuffix}", true, WdiStats.acfCols),
       ("acf_region", s"acf_by_region_${v.goldenSuffix}", false,
-        WdiPipelines.acfCols.flatMap(c => Seq(s"${c}_mean", s"${c}_sd"))))
+        WdiStats.acfCols.flatMap(c => Seq(s"${c}_mean", s"${c}_sd"))))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = {

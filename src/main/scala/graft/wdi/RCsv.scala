@@ -1,8 +1,14 @@
 package graft.wdi
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions.{col, udf}
-import org.apache.spark.sql.types.DoubleType
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** CSV sink with R `readr::write_csv` numeric formatting (S2,
   * detrendandstat_quad.R:214-216): shortest round-trip digits, fixed vs
@@ -10,6 +16,8 @@ import org.apache.spark.sql.types.DoubleType
   * the boundary the golden files pin, e.g. `-0.0010895572142160998`
   * fixed vs `-6.060884346639502e-4` sci),
   * unpadded exponent, integers without a trailing `.0`, nulls as `NA`.
+  * [[write]] is a driver-side sink for small result tables: one collect,
+  * no write job.
   */
 object RCsv {
 
@@ -44,31 +52,43 @@ object RCsv {
     s"${mant}e$es"
   }
 
-  private val fmt = udf((d: java.lang.Double) =>
-    if (d == null) "NA" else formatDouble(d))
+  /** Spark's CSV writer options the sink reproduces: a header line, nulls
+    * and empty strings as empty cells, default quoting and escaping. */
+  private def csvOptions =
+    new CSVOptions(Map("header" -> "true", "emptyValue" -> ""), false, "UTC")
 
-  /** Write `df` as ONE header CSV file at `path` (like `write_csv`); double
-    * columns formatted R-style. Driver-side single-file rename — the row
-    * volume of these sinks is per-country statistics, never the raw data. */
+  /** Write `df` as ONE header CSV file at `path` (like `write_csv`): the rows
+    * are collected and laid out on the driver by Spark's own CSV line
+    * generator, double columns formatted by [[formatDouble]] (null → `NA`),
+    * string columns as they are; any other column type is rejected. The
+    * bytes are those of Spark's CSV writer with the same options. The row
+    * volume of these sinks is per-country statistics, never the raw data.
+    * The file is written next to `path` under a temporary name and renamed
+    * over it atomically, so a reader never sees a partial file. */
   def write(df: DataFrame, path: String): Unit = {
-    val cols = df.schema.fields.map { f =>
-      if (f.dataType == DoubleType) fmt(col(s"`${f.name}`")).as(f.name)
-      else col(s"`${f.name}`")
+    val cells: Array[Row => Any] = df.schema.fields.zipWithIndex.map {
+      case (f, i) => f.dataType match {
+        case DoubleType => (r: Row) =>
+          UTF8String.fromString(if (r.isNullAt(i)) "NA" else formatDouble(r.getDouble(i)))
+        case StringType => (r: Row) => UTF8String.fromString(r.getString(i))
+        case t => throw new IllegalArgumentException(
+          s"RCsv.write: column `${f.name}` is ${t.simpleString}; only double and string are formatted")
+      }
     }
-    val tmp = java.nio.file.Files.createTempDirectory("rcsv").toString
-    df.select(cols.toIndexedSeq: _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite)
-      .option("header", true)
-      .option("emptyValue", "")
-      .csv(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-      .getOrElse(sys.error(s"no part file in $tmp"))
-    val target = java.nio.file.Paths.get(path)
-    if (target.getParent != null) java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.move(part.toPath, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    val rows = df.collect()
+    val target = Paths.get(path).toAbsolutePath
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s".${target.getFileName}.${UUID.randomUUID}.tmp")
+    try {
+      val out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8, StandardOpenOption.CREATE_NEW)
+      try {
+        val gen = new UnivocityGenerator(
+          StructType(df.schema.fields.map(_.copy(dataType = StringType))), out, csvOptions)
+        gen.writeHeaders()
+        rows.foreach(r => gen.write(new GenericInternalRow(cells.map(_(r)))))
+        gen.close()
+      } finally out.close()
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
   }
 }

@@ -5,14 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The shared front half of all four reference pipelines: ingest → recode →
-  * unpivot → union → validity-run cleaning → all-vars semi-join → pivot →
+  * unpivot → union → validity-run cleaning → all-vars gate → pivot →
   * derived national accounts → region lookup
   * (detrendandstat_quad.R:4-130, dtrendandstat_dlog.R:12-77).
   *
   * Everything is declarative DataFrame API: one Catalyst plan from CSV scan
-  * to cleaned wide table. The only shuffles are the (country, variable)
-  * window partition, the pivot's (country, year) hash agg, and the tiny
-  * all-vars aggregation — the region dim is broadcast.
+  * to cleaned wide table, reading each extract once. The only shuffles are
+  * the (country, variable) run window, the per-country all-vars window and
+  * the pivot's (country, year) hash agg — the region dim is broadcast.
   */
 object WdiEtl {
   import WdiSchemas._
@@ -75,15 +75,16 @@ object WdiEtl {
   }
 
   /** J1: countries having all five variables survive
-    * (detrendandstat_quad.R:103-110) — left-semi join, never a collect. */
-  def allVarsOnly(cleaned: DataFrame): DataFrame = {
-    val complete = cleaned
-      .select("Country Code", "Variable").distinct()
-      .groupBy("Country Code").agg(count(lit(1)).as("n"))
-      .filter(col("n") === variables.size)
-      .select("Country Code")
-    cleaned.join(broadcast(complete), Seq("Country Code"), "left_semi")
-  }
+    * (detrendandstat_quad.R:103-110). A window gate — the number of distinct
+    * variables over the country's cleaned rows — instead of a semi-join of
+    * the rows against their own aggregate, so the extracts are scanned
+    * once; never a collect. */
+  def allVarsOnly(cleaned: DataFrame): DataFrame =
+    cleaned
+      .withColumn("nVars",
+        size(collect_set(col("Variable")).over(Window.partitionBy("Country Code"))))
+      .filter(col("nVars") === variables.size)
+      .drop("nVars")
 
   /** R2 + P6 + J2: pivot to wide with the explicit variable list, derive
     * C,I,X,M,TB, attach Region via broadcast lookup

@@ -3,53 +3,65 @@ package graft.wdi
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** The shared back half: per-country moment statistics over the cycle
   * columns, then per-region mean/sd re-aggregation
   * (detrendandstat_quad.R:170-291, dtrendandstat_dlog.R:97-219).
   *
   * Generic over output column names so one implementation serves all four
-  * variants (sd_Y vs sd_dlogY etc). Both aggregation levels are plain
-  * hash aggregations; level 2 runs over 45 rows.
+  * variants (sd_Y vs sd_dlogY etc). Every per-country moment of a variant
+  * comes out of ONE table — one lag window plus one (country, region)
+  * aggregation — and each output file is a projection of that table
+  * (country level) or a region aggregation over it (level 2, 45 rows).
   */
 object WdiStats {
 
-  /** A3 + A9: sd×100 of each cycle series by (country, region), plus the
-    * consumption/investment volatility ratios. `names` maps the four cycle
-    * columns to output names in golden-header order. */
-  def sdByCountry(cycles: DataFrame, names: Seq[(String, String)]): DataFrame = {
-    val aggs = names.map { case (c, out) => (stddev_samp(col(c)) * 100).as(out) }
-    val sdY = names.head._2 // Y first by convention
-    val sdC = names(1)._2
-    val sdI = names(2)._2
-    cycles
-      .groupBy(col("Country Code"), col("Region"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("sdC_over_sdY", col(sdC) / col(sdY))
-      .withColumn("sdI_over_sdY", col(sdI) / col(sdY))
-  }
+  private val cycleCols = Seq("Y_cyc", "C_cyc", "I_cyc", "TB_cyc")
 
-  /** A5: the six pairwise Pearson correlations of the four cycle series
-    * (complete.obs ≡ Spark corr's null-pair skipping). */
-  def corrByCountry(cycles: DataFrame): DataFrame = {
-    val pairs = Seq(
-      ("Y_cyc", "C_cyc", "corr_Y_C"), ("Y_cyc", "I_cyc", "corr_Y_I"),
-      ("Y_cyc", "TB_cyc", "corr_Y_TB"), ("C_cyc", "I_cyc", "corr_C_I"),
-      ("C_cyc", "TB_cyc", "corr_C_TB"), ("I_cyc", "TB_cyc", "corr_I_TB"))
-    val aggs = pairs.map { case (a, b, out) => corr(col(a), col(b)).as(out) }
-    cycles.groupBy(col("Country Code"), col("Region")).agg(aggs.head, aggs.tail: _*)
-  }
+  private val corrPairs = Seq(
+    ("Y_cyc", "C_cyc", "corr_Y_C"), ("Y_cyc", "I_cyc", "corr_Y_I"),
+    ("Y_cyc", "TB_cyc", "corr_Y_TB"), ("C_cyc", "I_cyc", "corr_C_I"),
+    ("C_cyc", "TB_cyc", "corr_C_TB"), ("I_cyc", "TB_cyc", "corr_I_TB"))
 
-  /** W4 + A6: lag-1 autocorrelation of each cycle series in year order. */
-  def acfByCountry(cycles: DataFrame): DataFrame = {
+  /** Moment column names in golden header order. */
+  val corrCols: Seq[String] = corrPairs.map(_._3)
+  val acfCols: Seq[String] = Seq("acf_Y", "acf_C", "acf_I", "acf_TB")
+  val ratioCols: Seq[String] = Seq("sdC_over_sdY", "sdI_over_sdY")
+
+  /** Every per-country moment of one variant, one row per (country, region),
+    * columns `Country Code, Region`, the sd names, [[ratioCols]],
+    * [[corrCols]], [[acfCols]]:
+    *  - A3 + A9: sd×100 of each cycle series (`sdNames` maps the four cycle
+    *    columns to output names, Y, C, I first) and the consumption /
+    *    investment volatility ratios;
+    *  - A5: the six pairwise Pearson correlations (complete.obs ≡ Spark
+    *    corr's null-pair skipping);
+    *  - W4 + A6: the lag-1 autocorrelation of each series in year order.
+    * Correlations use `null_safe_corr` (Spark's corr, but null rather than
+    * a failed job on a zero-variance series) and the ratios `try_divide`,
+    * so a constant series yields null moments — `NA` in the CSVs.
+    * The four lags come from one projection over one year-ordered country
+    * window, so the table costs one window pass and one aggregation. */
+  def countryMoments(cycles: DataFrame, sdNames: Seq[(String, String)]): DataFrame = {
+    GraftFunctions.registerCorr(cycles.sparkSession)
+    def corrOrNull(x: String, y: String) = call_function("null_safe_corr", col(x), col(y))
     val w = Window.partitionBy("Country Code").orderBy("Year")
-    val cols = Seq("Y_cyc" -> "acf_Y", "C_cyc" -> "acf_C",
-      "I_cyc" -> "acf_I", "TB_cyc" -> "acf_TB")
-    val lagged = cols.foldLeft(cycles) { case (df, (c, _)) =>
-      df.withColumn(s"${c}_lag", lag(col(c), 1).over(w))
-    }
-    val aggs = cols.map { case (c, out) => corr(col(c), col(s"${c}_lag")).as(out) }
-    lagged.groupBy(col("Country Code"), col("Region")).agg(aggs.head, aggs.tail: _*)
+    val keys = Seq(col("Country Code"), col("Region"))
+    val lagged = cycles.select(keys ++ cycleCols.map(col) ++
+      cycleCols.map(c => lag(col(c), 1).over(w).as(s"${c}_lag")): _*)
+    val aggs =
+      sdNames.map { case (c, out) => (stddev_samp(col(c)) * 100).as(out) } ++
+        corrPairs.map { case (a, b, out) => corrOrNull(a, b).as(out) } ++
+        cycleCols.zip(acfCols).map { case (c, out) => corrOrNull(c, s"${c}_lag").as(out) }
+    val Seq(sdY, sdC, sdI, _) = sdNames.map(_._2)
+    lagged
+      .groupBy(keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .select(keys ++ sdNames.map(n => col(n._2)) ++
+        Seq(try_divide(col(sdC), col(sdY)).as(ratioCols(0)),
+          try_divide(col(sdI), col(sdY)).as(ratioCols(1))) ++
+        (corrCols ++ acfCols).map(col): _*)
   }
 
   /** A4 + A3: region-level mean and sample sd of each country moment,

@@ -31,4 +31,26 @@ class SessionCachesSpec extends SparkSpec {
     assert(LlmText.trainedCacheSize == 0, "bpeMergeCache/lrFitCache survived session end")
     assert(!SessionCaches.isHooked(s), "listener hook not released on session end")
   }
+
+  test("application end unpersists and drops the WDI pipeline tables") {
+    import graft.wdi.{WdiFixture, WdiPipelines}
+    import org.apache.spark.storage.StorageLevel
+    val s = spark
+    val dir = WdiFixture.write()
+    val moments = WdiPipelines.moments(s, dir, WdiPipelines.quad)
+    val before = moments.collect()
+    assert(WdiPipelines.cacheSize >= 2, "front half + moments not cached")
+    assert(moments.storageLevel != StorageLevel.NONE, "moments table not persisted")
+    assert(WdiPipelines.cycles(s, dir, WdiPipelines.quad).storageLevel == StorageLevel.NONE,
+      "cycles are persisted")
+    assert(SessionCaches.isHooked(s), "WDI pipeline cache did not hook the session")
+
+    SessionCaches.fireSessionEnd(s)
+
+    assert(WdiPipelines.cacheSize == 0, "WDI pipeline cache survived session end")
+    assert(moments.storageLevel == StorageLevel.NONE, "moments table still persisted")
+    // a later call rebuilds the same table
+    assert(WdiPipelines.moments(s, dir, WdiPipelines.quad).collect().toSeq == before.toSeq)
+    SessionCaches.fireSessionEnd(s)
+  }
 }
