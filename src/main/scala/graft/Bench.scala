@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line the driver parses.
   *
@@ -302,35 +300,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val loadStart = awaitQuietStart()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r17 examined-and-REVERTED: lowering AQE's coalescing floor
-      // (spark.sql.adaptive.coalescePartitions.minPartitionSize 1m->16k)
-      // parallelizes the compute-dense sub-MB post-shuffle stages (f10's
-      // post-sort stage: 1 task 674 ms -> 32 tasks 274 ms wall), but the
-      // family-level A/B read a wash-to-loss (relational micro 45.7 s at
-      // the default vs 46.9 s at 16k) — the extra task launches across
-      // ~100 trivial stages eat the few hot stages' win. Default kept.
-      // Engine-wide planner choice (set in every graft session builder):
-      // InferFiltersFromGenerate copies an explode's array expression into a
-      // size(...) > 0 pre-filter, and predicate pushdown then re-inlines it
-      // BELOW the projection that materialized it — for shingle/gram arrays
-      // whose lambdas index a split() column, that re-evaluates the split
-      // per element, turning an O(n) doc pass into O(n^2) (measured 4.7 s
-      // -> 1.8 s on dedup_ngram_jaccard at sf0.1). The rule only prunes
-      // rows with empty/null source arrays, which our corpora don't have.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Warm the session (codegen, scheduler, parquet footer caches) so the
     // alphabetically-first query doesn't absorb one-time startup cost.
     spark.range(1000000).selectExpr("sum(id)").write

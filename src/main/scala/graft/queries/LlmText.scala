@@ -1183,46 +1183,6 @@ object LlmText {
     p
   }
 
-  /** Probe-pruning report for the canonical occurrence index's bucket
-    * layout (graft.tools.ProbeOccPruning; the measurement half of the
-    * r14 "derive the bucket count" item): for each candidate bucket
-    * count, how many partition directories does an ingest's probe list,
-    * and what fraction of the stored base occurrences sit inside them —
-    * the rows a touched-bucket scan reads vs the whole index.
-    * `ingestEvery` shapes the ingest: 5 replays the registered entries'
-    * delta slice (doc_id % 5 == 4, which SATURATES any layout — its span
-    * set hashes into every bucket); large values model the production
-    * daily-ingest regime where the ingest's span count does NOT grow
-    * with the corpus — exactly the regime a corpus-derived bucket count
-    * exists for (a fixed 64 caps the pruning ratio at 1/64 forever;
-    * 512 dirs put 8x fewer rows behind each touched directory). */
-  private[graft] def occPruningReport(s: SparkSession, d: String,
-      nBkts: Seq[Int], ingestEvery: Long): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d)
-    val l = 10 // the registered canonical entries' span width
-    val isDelta = col("doc_id") % ingestEvery === ingestEvery - 1
-    val baseH = spanRows(tokenized(docs.filter(!isDelta)), l)
-      .select(xxhash64(col("span")).as("span_h")).localCheckpoint(false)
-    val deltaH = spanRows(tokenized(docs.filter(isDelta)), l)
-      .select(xxhash64(col("span")).as("span_h")).distinct()
-      .localCheckpoint(false)
-    val baseTotal = baseH.count()
-    val nSpans = deltaH.count()
-    nBkts.map { nBkt =>
-      val touched = deltaH
-        .select(pmod(col("span_h"), lit(nBkt)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      val rowsTouched = baseH
-        .filter(pmod(col("span_h"), lit(nBkt)).cast("int")
-          .isin(touched.map(Integer.valueOf): _*))
-        .count()
-      (nBkt, ingestEvery, nSpans, touched.size, rowsTouched, baseTotal,
-        rowsTouched.toDouble / baseTotal)
-    }.toDF("n_bkt", "ingest_every", "n_ingest_spans", "n_touched_bkts",
-      "base_rows_touched", "base_rows_total", "scan_fraction")
-  }
-
   /** Suffix-array-style VARIABLE-LENGTH repeat detection — the other half
     * of the Lee et al. toolkit next to [[substringDedup]]'s fixed-w spans:
     * per token position, the length of the longest prefix that occurs

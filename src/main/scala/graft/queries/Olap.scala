@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import DecimalSums._
 
 /** Multidimensional-OLAP depth beyond the reference's flat groupBys:
   * rollup/cube/grouping-sets lattices, window-frame statistics, a banded
@@ -25,13 +26,6 @@ import graft.Tables
   * partial combiners — no driver-side collection anywhere.
   */
 object Olap {
-
-  /** Exact, summation-order-independent sum of a 2-decimal double column. */
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
-
-  /** Same, for per-row products of one/two 2-decimal rates (<=4/6 places). */
-  private def dsum4(c: Column): Column = sum(c.cast("decimal(22,4)")).cast("double")
-  private def dsum6(c: Column): Column = sum(c.cast("decimal(24,6)")).cast("double")
 
   private val epoch = lit("1970-01-01 00:00:00").cast("timestamp")
   /** Whole days since epoch of a (UTC, midnight-aligned) timestamp column. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ts.{GroupKernels, Kernels}
+import DecimalSums._
 
 /** The relational operator surface of SURVEY.md §2, one driver-checkable
   * query per operator, each paired with an equivalent DuckDB oracle SQL.
@@ -18,9 +19,6 @@ import graft.ts.{GroupKernels, Kernels}
   *    rounded on both sides, coarse enough to absorb ulp-level divergence.
   */
 object Relational {
-
-  /** Exact, summation-order-independent sum of a 2-decimal double column. */
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
 
   private val wUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import DecimalSums._
 
 /** The rest of the TPC-H suite — all 22 query shapes — over the driver's
   * star schema (TESTDATA.md tables). There is no partsupp table, so
@@ -30,9 +31,6 @@ import graft.Tables
   * HAVING filter runs on the aggregated (orderkey, sum) rows, not raw facts.
   */
 object TpchMore {
-
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
-  private def dsum4(c: Column): Column = sum(c.cast("decimal(22,4)")).cast("double")
 
   private def rev: Column = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 

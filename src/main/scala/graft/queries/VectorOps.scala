@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -897,17 +897,21 @@ object VectorOps {
     val emb = embOf(s, d)
     val sample = indexSample(emb, d)
     val centers = lloyd(sample, k, iters = 10)
-    val assignU = udf((e: Seq[Double]) => nearestCells(centers, e.toArray, 1).head)
     val inverted = shared(s, s"ivf_inverted:$d:${dataFp(d)}:$k")(
-      withNorm(emb).withColumn("cell", assignU(col("e")))
+      withNorm(emb).withColumn("cell", ivfAssignUdf(centers)(col("e")))
         .select(col("vec_id"), col("cell"), col("e"), col("nrm")))
     (inverted, centers)
   }
 
+  /** Nearest-centroid cell of a vector — the encode half of the IVF
+    * contract, shared by every inverted-file build. */
+  private def ivfAssignUdf(centers: Array[Array[Double]]): UserDefinedFunction =
+    udf((e: Seq[Double]) => nearestCells(centers, e.toArray, 1).head)
+
   /** nProbe-nearest-centroid prober over a trained codebook — the query
     * half of the IVF contract, usable from batch plans and stream drains. */
   private[graft] def ivfProbeUdf(centers: Array[Array[Double]],
-      nProbe: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+      nProbe: Int): UserDefinedFunction =
     udf((qe: Seq[Double]) => nearestCells(centers, qe.toArray, nProbe))
 
   private[queries] def annIvfTopK(s: SparkSession, d: String,
@@ -953,10 +957,9 @@ object VectorOps {
     * probed cells only, rank. `inverted` must have (vec_id, cell, e, nrm). */
   private def ivfQueryTopK(inverted: DataFrame, centers: Array[Array[Double]],
       nProbe: Int, topK: Int, qmod: Long = 50): DataFrame = {
-    val probe = udf((qe: Seq[Double]) => nearestCells(centers, qe.toArray, nProbe))
     val queries = inverted.filter(col("vec_id") % qmod === 0)
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qn"))
-      .withColumn("cell", explode(probe(col("qe"))))
+      .withColumn("cell", explode(ivfProbeUdf(centers, nProbe)(col("qe"))))
     val w = Window.partitionBy("qid").orderBy(col("c").desc, col("nid"))
     queries.join(
         inverted.select(col("vec_id").as("nid"), col("cell"), col("e"), col("nrm")),
@@ -988,10 +991,9 @@ object VectorOps {
       base.orderBy("vec_id").limit(4096).select("e").collect()
         .map(_.getSeq[Double](0).toArray))
     val centers = lloyd(sample, k, iters = 10)
-    val assignU = udf((e: Seq[Double]) => nearestCells(centers, e.toArray, 1).head)
     def encode(part: DataFrame, name: String): DataFrame =
       shared(s, s"ivf_append_$name:$d:${dataFp(d)}:$k")(
-        withNorm(part).withColumn("cell", assignU(col("e")))
+        withNorm(part).withColumn("cell", ivfAssignUdf(centers)(col("e")))
           .select(col("vec_id"), col("cell"), col("e"), col("nrm")))
     val inverted = encode(base, "base").unionByName(encode(delta, "delta"))
     ivfQueryTopK(inverted, centers, nProbe, topK)
@@ -1208,20 +1210,18 @@ object VectorOps {
       k: Int, nProbe: Int, topK: Int): DataFrame = {
     val sample = indexSample(embOf(s, d), d)
     val centers = lloyd(sample, k, iters = 10)
-    val assignU = udf((e: Seq[Double]) => nearestCells(centers, e.toArray, 1).head)
     val embL = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("label"))
     // label-carrying inverted file: its own durable artifact (same cells as
     // the unfiltered index, plus the filterable attribute per entry)
     val inverted = shared(s, s"ivf_inverted_flt:$d:${dataFp(d)}:$k")(
-      withNorm(embL).withColumn("cell", assignU(col("e")))
+      withNorm(embL).withColumn("cell", ivfAssignUdf(centers)(col("e")))
         .select(col("vec_id"), col("label"), col("cell"), col("e"), col("nrm")))
-    val probe = udf((qe: Seq[Double]) => nearestCells(centers, qe.toArray, nProbe))
     val queries = inverted.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("e").as("qe"),
         col("nrm").as("qn"), col("label").as("ql"))
-      .withColumn("qcell", explode(probe(col("qe"))))
+      .withColumn("qcell", explode(ivfProbeUdf(centers, nProbe)(col("qe"))))
     val corpus = inverted.select(col("vec_id").as("nid"), col("label").as("nl"),
       col("cell").as("ncell"), col("e"), col("nrm"))
     val w = Window.partitionBy("qid").orderBy(col("c").desc, col("nid"))
@@ -1738,7 +1738,7 @@ object VectorOps {
     * fixture's 16 clusters put ~6k base vectors per cluster at cosine
     * 0.6-0.75 (p_bit ~0.71), so 8-bit buckets collide cluster-mates at
     * ~0.07/table — ~1.5e9 raw candidate pairs, the named cause of the
-    * ">35 min base prep" r14 staged out (ProbeEmbedPhases measures it).
+    * ">35 min base prep" r14 staged out (round 15 counted 1.65e9).
     * 16 bits cuts the cluster-mate collision rate to p^16 ~ 0.004 (~15x
     * fewer candidates) while keeping >=0.9-cosine TRUE pairs effectively
     * exhaustive: a 0.9-cos pair has p_bit = 1 - acos(0.9)/pi ~ 0.857,
@@ -1787,35 +1787,6 @@ object VectorOps {
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
       .distinct()
     cosineVerify(emb, cand, threshold).orderBy("id_a", "id_b")
-  }
-
-  /** Named sub-plans of [[embedCosineDedup]]'s rebuild dataflow for the
-    * phase-level timing probe (graft.tools.ProbeEmbedPhases) — the r14
-    * adjudication tool for "why does the 400k-fixture embed rebuild's
-    * base prep exceed 35 minutes at 120k vectors?". Downstream phases
-    * build on lazily-checkpointed predecessors so each timed
-    * materialization isolates ITS OWN work (the ProbePhases discipline).
-    * `stat_pair_mass` is the closed-form candidate count
-    * (sum over buckets of C(sz,2), per table, pre-distinct) — the number
-    * that says whether the bucket join exploded without paying for it. */
-  private[graft] def embedDedupPhases(s: SparkSession, emb: DataFrame,
-      threshold: Double, kBits: Int = 8): Seq[(String, () => DataFrame)] = {
-    lazy val sigs = lshSignatures(s, emb, kBits = kBits, nTables = 24,
-      seed = 7L).localCheckpoint(false)
-    lazy val cand = sigs.as("x").join(sigs.as("y"), Seq("tbl", "bucket"))
-      .filter(col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-    lazy val candD = cand.distinct().localCheckpoint(false)
-    Seq(
-      "signatures" -> (() => sigs),
-      "stat_pair_mass" -> (() => sigs.groupBy("tbl", "bucket")
-        .agg(count(lit(1)).as("n"))
-        .agg(sum(col("n") * (col("n") - 1) / 2).cast("long")
-          .as("candidate_pairs_pre_distinct"))),
-      "bucket_join_raw" -> (() => cand),
-      "candidate_distinct" -> (() => candD),
-      "cosine_verify" -> (() => cosineVerify(emb, candD, threshold)),
-    )
   }
 
   /** Exact cosine >= threshold verification over candidate pairs — shared

@@ -1,31 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Formatted-plan dump for the optimization-round evidence files:
   * writes `<outDir>/<name>_<tag>.txt` with the `.explain("formatted")`
   * output of each named registry entry (the judge checks plan claims
   * against these files — graft.tools.ExplainFmt <sfDir> <outDir> <tag>
-  * <name,name,...>). Session config mirrors Bench so the dumped plan is
-  * the plan the bench actually executes. */
+  * <name,name,...>). The session is Bench's, so the dumped plan is the
+  * plan the bench actually executes. */
 object ExplainFmt {
   def main(a: Array[String]): Unit = {
     val sfDir = a(0)
     val outDir = a(1)
     val tag = a(2)
     val names = a(3).split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.GraftSession()
     new java.io.File(outDir).mkdirs()
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(s, sfDir)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Run a registered entry against any dataset dir and PRINT its rows —
   * the fixture-certificate runner (TimeEntry times, this one shows). Used
   * for gate rows whose evidence lives on the Zipf fixtures, where the
@@ -15,19 +13,7 @@ object ShowEntry {
     val d = args(0)
     val names = args(1).split(',').toSeq
     val maxRows = if (args.length > 2) args(2).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     for (n <- names) {
       val t0 = System.nanoTime()
       val rows = graft.SparkEntry.queries(n)(spark, d).limit(maxRows).collect()

@@ -1,7 +1,7 @@
 package graft.tools
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage wall/CPU breakdown for one registered entry — the local
   * substitute for the Spark UI's stage table (the bench runs with the UI
@@ -13,25 +13,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    // ad-hoc conf experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).map(_.split('=')).foreach {
-        case Array(k, v) => builder.config(k, v)
-        case _           => ()
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
@@ -57,14 +39,7 @@ object StageProfile {
         val sec = (System.nanoTime() - t0) / 1e9
         // drain the async listener bus BEFORE snapshotting: a fixed sleep
         // raced late stage-completed events into the next run's bucket
-        // (ADVICE r16); the public SQL-execution listener-bus flush isn't
-        // exposed, so call the private waitUntilEmpty reflectively and
-        // keep the sleep as fallback where the signature drifts
-        try {
-          val busField = spark.sparkContext.getClass.getMethod("listenerBus")
-          val bus = busField.invoke(spark.sparkContext)
-          bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        } catch { case _: Throwable => Thread.sleep(500) }
+        ListenerBusDrain.drain(spark.sparkContext)
         println(s"===== $n run$run total ${f"$sec%.2f"} s =====")
         stages.forEach(l => println(l))
       }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-entry, one-JVM, one-measurement timing probe — the harness behind
   * the append-vs-rebuild ratio table (ROUNDLOG round 12).
   *
@@ -28,19 +26,7 @@ object TimeEntry {
   def main(args: Array[String]): Unit = {
     val d = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     // session warm-up (codegen, scheduler) so the measurement doesn't
     // absorb one-time JVM startup — same discipline as Bench
     spark.range(1000000).selectExpr("sum(id)").write

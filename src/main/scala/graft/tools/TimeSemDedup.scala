@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-measurement probe for SemDeDup's k-scaling — companion evidence to
@@ -24,16 +23,7 @@ object TimeSemDedup {
   def main(args: Array[String]): Unit = {
     val Array(d, which, kStr) = args.take(3)
     val k = kStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     spark.range(1000000).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
     graft.functions.GraftFunctions.register(spark)

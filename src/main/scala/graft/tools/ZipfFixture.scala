@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic REALISTIC-VOCABULARY supplemental bench fixture.
   *
   * The driver's synthetic documents table draws from a 31-word vocabulary,
@@ -165,11 +163,7 @@ object ZipfFixture {
     val deltaPct = args.drop(1).headOption.map(_.toInt).getOrElse(20)
     val nDocs = args.drop(2).headOption.map(_.toInt).getOrElse(NDocs)
     val nVecs = args.drop(3).headOption.map(_.toInt).getOrElse(NVecs)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     import spark.implicits._
 
     val cdf = zipfCdf(Vocab, 1.07)

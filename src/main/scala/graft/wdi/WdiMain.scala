@@ -1,6 +1,5 @@
 package graft.wdi
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** CLI: run all four detrend pipelines and write the 28 output CSVs with
@@ -13,16 +12,7 @@ object WdiMain {
   def main(args: Array[String]): Unit = {
     val inDir = if (args.length > 0) args(0) else "/root/reference"
     val outDir = if (args.length > 1) args(1) else "wdi_out"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .appName("wdi-pipelines")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     WdiPipelines.variants.foreach { v =>
       WdiPipelines.outputs(spark, inDir, v).foreach { case (stem, df) =>
         val ordered =

@@ -347,16 +347,7 @@ object ComposeCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val d = args(0)
     val names = if (args.length > 1) args.drop(1).toSeq else checks.keys.toSeq.sorted
     names.foreach { n => checks(n)(spark, d) }

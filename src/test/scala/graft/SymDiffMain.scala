@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-tooling main (test tree, not shipped in the library jar): exact
   * sym-diff between two registered entries at any SF — the documented way
   * to prove an append path ≡ its full rebuild at sf0.1, where the
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SymDiff {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val d = args(0)
     val a = SparkEntry.queries(args(1))(spark, d)
     val b = SparkEntry.queries(args(2))(spark, d)
