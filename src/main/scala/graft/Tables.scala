@@ -49,18 +49,18 @@ object Tables {
         s"events.ts: unhandled physical encoding $other — extend Tables.normalizeTsMicros")
   }
 
-  /** One bounded min/max probe per (process, path): the int64 branch of
-    * [[normalizeTsMicros]] assumes NANOS, and a fourth plausible encoding —
-    * int64 MICROS — would pass the dtype branch and silently shrink every
-    * timestamp 1000x. Epoch-nanos for any post-1973 / pre-2096 instant lies
-    * in [1e17, 4e18); epoch-MICROS data (~1.7e15) falls three decades below
-    * the window and epoch-millis further still, so either mis-encoding fails
-    * loudly here instead of corrupting every event-time operator. Cached per
-    * path: one tiny agg job per process, not one per query construction. */
-  private val int64TsChecked =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  private def checkInt64Nanos(df: DataFrame, path: String): Unit =
-    int64TsChecked.getOrElseUpdate(path, {
+  /** One bounded min/max probe per (session, file content): the int64
+    * branch of [[normalizeTsMicros]] assumes NANOS, and a fourth plausible
+    * encoding — int64 MICROS — would pass the dtype branch and silently
+    * shrink every timestamp 1000x. Epoch-nanos for any post-1973 / pre-2096
+    * instant lies in [1e17, 4e18); epoch-MICROS data (~1.7e15) falls three
+    * decades below the window and epoch-millis further still, so either
+    * mis-encoding fails loudly here instead of corrupting every event-time
+    * operator. Memoized with the file as declared input: one tiny agg job
+    * per session, not one per query construction, and a file re-encoded in
+    * place is checked again. */
+  private def checkInt64Nanos(s: SparkSession, df: DataFrame, path: String): Unit =
+    Memo.value(s, "events_ts_nanos", Seq(path)) {
       val r = df.agg(min(col("ts")), max(col("ts"))).head()
       if (!r.isNullAt(0)) {
         val (lo, hi) = (r.getLong(0), r.getLong(1))
@@ -69,13 +69,12 @@ object Tables {
             "epoch-NANOS (expected [1e17, 4e18) ~ years 1973-2096). A micros/" +
             "millis int64 encoding needs its own Tables.normalizeTsMicros branch.")
       }
-      true
-    })
+    }
 
   def events(s: SparkSession, d: String): DataFrame = {
     val df = table(s, d, "events")
     df.schema("ts").dataType match {
-      case LongType => checkInt64Nanos(df, s"$d/events.parquet")
+      case LongType => checkInt64Nanos(s, df, s"$d/events.parquet")
       case TimestampNTZType =>
         require(s.conf.get("spark.sql.session.timeZone", "") == "UTC",
           "events.ts is TIMESTAMP_NTZ: set spark.sql.session.timeZone=UTC at session " +

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Training-data-pipeline text operators over the `documents` table.
   *
@@ -41,20 +41,12 @@ object LlmText {
     * identical training loop as chained CTEs. */
   private val BpeSep = "\u001f" // absent from the corpus alphabet
 
-  /** Trained merge table per (dataset path, content fingerprint, rounds):
-    * training runs once per process and is shared by the train-table entry
-    * and the tokenizer that applies the merges. The fingerprint in the key
-    * (same convention as VectorOps.shared's artifact cache) means a dataset
-    * regenerated at the SAME path mid-process retrains instead of serving
-    * stale merges; the map itself evicts on session end. */
-  private val bpeMergeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(Int, String, String, Long)]]
-  SessionCaches.register("llmtext.bpeMergeCache")(() => bpeMergeCache.clear())
-
+  /** Trained merge table per (dataset, rounds): training runs once per
+    * session and is shared by the train-table entry and the tokenizer that
+    * applies the merges. */
   private def bpeMerges(s: SparkSession, d: String,
-      rounds: Int): Seq[(Int, String, String, Long)] = {
-    SessionCaches.onSessionEnd(s)
-    bpeMergeCache.getOrElseUpdate((d, VectorOps.docsFp(d), rounds), {
+      rounds: Int): Seq[(Int, String, String, Long)] =
+    Memo.value(s, "bpe_merges", Seq(VectorOps.docsIn(d)), rounds) {
     val SEP = BpeSep
     val words = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("w"))
@@ -85,7 +77,6 @@ object LlmText {
       }
       merges.result()
     } finally { words.unpersist(false); () }
-  })
   }
 
   private[queries] def bpeTrainMerges(s: SparkSession, d: String,
@@ -242,19 +233,11 @@ object LlmText {
     lit(w(0)) * col("x0") + lit(w(1)) * col("x1") +
       lit(w(2)) * col("x2") + lit(w(3)) * col("x3") + lit(w(4)) * col("x4")
 
-  /** Fit results per (dataset path, content fingerprint, iters, lr):
-    * training runs once per process and is shared by the train-curve entry
-    * and the scorer; fingerprinted + session-evicted like bpeMergeCache. */
-  private val lrFitCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Double), Seq[(Int, Double, Double, Double, Double, Double, Long, Long)]]
-  SessionCaches.register("llmtext.lrFitCache")(() => lrFitCache.clear())
-  /** Test seam: live entries across the two trained-artifact memo maps. */
-  private[queries] def trainedCacheSize: Int = bpeMergeCache.size + lrFitCache.size
-
+  /** Fit results per (dataset, iters, lr): training runs once per session
+    * and is shared by the train-curve entry and the scorer. */
   private def lrFit(s: SparkSession, d: String, iters: Int,
-      lr: Double): Seq[(Int, Double, Double, Double, Double, Double, Long, Long)] = {
-    SessionCaches.onSessionEnd(s)
-    lrFitCache.getOrElseUpdate((d, VectorOps.docsFp(d), iters, lr), {
+      lr: Double): Seq[(Int, Double, Double, Double, Double, Double, Long, Long)] =
+    Memo.value(s, "lr_fit", Seq(VectorOps.docsIn(d)), iters, lr) {
       val Q = 4194304.0 // 2^22
       val feats = lrFeatures(s, d, withId = false).persist()
       try {
@@ -278,8 +261,7 @@ object LlmText {
         }
         out.result()
       } finally { feats.unpersist(false); () }
-    })
-  }
+    }
 
   private[queries] def lrTrain(s: SparkSession, d: String, iters: Int,
       lr: Double): DataFrame = {
@@ -872,7 +854,7 @@ object LlmText {
     * shuffle — emitting only delta + changed docs is the production
     * variant, full output keeps the hash-equality contract testable). */
   private[queries] def substringDedupAppend(s: SparkSession, docs: DataFrame,
-      w: Int, storeKey: Option[String]): DataFrame = {
+      w: Int, storeKey: Option[StoreKey]): DataFrame = {
     val (baseDups, newDups) = substringAppendDups(s, docs, w, storeKey)
     assembleSubstringOutput(tokenized(docs), baseDups.unionByName(newDups), w)
   }
@@ -883,9 +865,9 @@ object LlmText {
     * argument — stored ∪ new is a disjoint, exhaustive replay of the full
     * rebuild's rn > 1 set. */
   private def substringAppendDups(s: SparkSession, docs: DataFrame,
-      w: Int, storeKey: Option[String]): (DataFrame, DataFrame) = {
+      w: Int, storeKey: Option[StoreKey]): (DataFrame, DataFrame) = {
     def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(k) => VectorOps.shared(s, s"$name:$k")(build)
+      case Some(k) => VectorOps.shared(s, s"$name:${k.key}", k.inputs)(build)
       case None    => build
     }
     val isDelta = col("doc_id") % 5 === 4
@@ -928,7 +910,7 @@ object LlmText {
     * affected set (delta ∪ doc_ids of full-dups \ base-only-dups) — exact,
     * because new dups ≡ full \ base (the append entry's proven identity). */
   private[queries] def substringDedupAppendDelta(s: SparkSession,
-      docs: DataFrame, w: Int, storeKey: Option[String]): DataFrame = {
+      docs: DataFrame, w: Int, storeKey: Option[StoreKey]): DataFrame = {
     val (baseDups, newDups0) = substringAppendDups(s, docs, w, storeKey)
     // feeds the affected-doc set AND the dup union: cut the lineage so the
     // delta merge's window runs once (the canonical append's pattern)
@@ -1046,10 +1028,10 @@ object LlmText {
     * semantics that must survive. */
   private[queries] def substringDedupCanonicalAppend(s: SparkSession,
       docs: DataFrame, l: Int, cap: Int,
-      storeKey: Option[String], deltaOnly: Boolean = false,
+      storeKey: Option[StoreKey], deltaOnly: Boolean = false,
       nBkt: Int = 64): DataFrame = {
     def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(k) => VectorOps.shared(s, s"$name:$k")(build)
+      case Some(k) => VectorOps.shared(s, s"$name:${k.key}", k.inputs)(build)
       case None    => build
     }
     // The occurrence index goes through the PARTITIONED durable layer and
@@ -1059,7 +1041,7 @@ object LlmText {
     // scan of the whole stored index per ingest).
     def keepOcc(name: String)(build: => DataFrame): DataFrame = storeKey match {
       case Some(k) =>
-        VectorOps.durablePartitioned(s, s"$name:$k", Seq("span_bkt"))(build)
+        VectorOps.durablePartitioned(s, s"$name:${k.key}", Seq("span_bkt"))(build)
       case None => build
     }
     val isDelta = col("doc_id") % 5 === 4
@@ -1151,7 +1133,7 @@ object LlmText {
     * restricted in SQL to the same affected set. */
   private[queries] def substringDedupCanonicalAppendDelta(s: SparkSession,
       docs: DataFrame, l: Int, cap: Int,
-      storeKey: Option[String], nBkt: Int = 64): DataFrame =
+      storeKey: Option[StoreKey], nBkt: Int = 64): DataFrame =
     substringDedupCanonicalAppend(s, docs, l, cap, storeKey,
       deltaOnly = true, nBkt = nBkt)
 
@@ -1403,14 +1385,14 @@ object LlmText {
     // ---- incremental substring dedup: delta spans vs the stored index ----
     "dedup_substring_append" -> ((s, d) =>
       substringDedupAppend(s, Tables.documents(s, d), w = 10,
-        storeKey = Some(s"$d:${VectorOps.docsFp(d)}:w10"))),
+        storeKey = Some(VectorOps.docsKey(d, ":w10")))),
 
     // ---- the append's production OUTPUT shape: delta + changed docs only --
     // (same base store as dedup_substring_append — the entries share the
     // span index and base-dup artifacts; only the output clause differs)
     "dedup_substring_append_delta" -> ((s, d) =>
       substringDedupAppendDelta(s, Tables.documents(s, d), w = 10,
-        storeKey = Some(s"$d:${VectorOps.docsFp(d)}:w10"))),
+        storeKey = Some(VectorOps.docsKey(d, ":w10")))),
 
     // ---- canonical variable-length excision: the Lee et al. end product ----
     "dedup_substring_canonical" -> ((s, d) =>
@@ -1419,13 +1401,13 @@ object LlmText {
     // ---- incremental canonical: delta groups only, rest from the store ----
     "dedup_substring_canonical_append" -> ((s, d) =>
       substringDedupCanonicalAppend(s, Tables.documents(s, d), l = 10,
-        cap = 20, storeKey = Some(s"$d:${VectorOps.docsFp(d)}:l10c20"),
+        cap = 20, storeKey = Some(VectorOps.docsKey(d, ":l10c20")),
         nBkt = occBucketCount(d))),
 
     // ---- the canonical append's production OUTPUT: affected docs only ----
     "dedup_substring_canonical_append_delta" -> ((s, d) =>
       substringDedupCanonicalAppendDelta(s, Tables.documents(s, d), l = 10,
-        cap = 20, storeKey = Some(s"$d:${VectorOps.docsFp(d)}:l10c20"),
+        cap = 20, storeKey = Some(VectorOps.docsKey(d, ":l10c20")),
         nBkt = occBucketCount(d))),
 
     // ---- suffix-sort + LCP: variable-length repeat profile ----
@@ -2269,7 +2251,7 @@ object LlmText {
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
       val tfBase = VectorOps.shared(s,
-        s"bm25_postings_base:$d:${VectorOps.docsFp(d)}")(
+        s"bm25_postings_base:$d:${VectorOps.docsFp(d)}", Seq(VectorOps.docsIn(d)))(
         postings(docs.filter(!isDelta)))
       val tf = tfBase.unionByName(postings(docs.filter(isDelta)))
       bm25RankedOf(s, d, tf, topN = 3, wgtKey = None, tfTag = "append")
@@ -2304,7 +2286,8 @@ object LlmText {
       // the store, never re-tokenized (store counters prove it in the
       // bench); the measured output is the DELTA segment alone — exactly
       // the file an ingest appends to the postings artifact
-      VectorOps.shared(s, s"bm25_postings_base:$d:${VectorOps.docsFp(d)}")(
+      VectorOps.shared(s, s"bm25_postings_base:$d:${VectorOps.docsFp(d)}",
+        Seq(VectorOps.docsIn(d)))(
         postings(docs.filter(!isDelta)))
       postings(docs.filter(isDelta)).orderBy("doc_id", "w")
     }),
@@ -2317,15 +2300,15 @@ object LlmText {
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
       // Store-counter note (r15 Watch item): in a bench SESSION this
       // share reads cr=0, not because the store is bypassed but because
-      // `shared`'s session memo (artifactCache) absorbs the lookup —
+      // `shared`'s session memo (graft.Memo) absorbs the lookup —
       // bm25_maintain_postings_delta runs earlier in the same session and
-      // warms the (session, key) entry, so durableAt (where the
+      // warms the entry, so durableAt (where the
       // BUILD/REUSE counters live) is never re-entered. The cross-JVM
       // REUSE the entry's contract cares about registers where it is
       // measured: the append bench's fresh-JVM TimeEntry runs, whose
       // store_events show cr >= 1 on this entry (APPEND_r16).
       val tfBase = VectorOps.shared(s,
-        s"bm25_postings_base:$d:${VectorOps.docsFp(d)}")(
+        s"bm25_postings_base:$d:${VectorOps.docsFp(d)}", Seq(VectorOps.docsIn(d)))(
         postings(docs.filter(!isDelta)))
       val tf = tfBase.unionByName(postings(docs.filter(isDelta)))
       bm25WeightsOf(s, tf, wgtKey = None)
@@ -2367,11 +2350,12 @@ object LlmText {
     // corpus re-tokenize. Every one-shot consumer (this ranking, both RRF
     // fusions, the front door) REUSEs the postings the way the append
     // entry already reuses its base slice.
-    val tf = VectorOps.shared(s, s"bm25_postings:$d:${VectorOps.docsFp(d)}")(
+    val tf = VectorOps.shared(s, s"bm25_postings:$d:${VectorOps.docsFp(d)}",
+      Seq(VectorOps.docsIn(d)))(
       docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf")))
     bm25RankedOf(s, d, tf, topN,
-      wgtKey = Some(s"bm25_weights:$d:${VectorOps.docsFp(d)}"), qmod = qmod)
+      wgtKey = Some(bm25WeightsKey(d)), qmod = qmod)
   }
 
   /** BM25 ranking over an arbitrary raw-postings frame (doc_id, w, tf) —
@@ -2425,18 +2409,11 @@ object LlmText {
     * the dataset alone would silently reuse a statistic computed from a
     * different frame for the same dataset (today's two callers pass
     * value-identical full-corpus postings; the key no longer leans on
-    * that). Evicted with the session like every other path-keyed memo. */
-  private val vocabSizeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  graft.queries.SessionCaches.register("llm.bm25VocabSize")(
-    () => vocabSizeCache.clear())
+    * that). */
   private def vocabSize(s: SparkSession, d: String, tf: DataFrame,
       tfTag: String): Long =
-    vocabSizeCache.getOrElseUpdate(
-      (s, d + ":" + VectorOps.docsFp(d) + ":" + tfTag), {
-      graft.queries.SessionCaches.onSessionEnd(s)
-      tf.select(countDistinct(col("w"))).head().getLong(0)
-    })
+    Memo.value(s, "bm25_vocab_size", Seq(VectorOps.docsIn(d)), d, tfTag)(
+      tf.select(countDistinct(col("w"))).head().getLong(0))
 
   /** Below this vocabulary size the ranking takes the single-join brute
     * plan: every query matches essentially every document, θ cannot
@@ -2452,14 +2429,14 @@ object LlmText {
   private val MaxScoreMinVocab = 1024L
 
   private[queries] def bm25RankedOf(s: SparkSession, d: String, tf: DataFrame,
-      topN: Int, wgtKey: Option[String],
+      topN: Int, wgtKey: Option[StoreKey],
       tfTag: String = "full", qmod: Long = 50): DataFrame =
     if (vocabSize(s, d, tf, tfTag) < MaxScoreMinVocab)
       bm25RankedBrute(s, d, tf, topN, wgtKey, qmod)
     else bm25MaxScore(s, d, tf, topN, wgtKey, tfTag, qmod)
 
   private[queries] def bm25MaxScore(s: SparkSession, d: String, tf: DataFrame,
-      topN: Int, wgtKey: Option[String],
+      topN: Int, wgtKey: Option[StoreKey],
       tfTag: String = "full", qmod: Long = 50): DataFrame = {
     val docs = Tables.documents(s, d)
     // MaxScore consumes the weight index from FIVE subplans (term map, ub,
@@ -2473,9 +2450,8 @@ object LlmText {
     // frame.
     val wgt = wgtKey match {
       case Some(_) => bm25WeightsOf(s, tf, wgtKey)
-      case None => VectorOps.sharedLocal(s,
-        s"bm25_weights_session:$d:${VectorOps.docsFp(d)}:$tfTag")(
-        bm25WeightsOf(s, tf, wgtKey = None))
+      case None => VectorOps.sharedLocal(s, s"bm25_weights_session:$d:$tfTag",
+        Seq(VectorOps.docsIn(d)))(bm25WeightsOf(s, tf, wgtKey = None))
     }
     // The impact metadata — per-term score upper bounds, the per-term
     // topN impact heads, and the per-doc (term -> weight) maps — is a
@@ -2486,9 +2462,9 @@ object LlmText {
     // fresh JVMs; on the store-less append path it stays session-local
     // by the same contract as the weights above.
     def keepMeta(suffix: String)(b: => DataFrame): DataFrame = wgtKey match {
-      case Some(k) => VectorOps.shared(s, s"$k:$suffix")(b)
-      case None => VectorOps.sharedLocal(s,
-        s"bm25_session_$suffix:$d:${VectorOps.docsFp(d)}:$tfTag")(b)
+      case Some(k) => VectorOps.shared(s, s"${k.key}:$suffix", k.inputs)(b)
+      case None => VectorOps.sharedLocal(s, s"bm25_session_$suffix:$d:$tfTag",
+        Seq(VectorOps.docsIn(d)))(b)
     }
     val q = bm25QueryTerms(docs, qmod)
     // Candidate scoring is ONE row per (query, candidate-doc): each doc
@@ -2568,7 +2544,7 @@ object LlmText {
     * exchange (weights, not matches) with AQE sizing the partition
     * count. */
   private[queries] def bm25RankedBrute(s: SparkSession, d: String,
-      tf: DataFrame, topN: Int, wgtKey: Option[String] = None,
+      tf: DataFrame, topN: Int, wgtKey: Option[StoreKey] = None,
       qmod: Long = 50): DataFrame = {
     // EXPLICIT partition count: the weight rows are tiny but each fans out
     // to every query containing its term (~40x at sf0.1), so bytes wildly
@@ -2628,7 +2604,7 @@ object LlmText {
     * from tf, so the tokenize explode is shuffled ONCE and every
     * downstream aggregate rides the reused exchange. */
   private def bm25WeightsOf(s: SparkSession, tf: DataFrame,
-      wgtKey: Option[String]): DataFrame = {
+      wgtKey: Option[StoreKey]): DataFrame = {
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val dfq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_tok"))
@@ -2646,10 +2622,14 @@ object LlmText {
                 (col("n_tok").cast("double") / col("n_docs").cast("double"))))))
         .select(col("doc_id"), col("w"), col("wbm"))
     wgtKey match {
-      case Some(k) => VectorOps.shared(s, k)(weigh)
+      case Some(k) => VectorOps.shared(s, k.key, k.inputs)(weigh)
       case None    => weigh
     }
   }
+
+  /** Key of the durable weight index over the standard postings of `d`. */
+  private def bm25WeightsKey(d: String): StoreKey =
+    StoreKey(s"bm25_weights:$d:${VectorOps.docsFp(d)}", Seq(VectorOps.docsIn(d)))
 
   /** The durable weight index for the STANDARD postings of `d` — the
     * serving handle the online drain reads (same artifact key as the
@@ -2657,12 +2637,13 @@ object LlmText {
   private[graft] def bm25Weights(s: SparkSession, d: String): DataFrame = {
     // same durable postings artifact as bm25Ranked: serving reads the
     // store, never re-tokenizes
-    val tf = VectorOps.shared(s, s"bm25_postings:$d:${VectorOps.docsFp(d)}")(
+    val tf = VectorOps.shared(s, s"bm25_postings:$d:${VectorOps.docsFp(d)}",
+      Seq(VectorOps.docsIn(d)))(
       Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf")))
     bm25WeightsOf(s, tf,
-      wgtKey = Some(s"bm25_weights:$d:${VectorOps.docsFp(d)}"))
+      wgtKey = Some(bm25WeightsKey(d)))
   }
 
   /** The standing query-term table (qid, w, qi): each query doc's <= 8

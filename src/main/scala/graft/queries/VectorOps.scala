@@ -3,7 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Memo, Tables}
+
+/** A durable-key prefix shared by one family's artifacts, and the input files
+  * those artifacts are built from (their memo inputs). */
+private[graft] final case class StoreKey(key: String, inputs: Seq[String])
 
 /** Similarity search + near-dedup over embeddings and documents.
   *
@@ -26,52 +30,16 @@ object VectorOps {
     * left-to-right summation order as the DuckDB oracle's list_sum. */
   private def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
-  /** Bounded index-build sample (4096 vectors, ~2 MB), shared by the IVF and
-    * PQ codebook trainings: one driver-side sample job per dataset instead of
-    * one per registered query (topk and its recall gate used to re-run it). */
-  private val sampleCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  SessionCaches.register("vectorops.sampleCache")(() => sampleCache.clear())
-  private def indexSample(emb: DataFrame, d: String): Array[Array[Double]] = {
-    SessionCaches.onSessionEnd(emb.sparkSession)
-    sampleCache.getOrElseUpdate(d,
-      emb.orderBy("vec_id").limit(4096).select("e").collect()
-        .map(_.getSeq[Double](0).toArray))
-  }
-
-  /** Process-level share of an ANN index artifact (the encoded corpus: PQ
-    * codes, the IVF inverted file, the brute-force baseline a gate compares
-    * against). A topk query and its recall gate used to each rebuild these —
-    * at scale that re-encodes the whole corpus per consumer. Persisted once
-    * per (session, dataset, params) instead; the per-query SCORING scans stay
-    * un-cached so bench times keep measuring real query execution. Keyed by
-    * session so a stopped test session can never leak into a fresh one, and
-    * EVICTED on session end (unpersist + drop) so a long-lived multi-session
-    * JVM — a full sbt test run, a multi-SF Verify sweep — doesn't accumulate
-    * persisted inverted files (which retain full raw vectors) forever. */
-  private val artifactCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val evictionHooked =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Boolean]
-  private def hookEviction(s: SparkSession): Unit =
-    evictionHooked.getOrElseUpdate(s, {
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          artifactCache.keySet.filter(_._1 eq s).foreach { k =>
-            artifactCache.remove(k).foreach { df =>
-              try df.unpersist(blocking = false)
-              catch { case _: Throwable => () } // context already torn down
-            }
-          }
-          evictionHooked.remove(s)
-        }
-      })
-      // the path-keyed memo maps (index sample, dataset fingerprints, BPE
-      // merges, LR fits) evict on the same application-end signal
-      SessionCaches.onSessionEnd(s)
-      true
-    })
+  /** Bounded index-build sample (4096 vectors, ~2 MB) of `emb`, shared by
+    * the IVF and PQ codebook trainings: one driver-side sample job per
+    * dataset instead of one per registered query (topk and its recall gate
+    * used to re-run it). `tag` names which frame of the dataset `emb` is. */
+  private def indexSample(s: SparkSession, emb: DataFrame, tag: String,
+      inputs: Seq[String]): Array[Array[Double]] =
+    Memo.value(s, "index_sample", inputs, memoName(tag, inputs))(
+      sampleOf(Memo.declared(inputs)(emb)))
+  private def sampleOf(emb: DataFrame): Array[Array[Double]] =
+    emb.orderBy("vec_id").limit(4096).select("e").collect().map(_.getSeq[Double](0).toArray)
 
   /** Durable layer under the in-memory share: at 100 TB an ANN index is a
     * TABLE, not a session cache — codes / inverted file / baseline are
@@ -82,38 +50,22 @@ object VectorOps {
     * SPARK_GRAFT_NO_INDEX_STORE=1 (tests that mutate build logic). */
   private[queries] val IndexFormatVersion = 1
 
-  /** Fingerprint of the source embeddings parquet (names + sizes + mtimes):
-    * folded into every index key so a regenerated dataset at the SAME path
-    * (the driver rewrites testdata per round) can never hit a stale durable
-    * index. Cheap — a directory listing, cached per path per process. */
-  private val fpCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  SessionCaches.register("vectorops.fpCache")(() => fpCache.clear())
-  private[graft] def dataFp(d: String): String =
-    fpCache.getOrElseUpdate(d, fpOf(s"$d/embeddings.parquet"))
-  /** Same fingerprint over documents.parquet — keys the text-derived
-    * trained artifacts (BPE merges, LR fits) the way dataFp keys the
-    * vector-derived ones. */
-  private[queries] def docsFp(d: String): String =
-    fpCache.getOrElseUpdate(s"$d#docs", fpOf(s"$d/documents.parquet"))
-  /** Test seam: live entries across the two path-keyed memo maps. */
-  private[queries] def pathCacheSize: Int = sampleCache.size + fpCache.size
-  private[graft] def fpOf(path: String): String = {
-    val root = new java.io.File(path)
-    // testdata ships single-file parquet; a real dataset is a directory
-    val files =
-      if (root.isFile) Array(root)
-      else Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile).sortBy(_.getName)
-    val sig = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|")
-    java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sig).toLong & 0xffffffffL)
-  }
-  private def indexStoreDir: Option[String] =
-    if (sys.env.get("SPARK_GRAFT_NO_INDEX_STORE").contains("1")) None
-    else Some(sys.props.get("graft.index.dir") // test override
-      .orElse(sys.env.get("SPARK_GRAFT_INDEX_DIR"))
-      .getOrElse("spark-warehouse/graft_ann_index"))
+  /** The source file of every embeddings-derived artifact, and its
+    * fingerprint as the durable keys embed it: a regenerated dataset at the
+    * SAME path (the driver rewrites testdata per round) can never hit a
+    * stale durable index. Recomputed per call — a directory listing. */
+  private[graft] def embIn(d: String): String = s"$d/embeddings.parquet"
+  private[graft] def dataFp(d: String): String = Memo.fp(embIn(d))
+  /** Same over documents.parquet — keys the text-derived artifacts. */
+  private[queries] def docsIn(d: String): String = s"$d/documents.parquet"
+  private[queries] def docsFp(d: String): String = Memo.fp(docsIn(d))
+  /** The `dir:fingerprint` prefix of `d`'s embeddings-derived durable keys,
+    * and of its text-derived ones (plus `suffix`). */
+  private[queries] def embKey(d: String): StoreKey =
+    StoreKey(s"$d:${dataFp(d)}", Seq(embIn(d)))
+  private[queries] def docsKey(d: String, suffix: String = ""): StoreKey =
+    StoreKey(s"$d:${docsFp(d)}$suffix", Seq(docsIn(d)))
+
   /** Per-key JVM-local build monitors, lazily striped by artifact path.
     * In-process builders of ONE key must serialize here because JVM file
     * locks are per-process — overlapping same-process acquisition of the
@@ -148,7 +100,7 @@ object VectorOps {
   private[graft] val storeReuseCount = new java.util.concurrent.atomic.AtomicLong
 
   private[queries] def durable(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    indexStoreDir match {
+    Memo.storeRoot match {
       case None => build
       case Some(root) => durableAt(s, root, key)(build)
     }
@@ -165,7 +117,7 @@ object VectorOps {
     * happen. Reads back with the partition columns (directory-encoded). */
   private[queries] def durablePartitioned(s: SparkSession, key: String,
       partCols: Seq[String])(build: => DataFrame): DataFrame =
-    indexStoreDir match {
+    Memo.storeRoot match {
       case None => build
       case Some(root) => durableAt(s, root, key, partCols)(build)
     }
@@ -244,15 +196,15 @@ object VectorOps {
     * names a dataset that is NOT live anymore — either the path is not in
     * `liveDirs` or its recorded fingerprint no longer matches the CURRENT
     * content fingerprint of any key-bearing file in that dataset (the same
-    * name|size|mtime fingerprint the keys embed, recomputed fresh — not
-    * from the session cache). Conservative by construction: artifacts
-    * without a manifest (written by older builds, or non-dataset test
-    * keys) are left untouched and reported, never deleted. Returns one
+    * name|size|mtime fingerprint the keys embed, recomputed fresh).
+    * Conservative by construction: artifacts without a manifest (written
+    * by older builds, or non-dataset test keys) are left untouched and
+    * reported, never deleted. Returns one
     * (artifact, action) row per store entry: kept | dropped | kept_no_meta.
     */
   private[graft] def vacuumStore(s: SparkSession,
       liveDirs: Seq[String]): Seq[(String, String)] =
-    indexStoreDir match {
+    Memo.storeRoot match {
       case None => Seq.empty
       case Some(root) => vacuumAt(root, liveDirs)
     }
@@ -276,14 +228,14 @@ object VectorOps {
         // fresh fingerprints of every child a key can embed (embeddings,
         // documents — plus the rest of the dir for future key shapes).
         // Children are files OR directories: Spark-written datasets are
-        // parquet DIRECTORIES (the production shape; fpOf handles both),
+        // parquet DIRECTORIES (the production shape; Memo.fp handles both),
         // and filtering to plain files left liveTags empty for exactly
         // that layout — every artifact keyed to a live Spark-written
         // dataset failed the fingerprint match and was deleted.
         val liveTags: Map[String, Set[String]] = liveDirs.map { d =>
           val children = Option(new java.io.File(d).listFiles())
             .getOrElse(Array.empty)
-          d -> children.map(f => fpOf(f.getPath)).toSet
+          d -> children.map(f => Memo.fp(f.getPath)).toSet
         }.toMap
         vacuumLock.synchronized {
           val tmpReport = tmps.toSeq.map { t =>
@@ -331,24 +283,38 @@ object VectorOps {
         }
     }
 
-  private[queries] def shared(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    artifactCache.getOrElseUpdate((s, key), {
-      hookEviction(s)
-      durable(s, key)(build).persist()
-    })
+  /** An ANN index artifact (the encoded corpus: PQ codes, the IVF inverted
+    * file, the brute-force baseline a gate compares against), read from the
+    * durable store — built there once per key across sessions — and
+    * persisted once per session, so a topk query and its recall gate share
+    * one encoding of the corpus. The per-query SCORING scans stay un-cached
+    * so bench times keep measuring real query execution. `inputs` are the
+    * files `build` reads; the build is checked against them before its
+    * store write. */
+  private[queries] def shared(s: SparkSession, key: String, inputs: Seq[String])(
+      build: => DataFrame): DataFrame =
+    Memo.frame(s, memoName(key, inputs), inputs)(
+      durable(s, key)(Memo.declared(inputs)(build)))
 
   /** Session-scoped persist WITHOUT the durable layer: for frames that are
     * recomputed per session by CONTRACT (the BM25 append entry's
     * re-weighted corpus statistics — a store write would hide exactly the
     * re-weight work the entry measures across fresh-JVM runs) but are
     * consumed by several subplans of one query family, where plain
-    * laziness would recompute the build once per exchange. Same cache and
-    * application-end eviction as [[shared]]. */
-  private[queries] def sharedLocal(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    artifactCache.getOrElseUpdate((s, key), {
-      hookEviction(s)
-      build.persist()
-    })
+    * laziness would recompute the build once per exchange. */
+  private[queries] def sharedLocal(s: SparkSession, key: String, inputs: Seq[String])(
+      build: => DataFrame): DataFrame =
+    Memo.frame(s, key, inputs)(build)
+
+  /** `key` with each ':'-component that is an input's current fingerprint
+    * masked: durable keys embed their inputs' fingerprints as whole
+    * components (the store outlives the session), but the memo tracks the
+    * fingerprint itself, so a regenerated input supersedes its entry
+    * instead of adding one. */
+  private def memoName(key: String, inputs: Seq[String]): String = {
+    val fps = inputs.map(Memo.fp).toSet
+    key.split(":", -1).map(c => if (fps(c)) "*" else c).mkString(":")
+  }
 
   /** Driver-green certificate for the store's GC verb — the fourth index
     * lifecycle verb made driver-visible (create = ann_index_store_gate,
@@ -599,6 +565,11 @@ object VectorOps {
       .orderBy("qid", "rnk")
   }
 
+  /** The exact top-1 baseline every ANN recall gate compares against, as a
+    * stored artifact shared by the gates. */
+  private def storedTop1(s: SparkSession, d: String): DataFrame =
+    shared(s, s"bf_top1:$d:${dataFp(d)}", Seq(embIn(d)))(bruteForceTopK(embOf(s, d), 1))
+
   /** RRF fusion of the cosine and BM25 top-20s, UNORDERED (see the
     * registry comment at `sim_rrf_topk`); the ordered entry and the swap
     * consumers wrap it. */
@@ -679,16 +650,16 @@ object VectorOps {
     // across references or entries. The (qid, nid) pair sets are
     // session-persisted under the sharedLocal convention, so the two
     // pipelines materialize once per session and every other reference is
-    // an in-memory scan. Keyed by the data fingerprint like every other
-    // session artifact; the persisted frames are thin top-3 pair sets (a
-    // 2-column PROJECTION of the fused ranking, deliberately not any
-    // registered entry's output — sim_rrf_topk / sim_rrf_ann_topk still
+    // an in-memory scan. Both fusions read documents AND embeddings, and
+    // both are declared inputs. The persisted frames are thin top-3 pair
+    // sets (a 2-column PROJECTION of the fused ranking, deliberately not
+    // any registered entry's output — sim_rrf_topk / sim_rrf_ann_topk still
     // compute their full ordered rankings from scratch). The sampled swap
     // certificate (qmod=500) keeps its own unshared path.
-    val fp = docsFp(d)
-    val ex = sharedLocal(s, s"swap_pairs_exact:$d:$fp")(
+    val ins = Seq(docsIn(d), embIn(d))
+    val ex = sharedLocal(s, s"swap_pairs_exact:$d", ins)(
       rrfFused(s, d).select(col("qid"), col("nid")))
-    val an = sharedLocal(s, s"swap_pairs_ann:$d:$fp")(
+    val an = sharedLocal(s, s"swap_pairs_ann:$d", ins)(
       rrfAnnFused(s, d).select(col("qid"), col("nid")))
     val common = ex.join(an, Seq("qid", "nid"))
       .groupBy("qid").agg(count(lit(1)).as("cnt"))
@@ -813,7 +784,7 @@ object VectorOps {
       d: String): DataFrame = {
     // The signature table is the LSH index artifact: computed once per
     // dataset, shared between topk and its recall gate.
-    val sigs = shared(s, s"lsh_sigs:$d:${dataFp(d)}")(
+    val sigs = shared(s, s"lsh_sigs:$d:${dataFp(d)}", Seq(embIn(d)))(
       lshSignatures(s, emb, kBits = 5, nTables = 24, seed = 42L))
     // Same query set as the brute-force baseline; LSH prunes the corpus
     // side to bucket collisions instead of scanning all n per query.
@@ -895,9 +866,9 @@ object VectorOps {
   private[graft] def ivfIndexHandle(s: SparkSession, d: String,
       k: Int): (DataFrame, Array[Array[Double]]) = {
     val emb = embOf(s, d)
-    val sample = indexSample(emb, d)
+    val sample = indexSample(s, emb, d, Seq(embIn(d)))
     val centers = lloyd(sample, k, iters = 10)
-    val inverted = shared(s, s"ivf_inverted:$d:${dataFp(d)}:$k")(
+    val inverted = shared(s, s"ivf_inverted:$d:${dataFp(d)}:$k", Seq(embIn(d)))(
       withNorm(emb).withColumn("cell", ivfAssignUdf(centers)(col("e")))
         .select(col("vec_id"), col("cell"), col("e"), col("nrm")))
     (inverted, centers)
@@ -935,7 +906,7 @@ object VectorOps {
   private[queries] def ivfNProbeSweep(s: SparkSession, d: String,
       k: Int, nProbes: Seq[Int], topK: Int): DataFrame = {
     val (inverted, centers) = ivfIndexHandle(s, d, k)
-    val top1 = shared(s, s"bf_top1:$d:${dataFp(d)}")(bruteForceTopK(embOf(s, d), 1))
+    val top1 = storedTop1(s, d)
       .filter(col("rnk") === 1).select(col("qid"), col("nid").as("top1"))
     nProbes.map { np =>
       val perQuery = top1
@@ -987,12 +958,10 @@ object VectorOps {
     val emb = embOf(s, d)
     val base = emb.filter(col("vec_id") % 5 =!= 4)
     val delta = emb.filter(col("vec_id") % 5 === 4)
-    val sample = sampleCache.getOrElseUpdate(s"$d#ivfbase",
-      base.orderBy("vec_id").limit(4096).select("e").collect()
-        .map(_.getSeq[Double](0).toArray))
+    val sample = indexSample(s, base, s"$d#ivfbase", Seq(embIn(d)))
     val centers = lloyd(sample, k, iters = 10)
     def encode(part: DataFrame, name: String): DataFrame =
-      shared(s, s"ivf_append_$name:$d:${dataFp(d)}:$k")(
+      shared(s, s"ivf_append_$name:$d:${dataFp(d)}:$k", Seq(embIn(d)))(
         withNorm(part).withColumn("cell", ivfAssignUdf(centers)(col("e")))
           .select(col("vec_id"), col("cell"), col("e"), col("nrm")))
     val inverted = encode(base, "base").unionByName(encode(delta, "delta"))
@@ -1023,7 +992,7 @@ object VectorOps {
     // maintenance verb on the existing store, not a parallel index
     val (inverted, centers) = ivfIndexHandle(s, d, k)
     val live = ivfLive(s, inverted, col("vec_id") % 7 === 3,
-      key = s"$d:${dataFp(d)}:$k", compactAt = 0.1)
+      key = StoreKey(s"$d:${dataFp(d)}:$k", Seq(embIn(d))), compactAt = 0.1)
     ivfQueryTopK(live, centers, nProbe, topK)
   }
 
@@ -1037,24 +1006,22 @@ object VectorOps {
     * memoized per full key alongside the artifacts, so repeat calls (a
     * median-of-3 bench, a topk + its gate) don't re-run the two ratio
     * count() jobs once the verdict is known. */
-  private val ivfRatioMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
-  SessionCaches.register("vectorops.ivfRatioMemo")(() => ivfRatioMemo.clear())
   private[queries] def ivfLive(s: SparkSession, inverted: DataFrame,
-      deleted: Column, key: String, compactAt: Double): DataFrame = {
+      deleted: Column, key: StoreKey, compactAt: Double): DataFrame = {
     // Column#toString is the expression's stable SQL-ish rendering —
     // deterministic for the literal predicates the callers pass; `durable`
     // sanitizes + digests it into the on-disk path
-    val fullKey = s"$key:del=${deleted.toString()}:at=$compactAt"
-    val tombs = shared(s, s"ivf_tombstones:$fullKey")(
+    val fullKey = s"${key.key}:del=${deleted.toString()}:at=$compactAt"
+    val ins = key.inputs
+    val tombs = shared(s, s"ivf_tombstones:$fullKey", ins)(
       inverted.filter(deleted).select(col("vec_id")))
-    val compact = ivfRatioMemo.getOrElseUpdate((s, fullKey), {
+    val compact = Memo.value(s, "ivf_compact", ins, memoName(fullKey, ins)) {
       val nTomb = tombs.count()
       val nAll = inverted.count()
       nAll > 0 && nTomb.toDouble / nAll > compactAt
-    })
+    }
     if (compact)
-      shared(s, s"ivf_inverted_compact:$fullKey")(
+      shared(s, s"ivf_inverted_compact:$fullKey", ins)(
         inverted.join(tombs, Seq("vec_id"), "left_anti"))
     else
       inverted.join(tombs, Seq("vec_id"), "left_anti")
@@ -1084,24 +1051,23 @@ object VectorOps {
     * keep column hash-matches bit-for-bit. */
   private[queries] def semDedup(s: SparkSession, d: String, k: Int,
       tau: Double): DataFrame =
-    semDedupOf(s, embOf(s, d), k, tau, storeKey = Some(s"$d:${dataFp(d)}"))
+    semDedupOf(s, embOf(s, d), k, tau, storeKey = Some(embKey(d)))
 
   /** Core of SemDeDup over an arbitrary (vec_id, e) frame; `storeKey =
     * None` skips the sample cache and the durable cell artifact (spec use —
     * the registered entry always persists its assignment). */
   private[graft] def semDedupOf(s: SparkSession, emb: DataFrame, k: Int,
-      tau: Double, storeKey: Option[String]): DataFrame = {
+      tau: Double, storeKey: Option[StoreKey]): DataFrame = {
     val sample = storeKey match {
-      case Some(key) => indexSample(emb, key)
-      case None => emb.orderBy("vec_id").limit(4096).select("e").collect()
-        .map(_.getSeq[Double](0).toArray)
+      case Some(key) => indexSample(s, emb, key.key, key.inputs)
+      case None => sampleOf(emb)
     }
     val centers = lloyd(sample, k, iters = 10)
     // (vec_id, cell, simc, e, nrm): the cell/centroid-sim assignment is the
     // same class of durable index artifact as the IVF inverted file
     val en0 = semAssign(emb, centers)
     val en = storeKey match {
-      case Some(key) => shared(s, s"semdedup_cells:$key:$k")(en0)
+      case Some(key) => shared(s, s"semdedup_cells:${key.key}:$k", key.inputs)(en0)
       case None      => en0
     }
     semVerdict(en, tau).orderBy("vec_id")
@@ -1170,18 +1136,16 @@ object VectorOps {
     * which is exactly what [[AnnOracleSql.semDedup]] with a base-restricted
     * training sample checks. */
   private[graft] def semDedupAppendOf(s: SparkSession, emb: DataFrame,
-      k: Int, tau: Double, storeKey: Option[String]): DataFrame = {
+      k: Int, tau: Double, storeKey: Option[StoreKey]): DataFrame = {
     def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(kk) => shared(s, s"$name:$kk:$k:$tau")(build)
+      case Some(kk) => shared(s, s"$name:${kk.key}:$k:$tau", kk.inputs)(build)
       case None     => build
     }
     val isDelta = col("vec_id") % 5 === 4
     val base = emb.filter(!isDelta)
-    def sampleOf() = base.orderBy("vec_id").limit(4096).select("e").collect()
-      .map(_.getSeq[Double](0).toArray)
     val sample = storeKey match {
-      case Some(kk) => sampleCache.getOrElseUpdate(s"$kk#semddbase", sampleOf())
-      case None     => sampleOf()
+      case Some(kk) => indexSample(s, base, s"${kk.key}#semddbase", kk.inputs)
+      case None     => sampleOf(base)
     }
     val centers = lloyd(sample, k, iters = 10)
     val baseCells = keep("semdd_cells_base")(semAssign(base, centers))
@@ -1208,14 +1172,14 @@ object VectorOps {
     * join stays a plain hash join on a composite key. */
   private[queries] def annIvfFilteredTopK(s: SparkSession, d: String,
       k: Int, nProbe: Int, topK: Int): DataFrame = {
-    val sample = indexSample(embOf(s, d), d)
+    val sample = indexSample(s, embOf(s, d), d, Seq(embIn(d)))
     val centers = lloyd(sample, k, iters = 10)
     val embL = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("label"))
     // label-carrying inverted file: its own durable artifact (same cells as
     // the unfiltered index, plus the filterable attribute per entry)
-    val inverted = shared(s, s"ivf_inverted_flt:$d:${dataFp(d)}:$k")(
+    val inverted = shared(s, s"ivf_inverted_flt:$d:${dataFp(d)}:$k", Seq(embIn(d)))(
       withNorm(embL).withColumn("cell", ivfAssignUdf(centers)(col("e")))
         .select(col("vec_id"), col("label"), col("cell"), col("e"), col("nrm")))
     val queries = inverted.filter(col("vec_id") % 50 === 0)
@@ -1291,7 +1255,7 @@ object VectorOps {
     // report, balanced sample) consume this assignment, and inside the ANN
     // entry the frame is referenced twice (cells + probes) — without the
     // store each consumer would re-run the |corpus|x16 assignment pass.
-    val ranked = shared(s, s"anchor_ranked:$d:${dataFp(d)}")(
+    val ranked = shared(s, s"anchor_ranked:$d:${dataFp(d)}", Seq(embIn(d)))(
       en.crossJoin(anchors)
         .select(col("vec_id"),
           col("aid"), (dot(col("e"), col("ae")) / (col("nrm") * col("an"))).as("ac"))
@@ -1366,7 +1330,7 @@ object VectorOps {
       m: Int, k: Int, topK: Int): DataFrame = {
     val dim = 64
     val sub = dim / m
-    val sample = indexSample(emb, d)
+    val sample = indexSample(s, emb, d, Seq(embIn(d)))
     val books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
       lloyd(sample.map(v => v.slice(j * sub, (j + 1) * sub)), k, iters = 10)
     }
@@ -1390,7 +1354,7 @@ object VectorOps {
     val en = withNorm(emb)
     // The PQ code table is the index artifact: the corpus is encoded once
     // per (dataset, m, k) and shared between topk and its recall gate.
-    val codes = shared(s, s"pq_codes:$d:${dataFp(d)}:$m:$k")(
+    val codes = shared(s, s"pq_codes:$d:${dataFp(d)}:$m:$k", Seq(embIn(d)))(
       en.withColumn("codes", assignU(col("e")))
         .select(col("vec_id").as("nid"), col("codes"), col("nrm")))
     val q = broadcast(en.filter(col("vec_id") % 50 === 0)
@@ -1420,12 +1384,6 @@ object VectorOps {
       .orderBy("qid", "rnk")
   }
 
-  /** Per-dimension [min, max] corpus bounds — the SQ "codebook": 64 bounded
-    * rows per dataset, cached like the training sample. */
-  private val sqBoundsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Double, Double)]]
-  SessionCaches.register("vectorops.sqBoundsCache")(() => sqBoundsCache.clear())
-
   /** Scalar-quantization (SQ8) top-k — the compression vector stores reach
     * for before PQ (one byte per dimension, ~8× over float64 here, no
     * codebook training): per-DIMENSION corpus [min, max], each component
@@ -1441,13 +1399,14 @@ object VectorOps {
   private[queries] def annSqTopK(s: SparkSession, emb: DataFrame, d: String,
       topK: Int): DataFrame = {
     val en = withNorm(emb)
-    val mm = sqBoundsCache.getOrElseUpdate(s"$d:${dataFp(d)}", {
-      SessionCaches.onSessionEnd(s)
+    // per-dimension [min, max] corpus bounds — the SQ "codebook": 64
+    // bounded rows per dataset, memoized like the training sample
+    val mm = Memo.value(s, "sq_bounds", Seq(embIn(d)), d) {
       en.select(posexplode(col("e")).as(Seq("pos", "v")))
         .groupBy("pos").agg(min("v").as("mn"), max("v").as("mx"))
         .orderBy("pos").collect()
         .map(r => (r.getAs[Double]("mn"), r.getAs[Double]("mx")))
-    })
+    }
     val mn = mm.map(_._1); val mx = mm.map(_._2)
     val encodeU = udf((e: Seq[Double]) => {
       val out = new Array[Long](e.length); var j = 0
@@ -1489,7 +1448,7 @@ object VectorOps {
       (t1.map(_.toSeq).toSeq, t2.map(_.toSeq).toSeq)
     })
     // the byte-code table is the durable index artifact, like pq_codes
-    val codes = shared(s, s"sq_codes:$d:${dataFp(d)}")(
+    val codes = shared(s, s"sq_codes:$d:${dataFp(d)}", Seq(embIn(d)))(
       en.withColumn("codes", encodeU(col("e")))
         .select(col("vec_id").as("nid"), col("codes")))
     val q = broadcast(en.filter(col("vec_id") % 50 === 0)
@@ -1540,7 +1499,7 @@ object VectorOps {
       kc: Int, nProbe: Int, m: Int, k: Int, topK: Int): DataFrame = {
     val dim = 64
     val sub = dim / m
-    val sample = indexSample(emb, d)
+    val sample = indexSample(s, emb, d, Seq(embIn(d)))
     val centers = lloyd(sample, kc, iters = 10)
     val resSample = sample.map { v =>
       val c = centers(nearestCells(centers, v, 1).head)
@@ -1584,7 +1543,7 @@ object VectorOps {
     val en = withNorm(emb)
     // cell + residual codes per vector: the IVFADC index artifact, encoded
     // once per (dataset, params) and shared between topk and its recall gate
-    val codes = shared(s, s"ivfpq_codes:$d:${dataFp(d)}:$kc:$m:$k")(
+    val codes = shared(s, s"ivfpq_codes:$d:${dataFp(d)}:$kc:$m:$k", Seq(embIn(d)))(
       en.withColumn("enc", encodeU(col("e")))
         .select(col("vec_id").as("nid"), col("enc._1").as("cell"),
           col("enc._2").as("codes"), col("nrm")))
@@ -1822,7 +1781,7 @@ object VectorOps {
   private[queries] def embedCosineAppend(s: SparkSession, d: String,
       threshold: Double): DataFrame =
     embedCosineAppendOf(s, embOf(s, d), threshold,
-      storeKey = Some(s"$d:${dataFp(d)}"), kBits = oracleLshBits(d))
+      storeKey = Some(embKey(d)), kBits = oracleLshBits(d))
 
   /** [[lshBitsFor]] with the oracle-soundness guard for the registered
     * embed-dedup entries: they are pinned to the EXACT all-pairs cosine
@@ -1849,10 +1808,10 @@ object VectorOps {
     * probe agree by construction, and a corpus grown past a width tier
     * keys fresh artifacts instead of misreading old ones. */
   private[queries] def embedCosineAppendOf(s: SparkSession, emb: DataFrame,
-      threshold: Double, storeKey: Option[String],
+      threshold: Double, storeKey: Option[StoreKey],
       kBits: Int = 8): DataFrame = {
     def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(k) => shared(s, s"${name}_k$kBits:$k")(build)
+      case Some(k) => shared(s, s"${name}_k$kBits:${k.key}", k.inputs)(build)
       case None    => build
     }
     val isDelta = col("vec_id") % 5 === 4
@@ -1910,7 +1869,7 @@ object VectorOps {
     // data alone, so the hash compare certifies recall >= 0.6 every round.
     "ann_lsh_recall_gate" -> ((s, d) => {
       val emb = embOf(s, d)
-      recallGate(shared(s, s"bf_top1:$d:${dataFp(d)}")(bruteForceTopK(emb, 1)),
+      recallGate(storedTop1(s, d),
         annLshTopK(s, emb, d), floor = 0.6)
     }),
 
@@ -2402,7 +2361,7 @@ object VectorOps {
     * driver-checked every round (the stored pairs feed dedup_minhash_lsh,
     * whose all-pairs oracle would fail the hash on any store corruption). */
   private[queries] def minhashPairs(s: SparkSession, d: String): DataFrame =
-    shared(s, s"minhash_pairs:$d:${dataFp(d)}")(minhashPairsBuild(s, d))
+    shared(s, s"minhash_pairs:$d:${dataFp(d)}", Seq(docsIn(d)))(minhashPairsBuild(s, d))
 
   /** (doc_id, band_id, sig) MinHash band rows over word-3-gram shingles:
     * nBands bands of rowsPerBand minhashes each, from nBands*rowsPerBand
@@ -2520,16 +2479,16 @@ object VectorOps {
   private[queries] def minhashPairsAppend(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val isDelta = col("doc_id") % 5 === 4
-    val baseBands = shared(s, s"minhash_bands_base:$d:${docsFp(d)}")(
+    val baseBands = shared(s, s"minhash_bands_base:$d:${docsFp(d)}", Seq(docsIn(d)))(
       minhashBandRowsOf(s, docs.filter(!isDelta), nBands = 16, rowsPerBand = 4))
-    val basePairs = shared(s, s"minhash_pairs_base:$d:${docsFp(d)}")(
+    val basePairs = shared(s, s"minhash_pairs_base:$d:${docsFp(d)}", Seq(docsIn(d)))(
       jaccardVerify(s, d, bandSelfCandidates(baseBands)))
     // the verification FEATURE table is durable too (the containment
     // family's design): an ingest reads the base's shingle sets and
     // computes features for its delta alone — without this, the verify
     // stage re-shingled the WHOLE corpus per ingest, an O(corpus) pass
     // hiding inside an O(delta) operation
-    val baseSets = shared(s, s"minhash_sets_base:$d:${docsFp(d)}")(
+    val baseSets = shared(s, s"minhash_sets_base:$d:${docsFp(d)}", Seq(docsIn(d)))(
       shingleSetsOf(docs.filter(!isDelta)))
     val allSets = baseSets.unionByName(shingleSetsOf(docs.filter(isDelta)))
     val deltaBands =
@@ -2603,10 +2562,10 @@ object VectorOps {
     * `dedup_containment_append`); `storeKey = None` skips the durable
     * artifacts (spec use). */
   private[queries] def containmentAppendOf(s: SparkSession, docs: DataFrame,
-      storeKey: Option[String]): DataFrame = {
+      storeKey: Option[StoreKey]): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(kk) => shared(s, s"$name:$kk")(build)
+      case Some(kk) => shared(s, s"$name:${kk.key}", kk.inputs)(build)
       case None     => build
     }
     val isDelta = col("doc_id") % 5 === 4
@@ -2722,7 +2681,7 @@ object VectorOps {
     // recomputes exact containment on candidates, the result is
     // hash-equal to the full rebuild — which IS the oracle.
     "dedup_containment_append" -> ((s, d) => containmentAppendOf(s,
-      Tables.documents(s, d), storeKey = Some(s"$d:${docsFp(d)}"))
+      Tables.documents(s, d), storeKey = Some(docsKey(d)))
       .orderBy("id_a", "id_b")),
 
     // ---- IVF ANN: coarse k-means quantizer, probe nearest cells ----
@@ -2736,11 +2695,9 @@ object VectorOps {
       annIvfTopK(s, d, k = 16, nProbe = 4, topK = 3)),
 
     // ---- driver-green recall gate for ann_ivf_topk (floor 0.5) ----
-    "ann_ivf_recall_gate" -> ((s, d) => {
-      val emb = embOf(s, d)
-      recallGate(shared(s, s"bf_top1:$d:${dataFp(d)}")(bruteForceTopK(emb, 1)),
-        annIvfTopK(s, d, k = 16, nProbe = 4, topK = 3), floor = 0.5)
-    }),
+    "ann_ivf_recall_gate" -> ((s, d) =>
+      recallGate(storedTop1(s, d),
+        annIvfTopK(s, d, k = 16, nProbe = 4, topK = 3), floor = 0.5)),
 
     // ---- random-projection (JL) dim reduction: 64 → 16, exactly oracled --
     // The transform a 100 TB embedding pipeline runs BEFORE indexing: 4×
@@ -2846,7 +2803,7 @@ object VectorOps {
     // ---- driver-green recall gate for ann_ivf_filtered_topk (floor 0.5) ----
     "ann_ivf_filtered_recall_gate" -> ((s, d) =>
       recallGate(
-        shared(s, s"bf_filt_top1:$d:${dataFp(d)}")(filteredExactTopK(s, d, 1)),
+        shared(s, s"bf_filt_top1:$d:${dataFp(d)}", Seq(embIn(d)))(filteredExactTopK(s, d, 1)),
         annIvfFilteredTopK(s, d, k = 16, nProbe = 8, topK = 3), floor = 0.5)),
 
     // ---- filtered ANN, deterministic anchored quantizer: EXACT oracle ----
@@ -2971,7 +2928,7 @@ object VectorOps {
 
     "ann_pq_recall_gate" -> ((s, d) => {
       val emb = embOf(s, d)
-      recallGate(shared(s, s"bf_top1:$d:${dataFp(d)}")(bruteForceTopK(emb, 1)),
+      recallGate(storedTop1(s, d),
         annPqTopK(s, emb, d, m = 16, k = 16, topK = 3), floor = 0.5)
     }),
 
@@ -2982,7 +2939,7 @@ object VectorOps {
     "ann_sq_topk" -> ((s, d) => annSqTopK(s, embOf(s, d), d, topK = 3)),
     "ann_sq_recall_gate" -> ((s, d) => {
       val emb = embOf(s, d)
-      recallGate(shared(s, s"bf_top1:$d:${dataFp(d)}")(bruteForceTopK(emb, 1)),
+      recallGate(storedTop1(s, d),
         annSqTopK(s, emb, d, topK = 3), floor = 0.5)
     }),
 
@@ -3028,7 +2985,7 @@ object VectorOps {
 
     "ann_ivfpq_recall_gate" -> ((s, d) => {
       val emb = embOf(s, d)
-      recallGate(shared(s, s"bf_top1:$d:${dataFp(d)}")(bruteForceTopK(emb, 1)),
+      recallGate(storedTop1(s, d),
         annIvfPqTopK(s, emb, d,
           kc = 16, nProbe = 4, m = 16, k = 16, topK = 3), floor = 0.5)
     }),
@@ -3048,7 +3005,7 @@ object VectorOps {
 
     "ann_index_store_gate" -> ((s, d) => {
       val emb = embOf(s, d)
-      val stored = shared(s, s"bf_top1:$d:${dataFp(d)}")(bruteForceTopK(emb, 1))
+      val stored = storedTop1(s, d)
         .select(col("qid"), col("rnk"), col("nid").as("s_nid"), col("cos").as("s_cos"))
       val fresh = bruteForceTopK(emb, 1)
         .select(col("qid"), col("rnk"), col("nid").as("f_nid"), col("cos").as("f_cos"))
@@ -3103,7 +3060,7 @@ object VectorOps {
     // same base-trained codebook (the oracle restricts Lloyd's sample to
     // the base slice and verdicts the whole corpus).
     "dedup_semdedup_append" -> ((s, d) => semDedupAppendOf(s, embOf(s, d),
-      k = 16, tau = 0.45, storeKey = Some(s"$d:${dataFp(d)}"))),
+      k = 16, tau = 0.45, storeKey = Some(embKey(d)))),
 
     // ---- the append verb AT the scale-right k ----
     // dedup_semdedup_append's touched-cell locality only pays off when k
@@ -3113,7 +3070,7 @@ object VectorOps {
     // stored verdicts ship verbatim. Same exact oracle, Lloyd sample
     // restricted to the base slice.
     "dedup_semdedup_scaled_append" -> ((s, d) => semDedupAppendOf(s,
-      embOf(s, d), k = 64, tau = 0.45, storeKey = Some(s"$d:${dataFp(d)}"))),
+      embOf(s, d), k = 64, tau = 0.45, storeKey = Some(embKey(d)))),
 
     // ---- incremental embedding near-dup: delta-only signing vs base ----
     "dedup_embed_append" -> ((s, d) =>

@@ -44,23 +44,13 @@ object EventStreams {
   /** Footer-schema discovery memo: the r9 drift fix added one batch read
     * per source open, which a two-source drain pays twice and a
     * median-of-3 bench run pays on every repeat — the r9->r10
-    * stream_interval_join_outer bench delta in a nutshell. A parquet
-    * SCHEMA is stable for the life of a staged dir / generated dataset
-    * within one process (encodings drift across driver data generations,
-    * never mid-process), so memoize per (dir, opts, content fingerprint):
-    * the name|size|mtime listing (VectorOps.fpOf) keeps the memo honest if
-    * a dataset IS regenerated at the same path in-process with a drifted
-    * encoding — the key changes, the stale entry is never served. Evicted
-    * with the other path-keyed memo maps on session end. */
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Map[String, String], String), org.apache.spark.sql.types.StructType]
-  graft.queries.SessionCaches.register("eventstreams.schemaCache")(
-    () => schemaCache.clear())
-
+    * stream_interval_join_outer bench delta in a nutshell. Memoized per
+    * (dir, opts) with `dir` as the declared input, so a dataset
+    * regenerated at the same path with a drifted encoding re-reads its
+    * footer instead of serving the stale schema. */
   private def openEventsStream(s: SparkSession, dir: String,
       opts: Map[String, String] = Map.empty): DataFrame = {
-    graft.queries.SessionCaches.onSessionEnd(s)
-    val fileSchema = schemaCache.getOrElseUpdate((dir, opts, graft.queries.VectorOps.fpOf(dir)),
+    val fileSchema = graft.Memo.value(s, "events_schema", Seq(dir), opts)(
       opts.foldLeft(s.read)((r, kv) => r.option(kv._1, kv._2)).parquet(dir).schema)
     val df = opts.foldLeft(s.readStream.schema(fileSchema))(
       (r, kv) => r.option(kv._1, kv._2)).parquet(dir)

@@ -7,9 +7,9 @@ package graft.tools
   * signal, but they cannot answer "what does the append path SAVE over the
   * rebuild?" honestly: the durable artifact store makes a rebuild entry's
   * construction eager (the store write happens at plan-build, outside the
-  * timed region), and the in-memory `shared` persist makes runs 2..n of a
-  * median read cache. This main isolates ONE production-shaped measurement
-  * per JVM:
+  * timed region), and `shared`'s in-memory persist (a `graft.Memo` frame,
+  * live for the session) makes runs 2..n of a median read cache. This main
+  * isolates ONE production-shaped measurement per JVM:
   *
   *   - REBUILD side: run with SPARK_GRAFT_NO_INDEX_STORE=1 — no durable
   *     reuse, no eager store write; the single timed materialization pays

@@ -40,7 +40,9 @@ object TimeSemDedup {
         // warm store (and read as a rebuild), never silently reuse
         // artifacts built from the old corpus as a wrong measurement
         graft.queries.VectorOps.semDedupAppendOf(spark, emb, k, tau = 0.45,
-          storeKey = Some(s"probe:$d:${graft.queries.VectorOps.dataFp(d)}:$k"))
+          storeKey = Some(graft.queries.StoreKey(
+            s"probe:$d:${graft.queries.VectorOps.dataFp(d)}:$k",
+            Seq(graft.queries.VectorOps.embIn(d)))))
     }
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()

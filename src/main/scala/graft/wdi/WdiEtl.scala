@@ -39,12 +39,13 @@ object WdiEtl {
       .select("Country Code", "Variable", "Year", "Value")
   }
 
+  /** The three regional extracts, in union order. */
+  val extracts: Seq[String] = Seq("GDP_SSA_WDI.csv", "GDP_ASIA_WDI.csv", "GDP_LA_WDI.csv")
+
   /** U1: the three regional extracts unioned by name
     * (detrendandstat_quad.R:65). */
   def unionLong(spark: SparkSession, dir: String): DataFrame =
-    Seq("GDP_SSA_WDI.csv", "GDP_ASIA_WDI.csv", "GDP_LA_WDI.csv")
-      .map(f => toLong(readWide(spark, s"$dir/$f")))
-      .reduce(_ unionByName _)
+    extracts.map(f => toLong(readWide(spark, s"$dir/$f"))).reduce(_ unionByName _)
 
   /** P2 + W1-W3 + P3: per (country, variable) series, keep only maximal runs
     * of >= MinConsecutiveRun consecutive valid (non-null, positive) years

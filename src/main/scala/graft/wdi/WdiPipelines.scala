@@ -2,7 +2,7 @@ package graft.wdi
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import graft.queries.SessionCaches
+import graft.Memo
 
 /** The four reference pipelines end-to-end: front half → detrend variant →
   * one per-country moments table → the seven outputs each variant writes
@@ -35,30 +35,15 @@ object WdiPipelines {
 
   val variants: Seq[Variant] = Seq(quad, hp100, hp625, dlog)
 
-  /** Persisted tables per (session, input dir, key): the cleaned wide table
-    * under `__wide__`, shared by the four variants, and each variant's
-    * moments table under its key. The seven outputs of a variant — and
-    * the driver's Verify/Bench loops — reuse one materialization of the
-    * front half + kernel pass + moments instead of re-running the pipeline
-    * per output. Application end unpersists and drops every entry. */
-  private val cache =
-    scala.collection.concurrent.TrieMap[(String, String, String), DataFrame]()
+  /** The declared inputs of every table below: the three extracts. */
+  private def extracts(dir: String): Seq[String] = WdiEtl.extracts.map(f => s"$dir/$f")
 
-  SessionCaches.register("wdi.pipelines") { () =>
-    val dfs = cache.values.toList
-    cache.clear()
-    dfs.foreach(_.unpersist())
-  }
-
-  private def cached(spark: SparkSession, dir: String, key: String)(df: => DataFrame): DataFrame = {
-    SessionCaches.onSessionEnd(spark)
-    cache.getOrElseUpdate((spark.sparkContext.applicationId, dir, key), df.persist())
-  }
-
-  private[graft] def cacheSize: Int = cache.size
-
+  /** The cleaned wide table, persisted per (session, extracts) and shared by
+    * the four variants: their outputs — and the driver's Verify/Bench loops
+    * — reuse one materialization of the front half + kernel pass + moments
+    * instead of re-running the pipeline per output. */
   private def frontHalfCached(spark: SparkSession, dir: String): DataFrame =
-    cached(spark, dir, "__wide__")(WdiEtl.frontHalf(spark, dir))
+    Memo.frame(spark, "wdi_front_half", extracts(dir))(WdiEtl.frontHalf(spark, dir))
 
   /** The variant's cycle table over the cached front half (not persisted:
     * only the moments derived from it are). */
@@ -72,7 +57,7 @@ object WdiPipelines {
     * aggregation then plans over a single partition with no Exchange: each
     * output is one job once the table is cached. */
   private[graft] def moments(spark: SparkSession, dir: String, v: Variant): DataFrame =
-    cached(spark, dir, v.key)(
+    Memo.frame(spark, "wdi_moments", extracts(dir), v.key)(
       WdiStats.countryMoments(cycles(spark, dir, v), v.sdNames).repartition(1))
 
   /** All seven outputs of one variant, keyed by golden file stem. */

@@ -72,6 +72,24 @@ class TsEncodingSpec extends SparkSpec {
     }
   }
 
+  test("an events file re-encoded in place from int64 nanos to int64 micros fails loudly") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ts_reenc")
+    try {
+      val dir = writeFixture(tmp, "reenc", base.withColumn("ts", col("ts") * 1000L))
+      val ok = Tables.events(spark, dir).select("event_id", "ts").as[(Long, Long)].collect()
+      assert(ok.sortBy(_._1).toSeq == rows.map(r => (r._1, r._3)))
+      // same path, same dtype, 1000x smaller values: only the magnitude
+      // check tells them apart, so it must run again on the new file
+      val events = java.nio.file.Paths.get(dir, "events.parquet")
+      val mtime = events.toFile.lastModified
+      val again = writeFixture(tmp, "reenc_stage", base)
+      java.nio.file.Files.move(java.nio.file.Paths.get(again, "events.parquet"), events,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      events.toFile.setLastModified(mtime + 10000L)
+      intercept[IllegalArgumentException](Tables.events(spark, dir))
+    } finally new scala.reflect.io.Directory(tmp.toFile).deleteRecursively()
+  }
+
   test("streaming drain is encoding-invariant (same windows, same totals)") {
     val drained = fixtureDirs.toSeq.map { case (enc, dir) =>
       enc -> graft.streaming.EventStreams.drainWindowedCounts(spark, dir)

@@ -51,7 +51,7 @@ class Bm25MaxScoreSpec extends SparkSpec {
       val d = "/root/testdata/sf0.001"
       val s = spark.newSession()
       val first = LlmText.bm25MaxScore(s, d, tfOf(s, d), topN = 3,
-        wgtKey = Some("spec:msw")).collect().map(_.toSeq).toSet
+        wgtKey = Some(StoreKey("spec:msw", Seq(s"$d/documents.parquet")))).collect().map(_.toSeq).toSet
       assert(first.nonEmpty)
       val vdir = new java.io.File(tmp.toString).listFiles().head
       val metas = vdir.listFiles().map(_.getName)
@@ -67,7 +67,7 @@ class Bm25MaxScoreSpec extends SparkSpec {
       // fresh session: same ranking off the STORED metadata, no rewrite
       val s2 = spark.newSession()
       val again = LlmText.bm25MaxScore(s2, d, tfOf(s2, d), topN = 3,
-        wgtKey = Some("spec:msw")).collect().map(_.toSeq).toSet
+        wgtKey = Some(StoreKey("spec:msw", Seq(s"$d/documents.parquet")))).collect().map(_.toSeq).toSet
       assert(again == first, "stored-metadata ranking diverged")
       vdir.listFiles().filter(_.getName.startsWith("spec_msw_maxscore_"))
         .foreach(f => assert(f.lastModified == mtimes(f.getName),

@@ -88,7 +88,7 @@ class IndexStoreSpec extends SparkSpec {
       // 5% tombstoned: BELOW the 10% threshold — live view is the
       // anti-join, and no compacted artifact may be written
       val below = VectorOps.ivfLive(s, inverted, col("vec_id") % 20 === 0,
-        key = "spec:below", compactAt = 0.1)
+        key = StoreKey("spec:below", Nil), compactAt = 0.1)
       val belowIds = below.select("vec_id").collect().map(_.getLong(0)).toSet
       assert(belowIds == (0L until 100L).filter(_ % 20 != 0).toSet)
       assert(compactArtifacts().isEmpty,
@@ -97,7 +97,7 @@ class IndexStoreSpec extends SparkSpec {
       // a compacted inverted file lands in the durable store, and the live
       // view is identical to the anti-join's
       val above = VectorOps.ivfLive(s, inverted, col("vec_id") % 4 === 0,
-        key = "spec:above", compactAt = 0.1)
+        key = StoreKey("spec:above", Nil), compactAt = 0.1)
       val aboveIds = above.select("vec_id").collect().map(_.getLong(0)).toSet
       assert(aboveIds == (0L until 100L).filter(_ % 4 != 0).toSet)
       val arts = compactArtifacts()
@@ -108,7 +108,7 @@ class IndexStoreSpec extends SparkSpec {
       val mtime = arts.head.lastModified
       val s2 = s.newSession()
       val again = VectorOps.ivfLive(s2, inverted, col("vec_id") % 4 === 0,
-        key = "spec:above", compactAt = 0.1)
+        key = StoreKey("spec:above", Nil), compactAt = 0.1)
       assert(again.select("vec_id").collect().map(_.getLong(0)).toSet == aboveIds)
       assert(arts.head.lastModified == mtime,
         "a second consumer rewrote the compacted artifact")
@@ -164,8 +164,9 @@ class IndexStoreSpec extends SparkSpec {
     withStoreDir {
       val Sf = "/root/testdata/sf0.001"
       val s = spark.newSession() // fresh artifact-cache identity
+      val subKey = StoreKey("spec:sub", Seq(s"$Sf/documents.parquet"))
       val first = LlmText.substringDedupAppend(s,
-          graft.Tables.documents(s, Sf), w = 10, storeKey = Some("spec:sub"))
+          graft.Tables.documents(s, Sf), w = 10, storeKey = Some(subKey))
         .collect().map(_.toSeq).toSeq
       assert(first.nonEmpty)
       val root = sys.props("graft.index.dir")
@@ -180,7 +181,7 @@ class IndexStoreSpec extends SparkSpec {
       // of re-exploding the base corpus (and must not rewrite them)
       val s2 = spark.newSession()
       val again = LlmText.substringDedupAppend(s2,
-          graft.Tables.documents(s2, Sf), w = 10, storeKey = Some("spec:sub"))
+          graft.Tables.documents(s2, Sf), w = 10, storeKey = Some(subKey))
         .collect().map(_.toSeq).toSeq
       assert(again == first, "stored-index run diverged from the build run")
       arts.foreach(f => assert(f.lastModified == mtimes(f.getName),
@@ -193,7 +194,7 @@ class IndexStoreSpec extends SparkSpec {
       val s = spark.newSession()
       import s.implicits._
       val Sf = "/root/testdata/sf0.001"
-      val liveFp = VectorOps.fpOf(s"$Sf/embeddings.parquet")
+      val liveFp = graft.Memo.fp(s"$Sf/embeddings.parquet")
       // live: the dataset path + its CURRENT fingerprint
       VectorOps.durable(s, s"vac_live:$Sf:$liveFp")(Seq(1L).toDF("id"))
       // stale: same dataset, a fingerprint no live file matches anymore
@@ -252,7 +253,7 @@ class IndexStoreSpec extends SparkSpec {
       try {
         Seq((1L, "a")).toDF("vec_id", "t").write.parquet(s"$ds/embeddings.parquet")
         Seq((1L, "x")).toDF("doc_id", "text").write.parquet(s"$ds/documents.parquet")
-        val fp = VectorOps.fpOf(s"$ds/embeddings.parquet")
+        val fp = graft.Memo.fp(s"$ds/embeddings.parquet")
         VectorOps.durable(s, s"vac_dirds:$ds:$fp")(Seq(7L).toDF("id"))
         val report = VectorOps.vacuumStore(s, Seq(ds))
         assert(report.exists { case (n, a) => n.startsWith("vac_dirds") && a == "kept" },
@@ -277,8 +278,8 @@ class IndexStoreSpec extends SparkSpec {
           new java.io.File(d).mkdirs()
           Seq((1L, "a")).toDF("vec_id", "t").write.parquet(s"$d/embeddings.parquet")
         }
-        val liveFp = VectorOps.fpOf(s"$live/embeddings.parquet")
-        val otherFp = VectorOps.fpOf(s"$other/embeddings.parquet")
+        val liveFp = graft.Memo.fp(s"$live/embeddings.parquet")
+        val otherFp = graft.Memo.fp(s"$other/embeddings.parquet")
         VectorOps.durable(s, s"vac_pfx_live:$live:$liveFp")(Seq(1L).toDF("id"))
         // keyed to the NON-live sibling: substring matching would see the
         // live path '/…/sf0.1' inside '/…/sf0.12' and wrongly keep it
@@ -306,7 +307,7 @@ class IndexStoreSpec extends SparkSpec {
       val s = spark.newSession()
       import s.implicits._
       val Sf = "/root/testdata/sf0.001"
-      val liveFp = VectorOps.fpOf(s"$Sf/embeddings.parquet")
+      val liveFp = graft.Memo.fp(s"$Sf/embeddings.parquet")
       val root = new java.io.File(sys.props("graft.index.dir"))
       // (1) deterministic replay of the mid-build states a concurrent
       // vacuum can observe (since the atomic-rename publish, state (a) is
@@ -394,7 +395,7 @@ class IndexStoreSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       val Sf = "/root/testdata/sf0.001"
-      VectorOps.durable(s, s"spec:vtmp:$Sf:${VectorOps.fpOf(s"$Sf/embeddings.parquet")}")(
+      VectorOps.durable(s, s"spec:vtmp:$Sf:${graft.Memo.fp(s"$Sf/embeddings.parquet")}")(
         Seq(1L).toDF("id")).count()
       val root = new java.io.File(sys.props("graft.index.dir"))
       val vdir = root.listFiles().head
@@ -599,7 +600,8 @@ class IndexStoreSpec extends SparkSpec {
       val docs = graft.Tables.documents(s, "/root/testdata/sf0.001")
       val nBkt = 8
       val append = LlmText.substringDedupCanonicalAppend(s, docs, l = 10,
-        cap = 20, storeKey = Some("spec:bkt"), nBkt = nBkt)
+        cap = 20, storeKey = Some(StoreKey("spec:bkt",
+          Seq("/root/testdata/sf0.001/documents.parquet"))), nBkt = nBkt)
         .collect().map(_.toSeq).toSeq
       val rebuild = LlmText.substringDedupCanonical(docs, l = 10, cap = 20)
         .collect().map(_.toSeq).toSeq

@@ -1,56 +1,59 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
 
-/** Session-end eviction of every process-global memo map (round-9 advice:
-  * `sampleCache`/`fpCache` — and the trained-artifact caches — were
-  * unbounded path-keyed maps that outlived their session). The suites share
-  * one SparkContext, so the spec populates the caches through real queries,
-  * then delivers the application-end event to the hooked listener directly
-  * (the same object Spark's bus would invoke) and asserts every registered
-  * map is empty afterwards.
+/** Session-end eviction of every memo entry (round-9 advice: the sample,
+  * fingerprint and trained-artifact memos were unbounded path-keyed maps
+  * that outlived their session). The suites share one SparkContext, so the
+  * spec populates [[Memo]] through real queries on a session of its own,
+  * then delivers the application-end event to that session's listener
+  * directly (the same object Spark's bus would invoke) and asserts the
+  * session's entries are gone afterwards.
   */
 class SessionCachesSpec extends SparkSpec {
 
   private val Sf = "/root/testdata/sf0.001"
 
   test("application end clears every registered path-keyed cache") {
-    val s = spark
-    // populate: ANN index sample + dataset fingerprints, BPE merge table,
-    // LR fit weights (each the memoized artifact of a real query family)
+    val s = spark.newSession()
+    val before = Memo.size
+    // populate: ANN index sample + index artifacts, then the BPE merge
+    // table and LR fit weights (each the memoized artifact of a real query)
     graft.SparkEntry.queries("ann_ivf_topk")(s, Sf).collect()
+    val afterAnn = Memo.size
+    assert(afterAnn > before, "ANN sample/index entries not memoized")
     graft.SparkEntry.queries("text_bpe_train")(s, Sf).collect()
     graft.SparkEntry.queries("quality_lr_train")(s, Sf).collect()
-    assert(VectorOps.pathCacheSize > 0, "ANN sample/fp caches not populated")
-    assert(LlmText.trainedCacheSize > 0, "trained-artifact caches not populated")
-    assert(SessionCaches.isHooked(s), "cache-populating query did not hook the session")
+    assert(Memo.size > afterAnn, "trained-artifact entries not memoized")
+    assert(Memo.isHooked(s), "cache-populating query did not hook the session")
 
-    SessionCaches.fireSessionEnd(s)
+    Memo.fireSessionEnd(s)
 
-    assert(VectorOps.pathCacheSize == 0, "sampleCache/fpCache survived session end")
-    assert(LlmText.trainedCacheSize == 0, "bpeMergeCache/lrFitCache survived session end")
-    assert(!SessionCaches.isHooked(s), "listener hook not released on session end")
+    assert(Memo.size == before, "the session's entries survived session end")
+    assert(!Memo.isHooked(s), "listener hook not released on session end")
   }
 
   test("application end unpersists and drops the WDI pipeline tables") {
     import graft.wdi.{WdiFixture, WdiPipelines}
     import org.apache.spark.storage.StorageLevel
-    val s = spark
+    val s = spark.newSession()
     val dir = WdiFixture.write()
+    val before = Memo.size
     val moments = WdiPipelines.moments(s, dir, WdiPipelines.quad)
-    val before = moments.collect()
-    assert(WdiPipelines.cacheSize >= 2, "front half + moments not cached")
+    val rows = moments.collect()
+    assert(Memo.size >= before + 2, "front half + moments not cached")
     assert(moments.storageLevel != StorageLevel.NONE, "moments table not persisted")
     assert(WdiPipelines.cycles(s, dir, WdiPipelines.quad).storageLevel == StorageLevel.NONE,
       "cycles are persisted")
-    assert(SessionCaches.isHooked(s), "WDI pipeline cache did not hook the session")
+    assert(Memo.isHooked(s), "WDI pipeline cache did not hook the session")
 
-    SessionCaches.fireSessionEnd(s)
+    Memo.fireSessionEnd(s)
 
-    assert(WdiPipelines.cacheSize == 0, "WDI pipeline cache survived session end")
+    assert(Memo.size == before, "WDI pipeline tables survived session end")
     assert(moments.storageLevel == StorageLevel.NONE, "moments table still persisted")
+    assert(!Memo.isHooked(s), "listener hook not released on session end")
     // a later call rebuilds the same table
-    assert(WdiPipelines.moments(s, dir, WdiPipelines.quad).collect().toSeq == before.toSeq)
-    SessionCaches.fireSessionEnd(s)
+    assert(WdiPipelines.moments(s, dir, WdiPipelines.quad).collect().toSeq == rows.toSeq)
+    Memo.fireSessionEnd(s)
   }
 }
