@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Plan-shape regression net over every registered query: no query may plan
   * a cartesian product, and nested-loop joins are allowed only where they
   * are the intended shape (a broadcast query-sample joined on a non-equi
@@ -9,6 +11,33 @@ package graft
 class PlanQualitySpec extends SparkSpec {
 
   private val Sf = "/root/testdata/sf0.001"
+
+  // The paper's WDI extracts and goldens. The entries that read them are
+  // taken from the registry (those whose oracle SQL reads this directory),
+  // so a registry-wide check plans every other entry wherever it runs.
+  private val RefDir = "/root/reference"
+  private lazy val referenceEntries: Set[String] =
+    SparkEntry.oracleSql.collect { case (n, sql) if sql.contains(RefDir) => n }.toSet
+
+  /** Registers `check` over the registry in name order, split in two: the
+    * named test covers every entry that does not read [[RefDir]]; its
+    * sibling covers the entries that do, and runs only where it exists.
+    */
+  private def registryTest(name: String)(
+      check: Seq[(String, (SparkSession, String) => DataFrame)] => Unit): Unit = {
+    def entries(overReference: Boolean) = {
+      assert(referenceEntries.nonEmpty &&
+        referenceEntries.forall(n => n == "s1_csv_scan" || n.startsWith("wdi_")),
+        s"unexpected entries over $RefDir: ${referenceEntries.toSeq.sorted.mkString(", ")}")
+      SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (n, _) => referenceEntries(n) == overReference }
+    }
+    test(name)(check(entries(overReference = false)))
+    test(s"$name (entries over $RefDir)") {
+      assume(new java.io.File(RefDir).exists, s"$RefDir not present")
+      check(entries(overReference = true))
+    }
+  }
 
   // non-equi broadcast joins by design: tiny broadcast side (query sample /
   // 8-byte signatures), plus the verification gates that intentionally
@@ -223,7 +252,7 @@ class PlanQualitySpec extends SparkSpec {
       s"page should be a per-partition heap take, not a global sort:\n$plan")
   }
 
-  test("no query sorts an unbounded low-cardinality window partition") {
+  registryTest("no query sorts an unbounded low-cardinality window partition") { entries =>
     // The events_gini failure mode: row_number() OVER (PARTITION BY k ...)
     // where k has O(1) distinct values sorts each key's ENTIRE slice of the
     // data in one task — a full-partition sort whose size grows with the
@@ -245,7 +274,7 @@ class PlanQualitySpec extends SparkSpec {
     // train_manifest's offset roll-up is the same shape over per-shard rows
     val reducedFrameAllowed =
       Set("pack_sequences", "pack_sequences_bpe", "train_manifest")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val offenders = entries.flatMap {
       case (name, fn) =>
         if (reducedFrameAllowed(name)) None
         else {
@@ -332,8 +361,8 @@ class PlanQualitySpec extends SparkSpec {
       s"mm_phash_dedup_gate plans $n codec passes, expected 2:\n$plan")
   }
 
-  test("no registered query plans a cartesian product") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+  registryTest("no registered query plans a cartesian product") { entries =>
+    val offenders = entries.flatMap { case (name, fn) =>
       val plan = fn(spark, Sf).queryExecution.executedPlan.toString
       val cartesian = plan.contains("CartesianProduct")
       val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
