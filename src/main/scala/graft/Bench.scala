@@ -13,6 +13,11 @@ package graft
   * accumulates GC/scheduler contention that can inflate a single reading
   * ~3x over the query's isolated cost (round 2 measured 28.8 s for an
   * 8.5 s query), and the median of three is robust to one such spike.
+  *
+  * Entries that share a session-persisted artifact are timed in registry
+  * order, so the first pays the build and the rest time the reuse. The
+  * swap pair is the standing case: whichever of `sim_rrf_swap_overlap` /
+  * `sim_rrf_swap_gate` runs second times cache reuse by design.
   */
 object Bench {
   private def median(xs: Seq[Double]): Double =

@@ -469,9 +469,12 @@ object Olap {
     // identical: count(*) over the distinct set IS countDistinct, and
     // HLL++ registers are duplicate-insensitive (register = max over the
     // hashed value set), so the estimate is bit-identical. Input widened
-    // (§2.5) so the dedup build also runs on every core.
+    // (§2.5) so the dedup build also runs on every core. NULL keys are
+    // dropped on the scan: distinct() keeps a NULL group that count(*)
+    // would count, while the oracle's count(DISTINCT) skips NULLs.
     "x2_hll_gate" -> ((s, d) =>
-      Tables.widened(s, Tables.lineitem(s, d).select("l_orderkey"))
+      Tables.widened(s, Tables.lineitem(s, d).select("l_orderkey")
+          .filter(col("l_orderkey").isNotNull))
         .distinct()
         .agg(
           count(lit(1)).as("n_exact"),

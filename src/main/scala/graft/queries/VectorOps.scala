@@ -2007,7 +2007,10 @@ object VectorOps {
     // Checked in pure integer arithmetic (3·sum >= 5·count — no FP
     // boundary), so an IVF quality regression FAILS the driver hash
     // instead of drifting through the report. Same pattern as the
-    // ann_*_recall_gates.
+    // ann_*_recall_gates. Timing note: this entry and
+    // sim_rrf_swap_overlap share the two persisted pair sets of
+    // rrfSwapOverlapOf, so whichever of the two runs second in a session
+    // times cache reuse, by design, not the fusion pipelines.
     "sim_rrf_swap_gate" -> ((s, d) =>
       rrfSwapOverlapOf(s, d).agg(
         count(lit(1)).cast("long").as("n_queries"),

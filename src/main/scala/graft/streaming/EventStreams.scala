@@ -1,10 +1,12 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Structured Streaming surface over the `events` schema.
@@ -70,48 +72,91 @@ object EventStreams {
     }
   }
 
-  /** Write `part` as a SINGLE parquet file named `name` inside `tmp`: the
-    * file-stream source orders micro-batches by mtime, which callers pin
-    * explicitly after staging. Staged frames carry ts as TimestampType (the
-    * openEventsStream no-conversion branch), so a staged directory has ONE
-    * schema regardless of the source file's physical ts encoding. */
-  private def stageFile(tmp: java.nio.file.Path, name: String, part: DataFrame): Unit = {
+  /** Open a staged non-events dir as a one-file-per-micro-batch stream, its
+    * schema read from the staged files. */
+  private def openStaged(s: SparkSession, dir: Path): DataFrame =
+    s.readStream.schema(s.read.parquet(dir.toString).schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+
+  /** Write `part` as a SINGLE parquet file named `name` inside `tmp`. Staged
+    * frames carry ts as TimestampType (the openEventsStream no-conversion
+    * branch), so a staged directory has ONE schema regardless of the source
+    * file's physical ts encoding. */
+  private def stageFile(tmp: Path, name: String, part: DataFrame): Unit = {
     val dir = tmp.resolve(name + "_dir")
     part.coalesce(1).write.parquet(dir.toString)
     // Files.list holds an open DirectoryStream — close it or leak an fd
     // per staged file
-    val listing = java.nio.file.Files.list(dir)
+    val listing = Files.list(dir)
     val file =
       try listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
       finally listing.close()
-    java.nio.file.Files.move(file, tmp.resolve(name))
+    Files.move(file, tmp.resolve(name))
     new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
+
+  /** Stage the ordered `(fileName, frame)` micro-batches into `dir`, one
+    * file each, and pin the i-th file's mtime to 1000000 + (first + i)·60000
+    * ms: the file source takes files oldest-first, so this order IS the
+    * micro-batch order. A frame passed again (the same reference) is a
+    * replay: its earlier file is copied, not re-written. Returns `dir`. */
+  private[streaming] def stage(dir: Path, batches: Seq[(String, DataFrame)],
+      first: Int = 0): Path = {
+    batches.zipWithIndex.foreach { case ((name, part), i) =>
+      batches.take(i).find(_._2 eq part) match {
+        case Some((earlier, _)) => Files.copy(dir.resolve(earlier), dir.resolve(name))
+        case None               => stageFile(dir, name, part)
+      }
+      Files.setLastModifiedTime(dir.resolve(name),
+        FileTime.fromMillis(1000000L + (first + i) * 60000L))
+    }
+    dir
+  }
+
+  /** Run `query` to completion (Trigger.AvailableNow) into the memory sink
+    * `name`, with an optional checkpoint, and return the sink's table.
+    * `staging` is dropped in a `finally`: once the query ends the memory
+    * sink holds every result row and nothing re-reads the staged files, and
+    * a query that throws must not leave them behind. `query` is by-name, so
+    * staging done while building it is covered too. */
+  private[streaming] def drain(name: String, mode: OutputMode,
+      staging: Option[Path] = None, checkpoint: Option[String] = None)(
+      query: => DataFrame): DataFrame =
+    try {
+      val q = query
+      val w = q.writeStream.format("memory").queryName(name).outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+      checkpoint.fold(w)(w.option("checkpointLocation", _)).start().awaitTermination()
+      q.sparkSession.table(name)
+    } finally staging.foreach(dropStaging)
 
   /** Staging-dir lifecycle. One PROCESS-WIDE shutdown hook over a tracked
     * dir set replaces the old one-hook-per-drain pattern (a median-of-3
     * bench run invoked every drain three times, accumulating JVM hooks and
-    * staged parquet for the whole process lifetime). Drains call
-    * `dropStaging` eagerly after their terminal awaitTermination — the
-    * memory sink has materialized every result row by then and nothing
-    * downstream re-reads the staged files — so the hook is only the crash
-    * backstop for dirs whose drain never reached its terminal await. */
-  private val stagedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    * staged parquet for the whole process lifetime). [[drain]] drops its
+    * staging dir eagerly, so the hook is only the crash backstop. */
+  private val stagedDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
   sys.addShutdownHook {
     stagedDirs.forEach { p =>
       new scala.reflect.io.Directory(p.toFile).deleteRecursively(); ()
     }
   }
-  private def newStaging(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+  private[streaming] def newStaging(prefix: String): Path = {
+    val p = Files.createTempDirectory(prefix)
     stagedDirs.add(p)
     p
   }
-  private def dropStaging(p: java.nio.file.Path): Unit = {
+  private def dropStaging(p: Path): Unit = {
     new scala.reflect.io.Directory(p.toFile).deleteRecursively()
     stagedDirs.remove(p)
     ()
+  }
+
+  /** Event-time midpoint of `raw`'s BIGINT epoch-micros ts, the early/late
+    * split of the two-batch drains. */
+  private def tsMidpoint(raw: DataFrame): Long = {
+    val b = raw.agg(min(col("ts")), max(col("ts"))).head()
+    b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2
   }
 
   /** doc_id midpoint for two-batch staging. The split must preserve id
@@ -154,10 +199,34 @@ object EventStreams {
     mx / 2
   }
 
-  /** Batch events normalized for staging: ts as TimestampType (epoch-micros
-    * exact — `timestamp_micros`, not a lossy double division). */
+  /** `part` normalized for staging: its BIGINT epoch-micros ts as
+    * TimestampType (exact — `timestamp_micros`, not a lossy double
+    * division). */
+  private def staged(part: DataFrame): DataFrame =
+    part.withColumn("ts", timestamp_micros(col("ts")))
+
   private def stagedEvents(s: SparkSession, d: String): DataFrame =
-    graft.Tables.events(s, d).withColumn("ts", timestamp_micros(col("ts")))
+    staged(graft.Tables.events(s, d))
+
+  /** The first `n` of the far-future event-sentinel batches `y_sentinel1`,
+    * `z_sentinel2`, `zz_sentinel3`: one day apart from 2100-01-01, each
+    * holding one user -1 row per `(event_id, event_type)`. Staged after the
+    * real data, each one advances the watermark past every real event;
+    * drains filter the sentinel rows back out of their result. */
+  private def sentinels(s: SparkSession, n: Int,
+      rows: (Long, String)*): Seq[(String, DataFrame)] = {
+    import s.implicits._
+    Seq("y_sentinel1", "z_sentinel2", "zz_sentinel3").take(n).zipWithIndex
+      .map { case (file, i) =>
+        val micros = (4102444800L + i * 86400L) * 1000000L
+        s"$file.parquet" -> staged(rows.map { case (id, t) => (id, -1L, micros, t, 0.0) }
+          .toDF("event_id", "user_id", "ts", "event_type", "value"))
+      }
+  }
+
+  /** Open a staged events dir, one file per micro-batch. */
+  private def openStagedEvents(s: SparkSession, dir: Path): DataFrame =
+    openEventsStream(s, dir.toString, Map("maxFilesPerTrigger" -> "1"))
 
   /** Tumbling event-time window counts per event type; late data beyond the
     * watermark is dropped, so state per (window, type) is finite. */
@@ -271,19 +340,13 @@ object EventStreams {
     * bit-identical regardless of micro-batch partial-aggregation order.
     * EAGER BY DESIGN: the drain runs at construction (it IS the streaming
     * execution under test); the returned plan reads the memory sink. */
-  def drainWindowedCounts(s: SparkSession, d: String): DataFrame = {
-    val name = "graft_stream_win_counts"
-    // the streaming file source wants a DIRECTORY; select just the events
-    // file out of the shared sfDir
-    val src = openEventsStream(s, d, Map("pathGlobFilter" -> "events.parquet"))
-    val q = windowedTypeCounts(src, windowLen = "1 day", watermark = "1 hour")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).orderBy("window_start", "event_type")
-  }
+  def drainWindowedCounts(s: SparkSession, d: String): DataFrame =
+    drain("graft_stream_win_counts", OutputMode.Complete()) {
+      // the streaming file source wants a DIRECTORY; select just the events
+      // file out of the shared sfDir
+      val src = openEventsStream(s, d, Map("pathGlobFilter" -> "events.parquet"))
+      windowedTypeCounts(src, windowLen = "1 day", watermark = "1 hour")
+    }.orderBy("window_start", "event_type")
 
   /** Drain the stateful sessionizer over a real file stream and return every
     * finalized session — the append-mode flagship: sessions only emit when
@@ -299,32 +362,12 @@ object EventStreams {
   def drainSessions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = newStaging("graft_stream_sess")
-    stageFile(tmp, "a_events.parquet", stagedEvents(s, d))
-    def sentinel(name: String, micros: Long): Unit =
-      stageFile(tmp, name,
-        Seq((-1L, -1L, micros, "sentinel", 0.0))
-          .toDF("event_id", "user_id", "ts", "event_type", "value")
-          .withColumn("ts", timestamp_micros(col("ts"))))
-    // ~2100-01-01 and +1 day; mtime order a_ < y_ < z_ is set explicitly so
-    // the file source's oldest-first ordering is deterministic
-    sentinel("y_sentinel1.parquet", 4102444800L * 1000000L)
-    sentinel("z_sentinel2.parquet", 4102531200L * 1000000L)
-    Seq("a_events.parquet", "y_sentinel1.parquet", "z_sentinel2.parquet")
-      .zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    val src = openEventsStream(s, tmp.toString, Map("maxFilesPerTrigger" -> "1"))
-      .as[Event]
-    val name = "graft_stream_sessions"
-    val q = sessionize(src, gapMinutes = 30, watermark = "1 hour")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).filter(col("user_id") >= 0)
+    drain("graft_stream_sessions", OutputMode.Append(), Some(tmp)) {
+      stage(tmp, ("a_events.parquet" -> stagedEvents(s, d)) +:
+        sentinels(s, 2, -1L -> "sentinel"))
+      sessionize(openStagedEvents(s, tmp).as[Event], gapMinutes = 30,
+        watermark = "1 hour").toDF()
+    }.filter(col("user_id") >= 0)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"), round(col("total_value"), 6).as("total_value"))
       .orderBy("user_id", "session_start")
@@ -343,24 +386,11 @@ object EventStreams {
     * EAGER BY DESIGN: the drain runs at construction. */
   def drainDedup(s: SparkSession, d: String): DataFrame = {
     val tmp = newStaging("graft_stream_dedup")
-    stageFile(tmp, "a_events.parquet", stagedEvents(s, d))
-    java.nio.file.Files.copy(
-      tmp.resolve("a_events.parquet"), tmp.resolve("b_replay.parquet"))
-    Seq("a_events.parquet", "b_replay.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val src = openEventsStream(s, tmp.toString, Map("maxFilesPerTrigger" -> "1"))
-    val name = "graft_stream_dedup"
-    val q = dedupStream(src, watermark = "36500 days")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name)
-      .groupBy("event_type")
+    drain("graft_stream_dedup", OutputMode.Append(), Some(tmp)) {
+      val events = stagedEvents(s, d)
+      stage(tmp, Seq("a_events.parquet" -> events, "b_replay.parquet" -> events))
+      dedupStream(openStagedEvents(s, tmp), watermark = "36500 days")
+    }.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
       .orderBy("event_type")
@@ -374,18 +404,11 @@ object EventStreams {
     * self-join. EAGER BY DESIGN: the drain runs at construction. */
   def drainIntervalJoin(s: SparkSession, d: String): DataFrame = {
     def src() = openEventsStream(s, d, Map("pathGlobFilter" -> "events.parquet"))
-    val clicks = src().filter(col("event_type") === "click")
-    val buys = src().filter(col("event_type") === "purchase")
-    val name = "graft_stream_ijoin"
-    val q = intervalJoin(clicks, buys,
+    drain("graft_stream_ijoin", OutputMode.Append()) {
+      intervalJoin(src().filter(col("event_type") === "click"),
+        src().filter(col("event_type") === "purchase"),
         watermark = "30 minutes", joinWindow = "15 minutes")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-      .select(col("user_id"), col("left_id"), unix_micros(col("left_ts")).as("left_us"),
+    }.select(col("user_id"), col("left_id"), unix_micros(col("left_ts")).as("left_us"),
         col("right_id"), unix_micros(col("right_ts")).as("right_us"))
       .orderBy("left_id", "right_id")
   }
@@ -405,9 +428,7 @@ object EventStreams {
     * result. Oracle: the equivalent batch LEFT JOIN.
     * EAGER BY DESIGN: the drain runs at construction. */
   def drainIntervalJoinOuter(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val tmp = newStaging("graft_stream_ijoin_outer")
-    stageFile(tmp, "a_events.parquet", stagedEvents(s, d))
     // Sentinels are a click + purchase PAIR (user -1, filtered from the
     // result): Catalyst pushes the event_type filter below the
     // EventTimeWatermark node, so a 'sentinel'-typed row would never reach
@@ -416,44 +437,25 @@ object EventStreams {
     // watermark+window horizon stayed unflushed). Typed as click/purchase,
     // the sentinels survive both sides' pushed filters and advance both
     // watermarks; the same-instant pair matches itself and is dropped by
-    // the user_id >= 0 result filter.
-    def sentinel(name: String, micros: Long): Unit =
-      stageFile(tmp, name,
-        Seq((-1L, -1L, micros, "click", 0.0), (-2L, -1L, micros, "purchase", 0.0))
-          .toDF("event_id", "user_id", "ts", "event_type", "value")
-          .withColumn("ts", timestamp_micros(col("ts"))))
-    // three watermark-advancing batches: state cleanup consumes the
-    // watermark computed from the PREVIOUS batch, so the last real
-    // unmatched rows flush one batch after the first sentinel lands
-    sentinel("y_sentinel1.parquet", 4102444800L * 1000000L)
-    sentinel("z_sentinel2.parquet", 4102531200L * 1000000L)
-    sentinel("zz_sentinel3.parquet", 4102617600L * 1000000L)
-    Seq("a_events.parquet", "y_sentinel1.parquet", "z_sentinel2.parquet",
-        "zz_sentinel3.parquet")
-      .zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    def src() = openEventsStream(s, tmp.toString, Map("maxFilesPerTrigger" -> "1"))
-      .withWatermark("ts", "30 minutes")
-    val clicks = src().filter(col("event_type") === "click").alias("l")
-    val buys = src().filter(col("event_type") === "purchase").alias("r")
-    val name = "graft_stream_ijoin_outer"
-    val q = clicks.join(buys,
-        col("l.user_id") === col("r.user_id") &&
-          col("l.ts") <= col("r.ts") &&
-          col("l.ts") >= col("r.ts") - expr("INTERVAL 15 minutes"),
-        "leftOuter")
-      .select(col("l.user_id").as("user_id"),
-        col("l.event_id").as("left_id"), col("l.ts").as("left_ts"),
-        col("r.event_id").as("right_id"), col("r.ts").as("right_ts"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).filter(col("user_id") >= 0)
+    // the user_id >= 0 result filter. Three watermark-advancing batches:
+    // state cleanup consumes the watermark computed from the PREVIOUS
+    // batch, so the last real unmatched rows flush one batch after the
+    // first sentinel lands.
+    drain("graft_stream_ijoin_outer", OutputMode.Append(), Some(tmp)) {
+      stage(tmp, ("a_events.parquet" -> stagedEvents(s, d)) +:
+        sentinels(s, 3, -1L -> "click", -2L -> "purchase"))
+      def src() = openStagedEvents(s, tmp).withWatermark("ts", "30 minutes")
+      val clicks = src().filter(col("event_type") === "click").alias("l")
+      val buys = src().filter(col("event_type") === "purchase").alias("r")
+      clicks.join(buys,
+          col("l.user_id") === col("r.user_id") &&
+            col("l.ts") <= col("r.ts") &&
+            col("l.ts") >= col("r.ts") - expr("INTERVAL 15 minutes"),
+          "leftOuter")
+        .select(col("l.user_id").as("user_id"),
+          col("l.event_id").as("left_id"), col("l.ts").as("left_ts"),
+          col("r.event_id").as("right_id"), col("r.ts").as("right_ts"))
+    }.filter(col("user_id") >= 0)
       .select(col("user_id"), col("left_id"), unix_micros(col("left_ts")).as("left_us"),
         col("right_id"), unix_micros(col("right_ts")).as("right_us"))
       .orderBy("left_id", "right_id")
@@ -467,21 +469,15 @@ object EventStreams {
     * oracle runs. Decimal sums keep totals independent of micro-batch
     * boundaries. EAGER BY DESIGN: the drain runs at construction. */
   def drainStreamStaticJoin(s: SparkSession, d: String): DataFrame = {
-    val src = openEventsStream(s, d, Map("pathGlobFilter" -> "events.parquet"))
     val dim = graft.Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val name = "graft_stream_static"
-    val q = src
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .groupBy("c_mktsegment", "event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).orderBy("c_mktsegment", "event_type")
+    drain("graft_stream_static", OutputMode.Complete()) {
+      openEventsStream(s, d, Map("pathGlobFilter" -> "events.parquet"))
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .groupBy("c_mktsegment", "event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
+    }.orderBy("c_mktsegment", "event_type")
   }
 
   /** Per-key streaming EWMA — the recurrence e_i = α·x_i + β·e_{i-1}
@@ -528,34 +524,18 @@ object EventStreams {
   def drainEwma(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = newStaging("graft_stream_ewma")
-    // normalized epoch-micros view (same null filter as the batch kernel);
-    // the midpoint math runs on the BIGINT micros column
-    val raw = graft.Tables.events(s, d).filter(col("value").isNotNull)
-    val bounds = raw.agg(min(col("ts")), max(col("ts"))).head()
-    val mid = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    // strict split: a key's batch-1 rows all precede its batch-2 rows in
-    // event time, so per-key order across batches is preserved by mtime
-    def staged(part: DataFrame): DataFrame =
-      part.withColumn("ts", timestamp_micros(col("ts")))
-    stageFile(tmp, "a_early.parquet", staged(raw.filter(col("ts") < mid)))
-    stageFile(tmp, "b_late.parquet", staged(raw.filter(col("ts") >= mid)))
-    Seq("a_early.parquet", "b_late.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val src = openEventsStream(s, tmp.toString, Map("maxFilesPerTrigger" -> "1"))
-      .as[Event]
-    val name = "graft_stream_ewma"
-    val q = ewmaStream(src, alpha = 0.2, beta = 0.8)
-      .toDF("event_id", "ewma_raw")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name)
-      .select(col("event_id"), round(col("ewma_raw"), 6).as("ewma"))
+    drain("graft_stream_ewma", OutputMode.Append(), Some(tmp)) {
+      // normalized epoch-micros view (same null filter as the batch kernel);
+      // the midpoint math runs on the BIGINT micros column
+      val raw = graft.Tables.events(s, d).filter(col("value").isNotNull)
+      val mid = tsMidpoint(raw)
+      // strict split: a key's batch-1 rows all precede its batch-2 rows in
+      // event time, so per-key order across batches is preserved by mtime
+      stage(tmp, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid)),
+        "b_late.parquet" -> staged(raw.filter(col("ts") >= mid))))
+      ewmaStream(openStagedEvents(s, tmp).as[Event], alpha = 0.2, beta = 0.8)
+        .toDF("event_id", "ewma_raw")
+    }.select(col("event_id"), round(col("ewma_raw"), 6).as("ewma"))
       .orderBy("event_id")
   }
 
@@ -571,43 +551,24 @@ object EventStreams {
     * EAGER BY DESIGN: both drains run at construction. */
   def drainCheckpointRecovery(s: SparkSession, d: String): DataFrame = {
     val tmp = newStaging("graft_stream_ckpt")
-    val data = tmp.resolve("data")
-    java.nio.file.Files.createDirectories(data)
-    val ckpt = tmp.resolve("checkpoint").toString
+    val data = Files.createDirectories(tmp.resolve("data"))
+    val ckpt = Some(tmp.resolve("checkpoint").toString)
     val raw = graft.Tables.events(s, d)
-    val bounds = raw.agg(min(col("ts")), max(col("ts"))).head()
-    val mid = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    def staged(part: DataFrame): DataFrame =
-      part.withColumn("ts", timestamp_micros(col("ts")))
-    def agg(src: DataFrame): DataFrame = src
+    def agg(): DataFrame = openEventsStream(s, data.toString)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
-    // phase 1: only the early half exists; the query drains it and STOPS
-    stageFile(data, "a_early.parquet", staged(raw.filter(col("ts") < mid)))
-    java.nio.file.Files.setLastModifiedTime(data.resolve("a_early.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(1000000L))
-    val q1 = agg(openEventsStream(s, data.toString))
-      .writeStream.format("memory").queryName("graft_ckpt_phase1")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q1.awaitTermination()
-    // phase 2: the late half lands; a NEW query on the SAME checkpoint
-    // resumes from the recovered state + source progress
-    stageFile(data, "b_late.parquet", staged(raw.filter(col("ts") >= mid)))
-    java.nio.file.Files.setLastModifiedTime(data.resolve("b_late.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(1060000L))
-    val q2 = agg(openEventsStream(s, data.toString))
-      .writeStream.format("memory").queryName("graft_ckpt_phase2")
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q2.awaitTermination()
-    dropStaging(tmp)
-    s.table("graft_ckpt_phase2").orderBy("event_type")
+    drain("graft_ckpt_phase2", OutputMode.Complete(), Some(tmp), ckpt) {
+      val mid = tsMidpoint(raw)
+      // phase 1: only the early half exists; the query drains it and STOPS
+      stage(data, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid))))
+      drain("graft_ckpt_phase1", OutputMode.Complete(), checkpoint = ckpt)(agg())
+      // phase 2: the late half lands; a NEW query on the SAME checkpoint
+      // resumes from the recovered state + source progress
+      stage(data, Seq("b_late.parquet" -> staged(raw.filter(col("ts") >= mid))),
+        first = 1)
+      agg()
+    }.orderBy("event_type")
   }
 
   /** Drain a CDC-style LATEST-STATE materialized view: each event is an
@@ -623,38 +584,23 @@ object EventStreams {
     * at construction. */
   def drainLatestState(s: SparkSession, d: String): DataFrame = {
     val tmp = newStaging("graft_stream_latest")
-    val raw = graft.Tables.events(s, d)
-    val bounds = raw.agg(min(col("ts")), max(col("ts"))).head()
-    val mid = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    def staged(part: DataFrame): DataFrame =
-      part.withColumn("ts", timestamp_micros(col("ts")))
-    stageFile(tmp, "a_early.parquet", staged(raw.filter(col("ts") < mid)))
-    stageFile(tmp, "b_late.parquet", staged(raw.filter(col("ts") >= mid)))
-    Seq("a_early.parquet", "b_late.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val src = openEventsStream(s, tmp.toString, Map("maxFilesPerTrigger" -> "1"))
-    val name = "graft_stream_latest"
-    val q = src
-      .groupBy("user_id")
-      .agg(
-        max_by(struct(col("value"), col("event_type")),
-          struct(col("ts"), col("event_id"))).as("last"),
-        max_by(col("event_id"), struct(col("ts"), col("event_id")))
-          .as("last_event_id"),
-        count(lit(1)).as("n_updates"))
-      .select(col("user_id"), col("last_event_id"),
-        col("last.value").as("last_value"),
-        col("last.event_type").as("last_type"), col("n_updates"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name)
-      .select(col("user_id"), col("last_event_id"),
+    drain("graft_stream_latest", OutputMode.Complete(), Some(tmp)) {
+      val raw = graft.Tables.events(s, d)
+      val mid = tsMidpoint(raw)
+      stage(tmp, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid)),
+        "b_late.parquet" -> staged(raw.filter(col("ts") >= mid))))
+      openStagedEvents(s, tmp)
+        .groupBy("user_id")
+        .agg(
+          max_by(struct(col("value"), col("event_type")),
+            struct(col("ts"), col("event_id"))).as("last"),
+          max_by(col("event_id"), struct(col("ts"), col("event_id")))
+            .as("last_event_id"),
+          count(lit(1)).as("n_updates"))
+        .select(col("user_id"), col("last_event_id"),
+          col("last.value").as("last_value"),
+          col("last.event_type").as("last_type"), col("n_updates"))
+    }.select(col("user_id"), col("last_event_id"),
         round(col("last_value"), 6).as("last_value"), col("last_type"),
         col("n_updates"))
       .orderBy("user_id")
@@ -739,44 +685,20 @@ object EventStreams {
   def drainEwmaReordered(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val tmp = newStaging("graft_stream_ewma_ro")
-    val raw = graft.Tables.events(s, d).filter(col("value").isNotNull)
-    val bounds = raw.agg(min(col("ts")), max(col("ts"))).head()
-    val mid = bounds.getLong(0) + (bounds.getLong(1) - bounds.getLong(0)) / 2
-    val dayUs = 86400L * 1000000L
-    // stragglers: the day before the midpoint, odd event_ids only
-    val straggler = col("ts") >= mid - dayUs && col("ts") < mid &&
-      col("event_id") % 2 === 1
-    def staged(part: DataFrame): DataFrame =
-      part.withColumn("ts", timestamp_micros(col("ts")))
-    stageFile(tmp, "a_early.parquet", staged(raw.filter(col("ts") < mid && !straggler)))
-    stageFile(tmp, "b_late.parquet",
-      staged(raw.filter(col("ts") >= mid || straggler)))
-    def sentinel(name: String, micros: Long): Unit =
-      stageFile(tmp, name,
-        Seq((-1L, -1L, micros, "sentinel", 0.0))
-          .toDF("event_id", "user_id", "ts", "event_type", "value")
-          .withColumn("ts", timestamp_micros(col("ts"))))
-    sentinel("y_sentinel1.parquet", 4102444800L * 1000000L)
-    sentinel("z_sentinel2.parquet", 4102531200L * 1000000L)
-    val files = Seq("a_early.parquet", "b_late.parquet",
-      "y_sentinel1.parquet", "z_sentinel2.parquet")
-    files.zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val src = openEventsStream(s, tmp.toString, Map("maxFilesPerTrigger" -> "1"))
-      .as[Event]
-    val name = "graft_stream_ewma_reorder"
-    val q = ewmaReorderedStream(src, alpha = 0.2, beta = 0.8,
-        watermark = "48 hours")
-      .toDF("event_id", "ewma_raw")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).filter(col("event_id") >= 0)
+    drain("graft_stream_ewma_reorder", OutputMode.Append(), Some(tmp)) {
+      val raw = graft.Tables.events(s, d).filter(col("value").isNotNull)
+      val mid = tsMidpoint(raw)
+      val dayUs = 86400L * 1000000L
+      // stragglers: the day before the midpoint, odd event_ids only
+      val straggler = col("ts") >= mid - dayUs && col("ts") < mid &&
+        col("event_id") % 2 === 1
+      stage(tmp, Seq(
+        "a_early.parquet" -> staged(raw.filter(col("ts") < mid && !straggler)),
+        "b_late.parquet" -> staged(raw.filter(col("ts") >= mid || straggler))) ++
+        sentinels(s, 2, -1L -> "sentinel"))
+      ewmaReorderedStream(openStagedEvents(s, tmp).as[Event], alpha = 0.2,
+        beta = 0.8, watermark = "48 hours").toDF("event_id", "ewma_raw")
+    }.filter(col("event_id") >= 0)
       .select(col("event_id"), round(col("ewma_raw"), 6).as("ewma"))
       .orderBy("event_id")
   }
@@ -802,51 +724,39 @@ object EventStreams {
     import s.implicits._
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
     val tmp = newStaging("graft_stream_mh")
-    stageFile(tmp, "a_docs.parquet", docs.filter(col("doc_id") % 3 < 2))
-    stageFile(tmp, "b_docs.parquet", docs.filter(col("doc_id") % 3 === 2))
-    Seq("a_docs.parquet", "b_docs.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
+    val pairs = drain("graft_stream_minhash", OutputMode.Append(), Some(tmp)) {
+      val src = openStaged(s, stage(tmp, Seq(
+        "a_docs.parquet" -> docs.filter(col("doc_id") % 3 < 2),
+        "b_docs.parquet" -> docs.filter(col("doc_id") % 3 === 2))))
+      graft.queries.VectorOps
+        .minhashBandRowsOf(s, src, nBands = 16, rowsPerBand = 4)
+        .as[(Long, Int, Long)]
+        .groupByKey(r => (r._2, r._3))
+        .flatMapGroupsWithState[Seq[Long], (Long, Long)](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          case (_, rows, state: GroupState[Seq[Long]]) =>
+            val seen = state.getOption.getOrElse(Seq.empty[Long])
+            val fresh = rows.map(_._1).toSeq.distinct.sorted
+            // new-vs-stored plus the pairs completed within this batch.
+            // n != o + distinct state: this gate's staging is disjoint, but
+            // the operator must stay safe under re-delivery (same defensive
+            // contract as minhashCandidatesTtl — a replayed doc_id must not
+            // self-pair or duplicate its bucket-membership row)
+            val cross = for (n <- fresh; o <- seen if n != o)
+              yield (math.min(n, o), math.max(n, o))
+            val within = for {
+              i <- fresh.indices
+              j <- (i + 1) until fresh.length
+            } yield (fresh(i), fresh(j))
+            state.update((seen ++ fresh).distinct)
+            (cross ++ within).iterator
+        }
+        .toDF("id_a", "id_b")
     }
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-    val bands = graft.queries.VectorOps
-      .minhashBandRowsOf(s, src, nBands = 16, rowsPerBand = 4)
-      .as[(Long, Int, Long)]
-    val cand = bands
-      .groupByKey(r => (r._2, r._3))
-      .flatMapGroupsWithState[Seq[Long], (Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, rows, state: GroupState[Seq[Long]]) =>
-          val seen = state.getOption.getOrElse(Seq.empty[Long])
-          val fresh = rows.map(_._1).toSeq.distinct.sorted
-          // new-vs-stored plus the pairs completed within this batch.
-          // n != o + distinct state: this gate's staging is disjoint, but
-          // the operator must stay safe under re-delivery (same defensive
-          // contract as minhashCandidatesTtl — a replayed doc_id must not
-          // self-pair or duplicate its bucket-membership row)
-          val cross = for (n <- fresh; o <- seen if n != o)
-            yield (math.min(n, o), math.max(n, o))
-          val within = for {
-            i <- fresh.indices
-            j <- (i + 1) until fresh.length
-          } yield (fresh(i), fresh(j))
-          state.update((seen ++ fresh).distinct)
-          (cross ++ within).iterator
-      }
-    val name = "graft_stream_minhash"
-    val q = cand.toDF("id_a", "id_b")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
     // a pair colliding in several bands is emitted once per band: distinct
     // BEFORE the exact verification, like the batch candidate generator
     graft.queries.VectorOps
-      .jaccardVerify(s, d, s.table(name).distinct())
+      .jaccardVerify(s, d, pairs.distinct())
       .orderBy("id_a", "id_b")
   }
 
@@ -976,24 +886,16 @@ object EventStreams {
   private def ttlTs(docId: Column): Column =
     timestamp_millis(lit(TtlT0) + ttlDayOf(docId) * lit(TtlDayMs))
   /** Stage the 4 era batches + 2 sentinels of `frame` (must carry doc_id)
-    * in event-time order; returns the staged dir. */
-  private def stageTtlSchedule(s: SparkSession, frame: DataFrame,
-      sentinel: Long => DataFrame, prefix: String): java.nio.file.Path = {
-    val tmp = newStaging(prefix)
-    val files = Seq(
+    * into `dir` in event-time order; returns `dir`. */
+  private def stageTtlSchedule(dir: Path, frame: DataFrame,
+      sentinel: Long => DataFrame): Path =
+    stage(dir, Seq(
       "b0.parquet" -> frame.filter(col("doc_id") % 4 === 0),
       "b1.parquet" -> frame.filter(col("doc_id") % 4 === 1),
       "s5.parquet" -> sentinel(-1L),
       "s6.parquet" -> sentinel(-2L),
       "b10.parquet" -> frame.filter(col("doc_id") % 4 === 2),
-      "b11.parquet" -> frame.filter(col("doc_id") % 4 === 3))
-    files.zipWithIndex.foreach { case ((name, part), i) =>
-      stageFile(tmp, name, part)
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(name),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    tmp
-  }
+      "b11.parquet" -> frame.filter(col("doc_id") % 4 === 3)))
 
   /** Drain [[digestFirstSeenTtl]] — the PRODUCTION-shaped first-occurrence
     * dedup with event-time TTL — over the two-era schedule. Semantics under
@@ -1010,21 +912,12 @@ object EventStreams {
     def sentinel(id: Long) =
       Seq((id, s"__sentinel_$id")).toDF("doc_id", "digest")
         .withColumn("ts", ttlTs(col("doc_id")))
-    val tmp = stageTtlSchedule(s, docs, sentinel, "graft_stream_dedup_ttl")
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-    val out = digestFirstSeenTtl(src.select("doc_id", "digest", "ts"),
-      watermark = "1 hour", ttlMs = 2L * TtlDayMs)
-    val name = "graft_stream_dedup_ttl"
-    val q = out.toDF("doc_id", "kept")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).filter(col("doc_id") >= 0).orderBy("doc_id")
+    val tmp = newStaging("graft_stream_dedup_ttl")
+    drain("graft_stream_dedup_ttl", OutputMode.Append(), Some(tmp)) {
+      val src = openStaged(s, stageTtlSchedule(tmp, docs, sentinel))
+      digestFirstSeenTtl(src.select("doc_id", "digest", "ts"),
+        watermark = "1 hour", ttlMs = 2L * TtlDayMs).toDF("doc_id", "kept")
+    }.filter(col("doc_id") >= 0).orderBy("doc_id")
   }
 
   /** Drain [[minhashCandidatesTtl]] — the TTL-bounded near-dup candidate
@@ -1040,28 +933,20 @@ object EventStreams {
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
     def sentinel(id: Long) =
       Seq((id, s"sentinelword$id")).toDF("doc_id", "text")
-    val tmp = stageTtlSchedule(s, docs, sentinel, "graft_stream_mh_ttl")
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-    val bands = graft.queries.VectorOps
-      .minhashBandRowsOf(s, src, nBands = 16, rowsPerBand = 4)
-      .withColumn("ts", ttlTs(col("doc_id")))
-      .select("doc_id", "band_id", "sig", "ts")
-    val cand = minhashCandidatesTtl(bands,
-      watermark = "1 hour", ttlMs = 2L * TtlDayMs)
-    val name = "graft_stream_minhash_ttl"
-    val q = cand.toDF("id_a", "id_b")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
+    val tmp = newStaging("graft_stream_mh_ttl")
+    val pairs = drain("graft_stream_minhash_ttl", OutputMode.Append(), Some(tmp)) {
+      val src = openStaged(s, stageTtlSchedule(tmp, docs, sentinel))
+      val bands = graft.queries.VectorOps
+        .minhashBandRowsOf(s, src, nBands = 16, rowsPerBand = 4)
+        .withColumn("ts", ttlTs(col("doc_id")))
+        .select("doc_id", "band_id", "sig", "ts")
+      minhashCandidatesTtl(bands, watermark = "1 hour", ttlMs = 2L * TtlDayMs)
+        .toDF("id_a", "id_b")
+    }
     // once per colliding band -> distinct BEFORE exact verification; the
     // verify join against the real documents table drops sentinel ids
     graft.queries.VectorOps
-      .jaccardVerify(s, d, s.table(name).distinct())
+      .jaccardVerify(s, d, pairs.distinct())
       .orderBy("id_a", "id_b")
   }
 
@@ -1093,45 +978,33 @@ object EventStreams {
     val queries = inverted.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qn"))
     val tmp = newStaging("graft_stream_ann")
-    stageFile(tmp, "a_queries.parquet", queries.filter(col("qid") % 100 === 0))
-    stageFile(tmp, "b_queries.parquet", queries.filter(col("qid") % 100 =!= 0))
-    Seq("a_queries.parquet", "b_queries.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-    val probe = graft.queries.VectorOps.ivfProbeUdf(centers, nProbe)
-    val cand = src
-      .withColumn("cell", explode(probe(col("qe"))))
-      .join(inverted.select(col("vec_id").as("nid"), col("cell"),
-        col("e"), col("nrm")), Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        (call_function("vec_dot", col("qe"), col("e")) /
-          (col("qn") * col("nrm"))).as("c"))
-      // rank on the raw double, OUTPUT the 6dp rounding — computed here by
-      // Spark's own ROUND so it is bit-identical to the batch path's
-      .withColumn("cr", round(col("c"), 6))
-      .as[(Long, Long, Double, Double)]
-    val out = cand.groupByKey(_._1)
-      .flatMapGroupsWithState[Int, (Long, Long, Long, Double)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (qid, rows, _: GroupState[Int]) =>
-          rows.toSeq.sortBy(r => (-r._3, r._2)).take(topK).zipWithIndex
-            .map { case ((_, nid, _, cr), i) => (qid, (i + 1).toLong, nid, cr) }
-            .iterator
-      }
-    val name = "graft_stream_ann"
-    val q = out.toDF("qid", "rnk", "nid", "cos")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).orderBy("qid", "rnk")
+    drain("graft_stream_ann", OutputMode.Append(), Some(tmp)) {
+      val src = openStaged(s, stage(tmp, Seq(
+        "a_queries.parquet" -> queries.filter(col("qid") % 100 === 0),
+        "b_queries.parquet" -> queries.filter(col("qid") % 100 =!= 0))))
+      val probe = graft.queries.VectorOps.ivfProbeUdf(centers, nProbe)
+      src
+        .withColumn("cell", explode(probe(col("qe"))))
+        .join(inverted.select(col("vec_id").as("nid"), col("cell"),
+          col("e"), col("nrm")), Seq("cell"))
+        .filter(col("qid") =!= col("nid"))
+        .select(col("qid"), col("nid"),
+          (call_function("vec_dot", col("qe"), col("e")) /
+            (col("qn") * col("nrm"))).as("c"))
+        // rank on the raw double, OUTPUT the 6dp rounding — computed here by
+        // Spark's own ROUND so it is bit-identical to the batch path's
+        .withColumn("cr", round(col("c"), 6))
+        .as[(Long, Long, Double, Double)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[Int, (Long, Long, Long, Double)](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          case (qid, rows, _: GroupState[Int]) =>
+            rows.toSeq.sortBy(r => (-r._3, r._2)).take(topK).zipWithIndex
+              .map { case ((_, nid, _, cr), i) => (qid, (i + 1).toLong, nid, cr) }
+              .iterator
+        }
+        .toDF("qid", "rnk", "nid", "cos")
+    }.orderBy("qid", "rnk")
   }
 
   /** Drain ONLINE BM25 serving against the DURABLE term-weight index —
@@ -1156,50 +1029,37 @@ object EventStreams {
     val queries = graft.queries.LlmText
       .bm25QueryTerms(graft.Tables.documents(s, d))
     val tmp = newStaging("graft_stream_bm25")
-    stageFile(tmp, "a_queries.parquet", queries.filter(col("qid") % 100 === 0))
-    stageFile(tmp, "b_queries.parquet", queries.filter(col("qid") % 100 =!= 0))
-    Seq("a_queries.parquet", "b_queries.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-    val cand = src
-      .join(wgt.select(col("doc_id").as("nid"), col("w"), col("wbm")), Seq("w"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), col("qi"), col("wbm"))
-      .as[(Long, Long, Int, Double)]
-    val out = cand.groupByKey(_._1)
-      .flatMapGroupsWithState[Int, (Long, Long, Long, Double)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (qid, rows, _: GroupState[Int]) =>
-          // per-candidate 8-slot fill (at most one posting per (nid, qi)),
-          // then the batch entry's exact left-to-right fold + rounding
-          val slots = scala.collection.mutable.Map.empty[Long, Array[Double]]
-          rows.foreach { case (_, nid, qi, wbm) =>
-            slots.getOrElseUpdate(nid, Array.fill(8)(0.0))(qi) = wbm
-          }
-          slots.iterator.map { case (nid, sl) =>
-            val raw = sl.foldLeft(0.0)(_ + _)
-            val score = BigDecimal(raw)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-            (nid, score)
-          }.toSeq
-            .sortBy { case (nid, sc) => (-sc, nid) }
-            .take(topN).zipWithIndex
-            .map { case ((nid, sc), i) => (qid, (i + 1).toLong, nid, sc) }
-            .iterator
-      }
-    val name = "graft_stream_bm25"
-    val q = out.toDF("qid", "rnk", "nid", "score")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).orderBy("qid", "rnk")
+    drain("graft_stream_bm25", OutputMode.Append(), Some(tmp)) {
+      openStaged(s, stage(tmp, Seq(
+        "a_queries.parquet" -> queries.filter(col("qid") % 100 === 0),
+        "b_queries.parquet" -> queries.filter(col("qid") % 100 =!= 0))))
+        .join(wgt.select(col("doc_id").as("nid"), col("w"), col("wbm")), Seq("w"))
+        .filter(col("nid") =!= col("qid"))
+        .select(col("qid"), col("nid"), col("qi"), col("wbm"))
+        .as[(Long, Long, Int, Double)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[Int, (Long, Long, Long, Double)](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          case (qid, rows, _: GroupState[Int]) =>
+            // per-candidate 8-slot fill (at most one posting per (nid, qi)),
+            // then the batch entry's exact left-to-right fold + rounding
+            val slots = scala.collection.mutable.Map.empty[Long, Array[Double]]
+            rows.foreach { case (_, nid, qi, wbm) =>
+              slots.getOrElseUpdate(nid, Array.fill(8)(0.0))(qi) = wbm
+            }
+            slots.iterator.map { case (nid, sl) =>
+              val raw = sl.foldLeft(0.0)(_ + _)
+              val score = BigDecimal(raw)
+                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+              (nid, score)
+            }.toSeq
+              .sortBy { case (nid, sc) => (-sc, nid) }
+              .take(topN).zipWithIndex
+              .map { case ((nid, sc), i) => (qid, (i + 1).toLong, nid, sc) }
+              .iterator
+        }
+        .toDF("qid", "rnk", "nid", "score")
+    }.orderBy("qid", "rnk")
   }
 
   /** Drain the FULL HYBRID RETRIEVAL QUERY PATH online — the capstone of
@@ -1232,74 +1092,62 @@ object EventStreams {
       .agg(collect_list(struct(col("w"), col("qi"))).as("terms"))
     val queries = denseQ.join(termQ, Seq("qid"), "full")
     val tmp = newStaging("graft_stream_rrf")
-    stageFile(tmp, "a_queries.parquet", queries.filter(col("qid") % 100 === 0))
-    stageFile(tmp, "b_queries.parquet", queries.filter(col("qid") % 100 =!= 0))
-    Seq("a_queries.parquet", "b_queries.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-    val probe = graft.queries.VectorOps.ivfProbeUdf(centers, nProbe)
-    val dcand = src.filter(col("qe").isNotNull)
-      .withColumn("cell", explode(probe(col("qe"))))
-      .join(inverted.select(col("vec_id").as("nid"), col("cell"),
-        col("e"), col("nrm")), Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"), lit(0).as("side"), lit(0).as("qi"),
-        (call_function("vec_dot", col("qe"), col("e")) /
-          (col("qn") * col("nrm"))).as("v"))
-    val lcand = src.filter(col("terms").isNotNull)
-      .select(col("qid"), explode(col("terms")).as("t"))
-      .select(col("qid"), col("t.w").as("w"), col("t.qi").as("qi"))
-      .join(wgt.select(col("doc_id").as("nid"), col("w"), col("wbm")), Seq("w"))
-      .filter(col("nid") =!= col("qid"))
-      .select(col("qid"), col("nid"), lit(1).as("side"), col("qi"),
-        col("wbm").as("v"))
-    val cand = dcand.unionByName(lcand).as[(Long, Long, Int, Int, Double)]
-    val out = cand.groupByKey(_._1)
-      .flatMapGroupsWithState[Int, (Long, Long, Long, Double)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (qid, rows, _: GroupState[Int]) =>
-          val dense = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-          val slots = scala.collection.mutable.Map.empty[Long, Array[Double]]
-          rows.foreach {
-            case (_, nid, 0, _, c)    => dense += ((nid, c))
-            case (_, nid, _, qi, wbm) =>
-              slots.getOrElseUpdate(nid, Array.fill(8)(0.0))(qi) = wbm
-          }
-          // dense rank on the RAW cosine (the batch IVF window's order);
-          // lexical rank on the ROUNDED slot score (the batch BM25's)
-          val ra = dense.sortBy { case (nid, c) => (-c, nid) }
-            .take(20).zipWithIndex
-            .map { case ((nid, _), i) => nid -> (i + 1) }.toMap
-          val rb = slots.iterator.map { case (nid, sl) =>
-            nid -> BigDecimal(sl.foldLeft(0.0)(_ + _))
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          }.toSeq.sortBy { case (nid, sc) => (-sc, nid) }
-            .take(20).zipWithIndex
-            .map { case ((nid, _), i) => nid -> (i + 1) }.toMap
-          (ra.keySet ++ rb.keySet).toSeq.map { nid =>
-            val fa = ra.get(nid).map(r => 1.0 / (60.0 + r)).getOrElse(0.0)
-            val fb = rb.get(nid).map(r => 1.0 / (60.0 + r)).getOrElse(0.0)
-            (nid, fa + fb)
-          }.sortBy { case (nid, rrf) => (-rrf, nid) }
-            .take(3).zipWithIndex
-            .map { case ((nid, rrf), i) =>
-              (qid, (i + 1).toLong, nid, BigDecimal(rrf)
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-            }.iterator
-      }
-    val name = "graft_stream_rrf"
-    val q = out.toDF("qid", "rnk", "nid", "rrf")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).orderBy("qid", "rnk")
+    drain("graft_stream_rrf", OutputMode.Append(), Some(tmp)) {
+      val src = openStaged(s, stage(tmp, Seq(
+        "a_queries.parquet" -> queries.filter(col("qid") % 100 === 0),
+        "b_queries.parquet" -> queries.filter(col("qid") % 100 =!= 0))))
+      val probe = graft.queries.VectorOps.ivfProbeUdf(centers, nProbe)
+      val dcand = src.filter(col("qe").isNotNull)
+        .withColumn("cell", explode(probe(col("qe"))))
+        .join(inverted.select(col("vec_id").as("nid"), col("cell"),
+          col("e"), col("nrm")), Seq("cell"))
+        .filter(col("qid") =!= col("nid"))
+        .select(col("qid"), col("nid"), lit(0).as("side"), lit(0).as("qi"),
+          (call_function("vec_dot", col("qe"), col("e")) /
+            (col("qn") * col("nrm"))).as("v"))
+      val lcand = src.filter(col("terms").isNotNull)
+        .select(col("qid"), explode(col("terms")).as("t"))
+        .select(col("qid"), col("t.w").as("w"), col("t.qi").as("qi"))
+        .join(wgt.select(col("doc_id").as("nid"), col("w"), col("wbm")), Seq("w"))
+        .filter(col("nid") =!= col("qid"))
+        .select(col("qid"), col("nid"), lit(1).as("side"), col("qi"),
+          col("wbm").as("v"))
+      dcand.unionByName(lcand).as[(Long, Long, Int, Int, Double)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[Int, (Long, Long, Long, Double)](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          case (qid, rows, _: GroupState[Int]) =>
+            val dense = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
+            val slots = scala.collection.mutable.Map.empty[Long, Array[Double]]
+            rows.foreach {
+              case (_, nid, 0, _, c)    => dense += ((nid, c))
+              case (_, nid, _, qi, wbm) =>
+                slots.getOrElseUpdate(nid, Array.fill(8)(0.0))(qi) = wbm
+            }
+            // dense rank on the RAW cosine (the batch IVF window's order);
+            // lexical rank on the ROUNDED slot score (the batch BM25's)
+            val ra = dense.sortBy { case (nid, c) => (-c, nid) }
+              .take(20).zipWithIndex
+              .map { case ((nid, _), i) => nid -> (i + 1) }.toMap
+            val rb = slots.iterator.map { case (nid, sl) =>
+              nid -> BigDecimal(sl.foldLeft(0.0)(_ + _))
+                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+            }.toSeq.sortBy { case (nid, sc) => (-sc, nid) }
+              .take(20).zipWithIndex
+              .map { case ((nid, _), i) => nid -> (i + 1) }.toMap
+            (ra.keySet ++ rb.keySet).toSeq.map { nid =>
+              val fa = ra.get(nid).map(r => 1.0 / (60.0 + r)).getOrElse(0.0)
+              val fb = rb.get(nid).map(r => 1.0 / (60.0 + r)).getOrElse(0.0)
+              (nid, fa + fb)
+            }.sortBy { case (nid, rrf) => (-rrf, nid) }
+              .take(3).zipWithIndex
+              .map { case ((nid, rrf), i) =>
+                (qid, (i + 1).toLong, nid, BigDecimal(rrf)
+                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+              }.iterator
+        }
+        .toDF("qid", "rnk", "nid", "rrf")
+    }.orderBy("qid", "rnk")
   }
 
   /** Drain the ONLINE curation chain — the ingest-time half of
@@ -1324,40 +1172,25 @@ object EventStreams {
         col("n_chars"))
     val mid = docIdMidpoint(s, d)
     val tmp = newStaging("graft_stream_cur")
-    stageFile(tmp, "a_docs.parquet", docs.filter(col("doc_id") <= mid))
-    stageFile(tmp, "b_docs.parquet", docs.filter(col("doc_id") > mid))
-    Seq("a_docs.parquet", "b_docs.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-    val staged = graft.queries.Curation.stagedVerdicts(src)
-      .as[(Long, String, String, Boolean, String)]
-    val out = staged
-      .groupByKey(_._5) // content digest
-      .flatMapGroupsWithState[Boolean, (Long, String, String, Boolean, Boolean)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, rows, state: GroupState[Boolean]) =>
-          val seen = state.getOption.getOrElse(false)
-          val sorted = rows.toSeq.sortBy(_._1)
-          state.update(true)
-          sorted.iterator.zipWithIndex.map { case ((id, l, c4, sm, _), i) =>
-            (id, l, c4, !seen && i == 0, sm)
-          }
-      }
-    val name = "graft_stream_curation"
-    val q = out
-      .toDF("doc_id", "lang_id", "c4_verdict", "exact_first", "sampled")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name)
-      .withColumn("final_keep",
+    drain("graft_stream_curation", OutputMode.Append(), Some(tmp)) {
+      val src = openStaged(s, stage(tmp, Seq(
+        "a_docs.parquet" -> docs.filter(col("doc_id") <= mid),
+        "b_docs.parquet" -> docs.filter(col("doc_id") > mid))))
+      graft.queries.Curation.stagedVerdicts(src)
+        .as[(Long, String, String, Boolean, String)]
+        .groupByKey(_._5) // content digest
+        .flatMapGroupsWithState[Boolean, (Long, String, String, Boolean, Boolean)](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          case (_, rows, state: GroupState[Boolean]) =>
+            val seen = state.getOption.getOrElse(false)
+            val sorted = rows.toSeq.sortBy(_._1)
+            state.update(true)
+            sorted.iterator.zipWithIndex.map { case ((id, l, c4, sm, _), i) =>
+              (id, l, c4, !seen && i == 0, sm)
+            }
+        }
+        .toDF("doc_id", "lang_id", "c4_verdict", "exact_first", "sampled")
+    }.withColumn("final_keep",
         col("lang_id") =!= "und" && col("c4_verdict") === "keep" &&
           col("exact_first") && col("sampled"))
       .orderBy("doc_id")
@@ -1381,37 +1214,25 @@ object EventStreams {
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
     val mid = docIdMidpoint(s, d)
     val tmp = newStaging("graft_stream_pack")
-    stageFile(tmp, "a_docs.parquet", docs.filter(col("doc_id") <= mid))
-    stageFile(tmp, "b_docs.parquet", docs.filter(col("doc_id") > mid))
-    Seq("a_docs.parquet", "b_docs.parquet").zipWithIndex.foreach { case (f, i) =>
-      java.nio.file.Files.setLastModifiedTime(tmp.resolve(f),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-    }
-    val schema = s.read.parquet(tmp.toString).schema
-    val src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp.toString)
-      .as[(Long, String, Long)]
-    val out = src.groupByKey(_._2)
-      .flatMapGroupsWithState[Long, (Long, String, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, rows, state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          val res = rows.toSeq.sortBy(_._1).map { case (id, lg, n) =>
-            cum += n
-            (id, lg, n, (cum - 1) / budget)
-          }
-          state.update(cum)
-          res.iterator
-      }
-    val name = "graft_stream_pack"
-    val q = out.toDF("doc_id", "lang", "n_tokens", "bin_id")
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    dropStaging(tmp)
-    s.table(name).orderBy("doc_id")
+    drain("graft_stream_pack", OutputMode.Append(), Some(tmp)) {
+      openStaged(s, stage(tmp, Seq(
+        "a_docs.parquet" -> docs.filter(col("doc_id") <= mid),
+        "b_docs.parquet" -> docs.filter(col("doc_id") > mid))))
+        .as[(Long, String, Long)]
+        .groupByKey(_._2)
+        .flatMapGroupsWithState[Long, (Long, String, Long, Long)](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          case (_, rows, state: GroupState[Long]) =>
+            var cum = state.getOption.getOrElse(0L)
+            val res = rows.toSeq.sortBy(_._1).map { case (id, lg, n) =>
+              cum += n
+              (id, lg, n, (cum - 1) / budget)
+            }
+            state.update(cum)
+            res.iterator
+        }
+        .toDF("doc_id", "lang", "n_tokens", "bin_id")
+    }.orderBy("doc_id")
   }
 
   /** Batch view of the events parquet as the streaming Event dataset
