@@ -124,6 +124,9 @@ object Memo {
   /** Live entries across all sessions (test seam). */
   private[graft] def size: Int = entries.size
 
+  /** Live entries named `name` across all sessions (test seam). */
+  private[graft] def size(name: String): Int = entries.keys.count(_.name == name)
+
   /** Deliver the application-end event to `s`'s listener directly — the test
     * seam: suites share one SparkContext, so a spec cannot stop the real
     * application to watch eviction happen. */

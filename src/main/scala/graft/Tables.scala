@@ -1,8 +1,11 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{col, expr, max, min, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver's synthetic parquet tables (TESTDATA.md).
   *
@@ -10,8 +13,32 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * tables it needs; Catalyst prunes columns/filters down to the parquet scan.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** A scan of `<sfDir>/<name>.parquet`, read with its memoized footer schema. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+  }
+
+  /** The session confs that change the schema Spark infers from a parquet
+    * footer (int64 nanos as BIGINT, zone-less timestamps as TIMESTAMP_NTZ,
+    * binary as STRING, INT96 as TIMESTAMP). */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  /** The schema `read.options(opts).parquet(path)` infers, once per session.
+    * Inference is a footer-reading Spark job per read (71 of them in one
+    * construction of the 22 tpch_* entries, over 7 files). `path` is the
+    * declared input, so a file rewritten in place is inferred again; `opts`
+    * (e.g. `pathGlobFilter`) and the values of [[SchemaConfs]] at lookup
+    * time are part of the identity, so a conf change is never served the
+    * schema inferred under the old value. */
+  def parquetSchema(s: SparkSession, path: String,
+      opts: Map[String, String] = Map.empty): StructType =
+    Memo.value(s, "parquet_schema", Seq(path), opts, SchemaConfs.map(s.conf.getOption))(
+      s.read.options(opts).parquet(path).schema)
 
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = table(s, d, "orders")
@@ -113,8 +140,23 @@ object Tables {
     // an exchange below — `df.rdd` on a multi-stage AQE plan eagerly runs
     // the upstream shuffle stages at construction time (real jobs, even
     // though construction is untimed). For a bare scan the probe is
-    // plan-time only (no job). Every current caller passes a Tables.*
-    // scan; keep it that way.
+    // plan-time only (no job). Checked on the physical plan, which planning
+    // alone produces.
+    exchanges(df.queryExecution.executedPlan).headOption.foreach { e =>
+      throw new IllegalArgumentException(
+        s"Tables.widened needs a scan, or a filtered/projected scan; its input plans " +
+          s"${e.nodeName}, whose upstream stages would run at construction")
+    }
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+  }
+
+  /** Exchanges of a physical plan, looking inside adaptive plans and their
+    * query stages (`collect` descends into neither). A cached table's build
+    * is not part of the plan that reads it. */
+  private[graft] def exchanges(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case q: QueryStageExec => exchanges(q.plan)
+    case e: Exchange => e +: e.children.flatMap(exchanges)
+    case _ => p.children.flatMap(exchanges)
   }
 }

@@ -42,20 +42,13 @@ object EventStreams {
     * error). Branching on the footer's logical type makes wrong-scale event
     * time structurally impossible; an unknown encoding throws at build.
     * `opts` go to BOTH the schema-discovery batch read and the stream source
-    * (pathGlobFilter must filter identically for the schema to match). */
-  /** Footer-schema discovery memo: the r9 drift fix added one batch read
-    * per source open, which a two-source drain pays twice and a
-    * median-of-3 bench run pays on every repeat — the r9->r10
-    * stream_interval_join_outer bench delta in a nutshell. Memoized per
-    * (dir, opts) with `dir` as the declared input, so a dataset
-    * regenerated at the same path with a drifted encoding re-reads its
-    * footer instead of serving the stale schema. */
+    * (pathGlobFilter must filter identically for the schema to match); the
+    * schema is [[graft.Tables.parquetSchema]]'s, inferred once per session
+    * for each (dir, opts) and again when the dir's files change. */
   private def openEventsStream(s: SparkSession, dir: String,
       opts: Map[String, String] = Map.empty): DataFrame = {
-    val fileSchema = graft.Memo.value(s, "events_schema", Seq(dir), opts)(
-      opts.foldLeft(s.read)((r, kv) => r.option(kv._1, kv._2)).parquet(dir).schema)
-    val df = opts.foldLeft(s.readStream.schema(fileSchema))(
-      (r, kv) => r.option(kv._1, kv._2)).parquet(dir)
+    val df = s.readStream.schema(graft.Tables.parquetSchema(s, dir, opts))
+      .options(opts).parquet(dir)
     df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampType    => df

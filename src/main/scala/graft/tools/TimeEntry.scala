@@ -36,7 +36,7 @@ object TimeEntry {
     // reading is fixed session/scan cost rather than incremental compute
     val df =
       if (name == "_floor")
-        spark.read.parquet(s"$d/documents.parquet").select("doc_id")
+        graft.Tables.documents(spark, d).select("doc_id")
       else graft.SparkEntry.queries(name)(spark, d) // construction untimed
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()

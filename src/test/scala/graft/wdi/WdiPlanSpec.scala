@@ -1,15 +1,9 @@
 package graft.wdi
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
-import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** Plan-shape regression net for the WDI pass, on [[WdiFixture]]'s
@@ -20,28 +14,6 @@ import org.apache.spark.sql.functions.col
 class WdiPlanSpec extends SparkSpec {
 
   private lazy val dir = WdiFixture.write()
-
-  /** Exchanges of an executed plan, looking inside adaptive plans and their
-    * query stages (`collect` does not descend into either). The cached
-    * table's own build is not part of the plan: it is not re-run. */
-  private def exchanges(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-    case s: QueryStageExec => exchanges(s.plan)
-    case e: Exchange => e +: e.children.flatMap(exchanges)
-    case _ => p.children.flatMap(exchanges)
-  }
-
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(l)
-    jobs.get
-  }
 
   private def sortedAsWdiMain(stem: String, df: DataFrame): DataFrame =
     if (stem.contains("by_country")) df.orderBy(col("Country Code")) else df.orderBy(col("Region"))
@@ -55,7 +27,7 @@ class WdiPlanSpec extends SparkSpec {
         val n = jobsOf(RCsv.write(sorted, s"$out/$stem.csv"))
         assert(n == 1, s"$stem ran $n jobs")
         val plan = sorted.queryExecution.executedPlan
-        assert(exchanges(plan).isEmpty, s"$stem plans an Exchange:\n$plan")
+        assert(graft.Tables.exchanges(plan).isEmpty, s"$stem plans an Exchange:\n$plan")
       }
     }
   }
