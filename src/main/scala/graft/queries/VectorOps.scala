@@ -185,7 +185,9 @@ object VectorOps {
             System.err.println(s"[graft] ann index store: REUSE $path")
           }
         }
-        s.read.parquet(path)
+        // the footer schema once per session (a bare read infers it with a
+        // Spark job on every call); partition columns come with it
+        s.read.schema(Tables.parquetSchema(s, path)).parquet(path)
     }
 
   /** Store GC — the eviction verb of the durable artifact store. Artifacts

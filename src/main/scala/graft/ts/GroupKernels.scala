@@ -28,9 +28,8 @@ object GroupKernels {
     * (reference series are <= 60 points; events/user is O(100)). */
   val DefaultMaxGroupRows: Int = 2 * 1000 * 1000
 
-  /** @param specs (inputCol, outputCol) pairs, each run through `kernel`
-    * @param kernel (t, y) => out, all length-preserving, NaN = missing
-    * @param maxGroupRows guard: a group exceeding this fails the job
+  /** [[withKernels]] with one kernel for every spec.
+    * @param specs (inputCol, outputCol) pairs, each run through `kernel`
     */
   def withKernel(
       df: DataFrame,
@@ -38,13 +37,29 @@ object GroupKernels {
       orderCol: String,
       specs: Seq[(String, String)],
       kernel: (Array[Double], Array[Double]) => Array[Double],
+      maxGroupRows: Int = DefaultMaxGroupRows): DataFrame =
+    withKernels(df, keyCols, orderCol,
+      specs.map { case (in, out) => (in, out, kernel) }, maxGroupRows)
+
+  /** Several kernels in one pass: one shuffle and one in-task sort per group
+    * serve every spec, so series that share a group key (one country's Y, C,
+    * I and TB under three detrends) cost one `groupByKey`, not one each.
+    * @param specs (inputCol, outputCol, kernel) triples; each kernel is
+    *   (t, y) => out, length-preserving, NaN = missing
+    * @param maxGroupRows guard: a group exceeding this fails the job
+    */
+  def withKernels(
+      df: DataFrame,
+      keyCols: Seq[String],
+      orderCol: String,
+      specs: Seq[(String, String, (Array[Double], Array[Double]) => Array[Double])],
       maxGroupRows: Int = DefaultMaxGroupRows): DataFrame = {
     val inSchema = df.schema
     val outSchema = StructType(
-      inSchema.fields ++ specs.map { case (_, o) => StructField(o, DoubleType) })
+      inSchema.fields ++ specs.map { case (_, o, _) => StructField(o, DoubleType) })
     val keyIdx = keyCols.map(inSchema.fieldIndex).toArray
     val ordIdx = inSchema.fieldIndex(orderCol)
-    val inIdx = specs.map { case (in, _) => inSchema.fieldIndex(in) }.toArray
+    val kernels = specs.map { case (in, _, k) => (inSchema.fieldIndex(in), k) }.toArray
     implicit val rowEnc = Encoders.row(outSchema)
 
     df.groupByKey { r: Row =>
@@ -63,7 +78,7 @@ object GroupKernels {
               " for series this long")
         val rows = buf.sortBy(numAt(_, ordIdx))
         val t = rows.map(numAt(_, ordIdx))
-        val outs = inIdx.map { ci =>
+        val outs = kernels.map { case (ci, kernel) =>
           val y = rows.map(numAt(_, ci))
           kernel(t, y)
         }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.Memo
 
-/** The four reference pipelines end-to-end: front half → detrend variant →
-  * one per-country moments table → the seven outputs each variant writes
+/** The four reference pipelines end-to-end: front half → the four detrend
+  * variants in one fused pass → one per-country moments table for all of
+  * them → the seven outputs each variant writes
   * (detrendandstat_quad.R, dtrendandstat_HP100.R, dtrendandstat_HP625.R,
   * dtrendandstat_dlog.R).
   */
@@ -39,26 +40,44 @@ object WdiPipelines {
   private def extracts(dir: String): Seq[String] = WdiEtl.extracts.map(f => s"$dir/$f")
 
   /** The cleaned wide table, persisted per (session, extracts) and shared by
-    * the four variants: their outputs — and the driver's Verify/Bench loops
-    * — reuse one materialization of the front half + kernel pass + moments
-    * instead of re-running the pipeline per output. */
+    * the fused cycles below and by [[cycles]]. */
   private def frontHalfCached(spark: SparkSession, dir: String): DataFrame =
     Memo.frame(spark, "wdi_front_half", extracts(dir))(WdiEtl.frontHalf(spark, dir))
 
   /** The variant's cycle table over the cached front half (not persisted:
-    * only the moments derived from it are). */
+    * the outputs read the moments of [[WdiCycles.all]] instead). */
   def cycles(spark: SparkSession, dir: String, v: Variant): DataFrame =
     v.makeCycles(frontHalfCached(spark, dir))
 
-  /** The variant's [[WdiStats.countryMoments]], persisted as ONE partition.
-    * `repartition(1)` shuffles after the aggregate, so the lag window and
-    * the aggregation above it keep their parallelism (`coalesce(1)` would
-    * pull them into one task), and every output's sort and region
-    * aggregation then plans over a single partition with no Exchange: each
-    * output is one job once the table is cached. */
-  private[graft] def moments(spark: SparkSession, dir: String, v: Variant): DataFrame =
-    Memo.frame(spark, "wdi_moments", extracts(dir), v.key)(
-      WdiStats.countryMoments(cycles(spark, dir, v), v.sdNames).repartition(1))
+  /** The sd columns of the fused moments table; each variant renames them
+    * to its own `sdNames`. */
+  private val fusedSdNames = quad.sdNames
+
+  /** [[WdiStats.countryMoments]] of all four variants at once, keyed by
+    * `variant`: one kernel shuffle ([[WdiCycles.all]]), one window and one
+    * aggregation serve every variant, and the table is persisted once per
+    * (session, extracts) — the Verify/Bench loops and the 28
+    * outputs all reuse that one materialization. `repartition(1)` shuffles
+    * after the aggregate, so the window and the aggregation keep their
+    * parallelism (`coalesce(1)` would pull them into one task), and every
+    * output's filter, sort and region aggregation then plans over a single
+    * partition with no Exchange: each output is one job once the table is
+    * cached. */
+  private[graft] def momentsAll(spark: SparkSession, dir: String): DataFrame =
+    Memo.frame(spark, "wdi_moments_all", extracts(dir))(
+      WdiStats.countryMoments(
+        WdiCycles.all(frontHalfCached(spark, dir)), fusedSdNames, by = Seq("variant"))
+        .repartition(1))
+
+  /** The variant's per-country moments: its rows of the fused table, with
+    * its own sd column names. */
+  private[graft] def moments(spark: SparkSession, dir: String, v: Variant): DataFrame = {
+    import WdiStats.{acfCols, corrCols, ratioCols}
+    val sd = fusedSdNames.zip(v.sdNames).map { case ((_, f), (_, n)) => col(f).as(n) }
+    momentsAll(spark, dir).filter(col("variant") === v.key)
+      .select(Seq(col("Country Code"), col("Region")) ++ sd ++
+        (ratioCols ++ corrCols ++ acfCols).map(col): _*)
+  }
 
   /** All seven outputs of one variant, keyed by golden file stem. */
   def outputs(spark: SparkSession, dir: String, v: Variant): Map[String, DataFrame] = {

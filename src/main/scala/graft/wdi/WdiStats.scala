@@ -42,12 +42,16 @@ object WdiStats {
     * a failed job on a zero-variance series) and the ratios `try_divide`,
     * so a constant series yields null moments — `NA` in the CSVs.
     * The four lags come from one projection over one year-ordered country
-    * window, so the table costs one window pass and one aggregation. */
-  def countryMoments(cycles: DataFrame, sdNames: Seq[(String, String)]): DataFrame = {
+    * window, so the table costs one window pass and one aggregation.
+    * `by` names leading key columns of a table that stacks several series
+    * per country (e.g. `variant`): the window and the aggregation then run
+    * per (`by`, country), and the keys lead the output. */
+  def countryMoments(cycles: DataFrame, sdNames: Seq[(String, String)],
+      by: Seq[String] = Nil): DataFrame = {
     GraftFunctions.registerCorr(cycles.sparkSession)
     def corrOrNull(x: String, y: String) = call_function("null_safe_corr", col(x), col(y))
-    val w = Window.partitionBy("Country Code").orderBy("Year")
-    val keys = Seq(col("Country Code"), col("Region"))
+    val w = Window.partitionBy((by :+ "Country Code").map(col): _*).orderBy("Year")
+    val keys = (by ++ Seq("Country Code", "Region")).map(col)
     val lagged = cycles.select(keys ++ cycleCols.map(col) ++
       cycleCols.map(c => lag(col(c), 1).over(w).as(s"${c}_lag")): _*)
     val aggs =
@@ -65,11 +69,15 @@ object WdiStats {
   }
 
   /** A4 + A3: region-level mean and sample sd of each country moment,
-    * emitted as `<col>_mean`, `<col>_sd` pairs in input order. */
+    * emitted as `<col>_mean`, `<col>_sd` pairs in input order. The countries
+    * are summed in code order within each partition, so over a one-partition
+    * table the sums — and so the cells — do not depend on the order the
+    * table was built in (which follows the shuffle partition count). */
   def byRegion(countryStats: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { c =>
       Seq(avg(col(c)).as(s"${c}_mean"), stddev_samp(col(c)).as(s"${c}_sd"))
     }
-    countryStats.groupBy(col("Region")).agg(aggs.head, aggs.tail: _*)
+    countryStats.sortWithinPartitions("Country Code")
+      .groupBy(col("Region")).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -47,6 +47,29 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
+  test("a stored artifact's schema is read once per session, partition columns kept") {
+    withStoreDir {
+      val s = spark.newSession()
+      import s.implicits._
+      val df = Seq((1L, "a", 0), (2L, "b", 1), (3L, "c", 1)).toDF("id", "tag", "bkt")
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.select("id", "tag", "bkt").as[(Long, String, Int)].collect().sorted.toSeq
+      val plain = VectorOps.durable(s, "spec:schema")(df)
+      val parted = VectorOps.durablePartitioned(s, "spec:schema_p", Seq("bkt"))(df)
+      assert(rows(plain) == rows(df) && rows(parted) == rows(df))
+      // the partition column comes back from the directory layout
+      assert(parted.columns.toSeq == Seq("id", "tag", "bkt"))
+      // a second read of either artifact in the session runs no footer job
+      val again = jobsOf {
+        assert(VectorOps.durable(s, "spec:schema")(df).schema == plain.schema)
+        assert(VectorOps.durablePartitioned(s, "spec:schema_p", Seq("bkt"))(df).schema ==
+          parted.schema)
+      }
+      assert(again == 0, s"second read ran $again jobs")
+      graft.Memo.fireSessionEnd(s)
+    }
+  }
+
   test("minhash pair graph is stored once and shared by its four consumers") {
     withStoreDir {
       val Sf = "/root/testdata/sf0.001"

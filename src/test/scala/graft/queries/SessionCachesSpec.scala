@@ -42,10 +42,14 @@ class SessionCachesSpec extends SparkSpec {
     val s = spark.newSession()
     val dir = WdiFixture.write()
     val before = Memo.size
-    val moments = WdiPipelines.moments(s, dir, WdiPipelines.quad)
-    val rows = moments.collect()
-    assert(Memo.size >= before + 2, "front half + moments not cached")
-    assert(moments.storageLevel != StorageLevel.NONE, "moments table not persisted")
+    val fusedBefore = Memo.size("wdi_moments_all")
+    val rows = WdiPipelines.moments(s, dir, WdiPipelines.quad).collect()
+    // every variant's moments are a view of the one fused table
+    WdiPipelines.variants.foreach(v => WdiPipelines.moments(s, dir, v).collect())
+    val fused = WdiPipelines.momentsAll(s, dir)
+    assert(Memo.size == before + 2, "front half + fused moments not cached once each")
+    assert(Memo.size("wdi_moments_all") == fusedBefore + 1, "fused moments not cached once")
+    assert(fused.storageLevel != StorageLevel.NONE, "fused moments table not persisted")
     assert(WdiPipelines.cycles(s, dir, WdiPipelines.quad).storageLevel == StorageLevel.NONE,
       "cycles are persisted")
     assert(Memo.isHooked(s), "WDI pipeline cache did not hook the session")
@@ -53,7 +57,8 @@ class SessionCachesSpec extends SparkSpec {
     Memo.fireSessionEnd(s)
 
     assert(Memo.size == before, "WDI pipeline tables survived session end")
-    assert(moments.storageLevel == StorageLevel.NONE, "moments table still persisted")
+    assert(Memo.size("wdi_moments_all") == fusedBefore, "fused moments entry survived session end")
+    assert(fused.storageLevel == StorageLevel.NONE, "fused moments table still persisted")
     assert(!Memo.isHooked(s), "listener hook not released on session end")
     // a later call rebuilds the same table
     assert(WdiPipelines.moments(s, dir, WdiPipelines.quad).collect().toSeq == rows.toSeq)
