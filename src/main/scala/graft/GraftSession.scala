@@ -33,8 +33,9 @@ object GraftSession {
       // rows with empty/null source arrays, which our corpora don't have.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // the native functions and BandedRangeJoinRule: a session without
-      // them silently plans a different program
+      // the native functions, BandedRangeJoinRule and the WDI row rules: a
+      // session without them plans a different program, or cannot plan the
+      // WDI outputs at all
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // r17 examined-and-REVERTED: lowering AQE's coalescing floor
       // (spark.sql.adaptive.coalescePartitions.minPartitionSize 1m->16k)

@@ -170,5 +170,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Custom optimizer rule: band inequality joins -> bucket equi-joins
     // (see graft.plans.BandedRangeJoinRule for scope and proof sketch).
     ext.injectOptimizerRule(_ => graft.plans.BandedRangeJoinRule)
+    // The WDI outputs: each row marker becomes the driver-local rows at its
+    // first optimization, and a global sort over local rows is planned on
+    // the driver (see graft.wdi.WdiRowsRule and graft.plans.LocalSortFold).
+    ext.injectOptimizerRule(_ => graft.wdi.WdiRowsRule)
+    ext.injectPlannerStrategy(_ => graft.plans.LocalSortFold)
   }
 }

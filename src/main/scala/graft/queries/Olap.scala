@@ -27,7 +27,6 @@ import DecimalSums._
   */
 object Olap {
 
-  private val epoch = lit("1970-01-01 00:00:00").cast("timestamp")
   /** Whole days since epoch of a (UTC, midnight-aligned) timestamp column. */
   private def epochDay(ts: Column): Column =
     floor(unix_timestamp(ts) / 86400L).cast("long")

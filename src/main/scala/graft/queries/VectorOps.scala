@@ -204,8 +204,7 @@ object VectorOps {
     * reported, never deleted. Returns one
     * (artifact, action) row per store entry: kept | dropped | kept_no_meta.
     */
-  private[graft] def vacuumStore(s: SparkSession,
-      liveDirs: Seq[String]): Seq[(String, String)] =
+  private[graft] def vacuumStore(liveDirs: Seq[String]): Seq[(String, String)] =
     Memo.storeRoot match {
       case None => Seq.empty
       case Some(root) => vacuumAt(root, liveDirs)

@@ -588,8 +588,6 @@ object Warehouse {
     // its violation count and pass flag — all-zero on a clean feed, and
     // any regression flips a flag and the hash.
     "dq_constraints" -> ((s, d) => {
-      val spark = s
-      import spark.implicits._
       val li = Tables.lineitem(s, d)
       val pkDup = li.groupBy("l_orderkey", "l_linenumber")
         .count().filter(col("count") > 1)

@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the boundary the golden files pin, e.g. `-0.0010895572142160998`
   * fixed vs `-6.060884346639502e-4` sci),
   * unpadded exponent, integers without a trailing `.0`, nulls as `NA`.
-  * [[write]] is a driver-side sink for small result tables: one collect,
-  * no write job.
+  * [[write]] is a driver-side sink for small result tables: one collect and
+  * no write job. A WDI output is a sorted view of driver-local rows
+  * ([[WdiPipelines]]), so its collect runs no Spark job either.
   */
 object RCsv {
 

@@ -1,7 +1,5 @@
 package graft.wdi
 
-import org.apache.spark.sql.functions.col
-
 /** CLI: run all four detrend pipelines and write the 28 output CSVs with
   * R-compatible formatting — the full equivalent of running the reference's
   * four Rscript entry points.
@@ -15,10 +13,7 @@ object WdiMain {
     val spark = graft.GraftSession()
     WdiPipelines.variants.foreach { v =>
       WdiPipelines.outputs(spark, inDir, v).foreach { case (stem, df) =>
-        val ordered =
-          if (stem.contains("by_country")) df.orderBy(col("Country Code"))
-          else df.orderBy(col("Region"))
-        RCsv.write(ordered, s"$outDir/$stem.csv")
+        RCsv.write(WdiPipelines.ordered(stem, df), s"$outDir/$stem.csv")
         println(s"wrote $outDir/$stem.csv")
       }
     }

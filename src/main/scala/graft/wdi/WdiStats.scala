@@ -12,8 +12,8 @@ import graft.functions.GraftFunctions
   * Generic over output column names so one implementation serves all four
   * variants (sd_Y vs sd_dlogY etc). Every per-country moment of a variant
   * comes out of ONE table — one lag window plus one (country, region)
-  * aggregation — and each output file is a projection of that table
-  * (country level) or a region aggregation over it (level 2, 45 rows).
+  * aggregation — and every output file is a projection of that table
+  * (country level) or of one region aggregation over it (level 2).
   */
 object WdiStats {
 
@@ -72,12 +72,15 @@ object WdiStats {
     * emitted as `<col>_mean`, `<col>_sd` pairs in input order. The countries
     * are summed in code order within each partition, so over a one-partition
     * table the sums — and so the cells — do not depend on the order the
-    * table was built in (which follows the shuffle partition count). */
-  def byRegion(countryStats: DataFrame, cols: Seq[String]): DataFrame = {
+    * table was built in (which follows the shuffle partition count). `by`
+    * names leading key columns, as in [[countryMoments]]: the regions are
+    * then aggregated per (`by`, `Region`), each group still in code order,
+    * so every cell keeps the bits of a per-`by` aggregation. */
+  def byRegion(countryStats: DataFrame, cols: Seq[String], by: Seq[String] = Nil): DataFrame = {
     val aggs = cols.flatMap { c =>
       Seq(avg(col(c)).as(s"${c}_mean"), stddev_samp(col(c)).as(s"${c}_sd"))
     }
     countryStats.sortWithinPartitions("Country Code")
-      .groupBy(col("Region")).agg(aggs.head, aggs.tail: _*)
+      .groupBy((by :+ "Region").map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -233,7 +233,7 @@ class IndexStoreSpec extends SparkSpec {
       java.nio.file.Files.delete(java.nio.file.Paths.get(
         root.listFiles().head.getPath, legacy, "_graft_key.json"))
 
-      val report = VectorOps.vacuumStore(s, Seq(Sf))
+      val report = VectorOps.vacuumStore(Seq(Sf))
         .map { case (n, a) => n.takeWhile(_ != ':').split("__").head -> a }
       def actionOf(prefix: String) =
         report.find(_._1.startsWith(prefix)).map(_._2)
@@ -278,7 +278,7 @@ class IndexStoreSpec extends SparkSpec {
         Seq((1L, "x")).toDF("doc_id", "text").write.parquet(s"$ds/documents.parquet")
         val fp = graft.Memo.fp(s"$ds/embeddings.parquet")
         VectorOps.durable(s, s"vac_dirds:$ds:$fp")(Seq(7L).toDF("id"))
-        val report = VectorOps.vacuumStore(s, Seq(ds))
+        val report = VectorOps.vacuumStore(Seq(ds))
         assert(report.exists { case (n, a) => n.startsWith("vac_dirds") && a == "kept" },
           s"directory-dataset artifact not kept: $report")
         // the survivor still reads back with no rebuild
@@ -312,7 +312,7 @@ class IndexStoreSpec extends SparkSpec {
         // inside the key elsewhere must still drop
         VectorOps.durable(s, s"vac_pfx_stalefp:$live:00000000:tag$liveFp")(
           Seq(3L).toDF("id"))
-        val report = VectorOps.vacuumStore(s, Seq(live)).toMap
+        val report = VectorOps.vacuumStore(Seq(live)).toMap
         def act(p: String) = report.collectFirst {
           case (n, a) if n.startsWith(p) => a }
         assert(act("vac_pfx_live").contains("kept"))
@@ -349,7 +349,7 @@ class IndexStoreSpec extends SparkSpec {
       bDir.mkdirs()
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(bDir.getPath, "part-00000.tmp"), "partial")
-      val report = VectorOps.vacuumStore(s, Seq(Sf)).toMap
+      val report = VectorOps.vacuumStore(Seq(Sf)).toMap
       assert(report.collectFirst {
         case (n, a) if n.startsWith("vac_race_a") => a }.contains("kept_no_meta"),
         "data-committed-manifest-pending artifact was not spared")
@@ -363,7 +363,7 @@ class IndexStoreSpec extends SparkSpec {
         VectorOps.durable(s, k)(Seq(1L, 2L).toDF("id"))
       })
       val vacuumer = new Thread(() =>
-        (0 until 4).foreach(_ => VectorOps.vacuumStore(s, Seq(Sf))))
+        (0 until 4).foreach(_ => VectorOps.vacuumStore(Seq(Sf))))
       builder.start(); vacuumer.start()
       builder.join(60000); vacuumer.join(60000)
       keys.foreach { k =>
@@ -435,7 +435,7 @@ class IndexStoreSpec extends SparkSpec {
         java.nio.file.StandardOpenOption.WRITE)
       val lk = ch.lock()
       try {
-        val report = VectorOps.vacuumStore(s, Seq(Sf)).toMap
+        val report = VectorOps.vacuumStore(Seq(Sf)).toMap
         assert(report.get(".tmp_deadkey_1_1").contains("dropped_stale_tmp"),
           s"dead temp not reaped: $report")
         assert(!deadTmp.exists(), "dead temp dir still on disk")

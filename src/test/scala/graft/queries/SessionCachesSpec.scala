@@ -43,12 +43,18 @@ class SessionCachesSpec extends SparkSpec {
     val dir = WdiFixture.write()
     val before = Memo.size
     val fusedBefore = Memo.size("wdi_moments_all")
+    val rowsBefore = Memo.size("wdi_rows")
     val rows = WdiPipelines.moments(s, dir, WdiPipelines.quad).collect()
-    // every variant's moments are a view of the one fused table
-    WdiPipelines.variants.foreach(v => WdiPipelines.moments(s, dir, v).collect())
+    // every variant's moments and outputs are views of the one set of
+    // driver-local rows, collected from the one fused table
+    WdiPipelines.variants.foreach { v =>
+      WdiPipelines.moments(s, dir, v).collect()
+      WdiPipelines.outputs(s, dir, v).values.foreach(_.collect())
+    }
     val fused = WdiPipelines.momentsAll(s, dir)
-    assert(Memo.size == before + 2, "front half + fused moments not cached once each")
+    assert(Memo.size == before + 3, "front half, fused moments and rows not cached once each")
     assert(Memo.size("wdi_moments_all") == fusedBefore + 1, "fused moments not cached once")
+    assert(Memo.size("wdi_rows") == rowsBefore + 1, "driver-local rows not built once")
     assert(fused.storageLevel != StorageLevel.NONE, "fused moments table not persisted")
     assert(WdiPipelines.cycles(s, dir, WdiPipelines.quad).storageLevel == StorageLevel.NONE,
       "cycles are persisted")
@@ -58,6 +64,7 @@ class SessionCachesSpec extends SparkSpec {
 
     assert(Memo.size == before, "WDI pipeline tables survived session end")
     assert(Memo.size("wdi_moments_all") == fusedBefore, "fused moments entry survived session end")
+    assert(Memo.size("wdi_rows") == rowsBefore, "driver-local rows survived session end")
     assert(fused.storageLevel == StorageLevel.NONE, "fused moments table still persisted")
     assert(!Memo.isHooked(s), "listener hook not released on session end")
     // a later call rebuilds the same table

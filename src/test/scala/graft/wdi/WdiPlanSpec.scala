@@ -1,31 +1,30 @@
 package graft.wdi
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Final
-import org.apache.spark.sql.execution.{FileSourceScanExec, MapGroupsExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, MapGroupsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
-import org.apache.spark.sql.functions.col
 
 /** Plan-shape regression net for the WDI pass, on [[WdiFixture]]'s
-  * extracts: once the moments table is cached, every output — sorted the
-  * way `WdiMain` sorts it and written by [[RCsv.write]] — is ONE Spark job
-  * with no Exchange; the four variants share one cached moments table built
-  * by one kernel shuffle and one aggregate; a cold 28-output pass stays
-  * within its job budget; the 28 files do not depend on the shuffle
-  * partition count; and the front half scans each extract once.
+  * extracts: constructing the 28 outputs runs nothing; once the
+  * driver-local rows are built, every output — sorted the way `WdiMain`
+  * sorts it and written by [[RCsv.write]] — runs no Spark job and plans as
+  * a bare `LocalTableScanExec`; an output persisted over one extract
+  * directory never serves another's; the four variants share one cached
+  * moments table built by one kernel shuffle and one aggregate; a cold
+  * 28-output pass stays within its job budget; the 28 files do not depend
+  * on the shuffle partition count; and the front half scans each extract
+  * once.
   */
 class WdiPlanSpec extends SparkSpec {
 
   private lazy val dir = WdiFixture.write()
-
-  private def sortedAsWdiMain(stem: String, df: DataFrame): DataFrame =
-    if (stem.contains("by_country")) df.orderBy(col("Country Code")) else df.orderBy(col("Region"))
 
   /** Every node of an executed plan, through adaptive plans and their stages. */
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -38,34 +37,65 @@ class WdiPlanSpec extends SparkSpec {
   private def writeAll(in: String, out: String): Seq[String] =
     WdiPipelines.variants.flatMap { v =>
       WdiPipelines.outputs(spark, in, v).map { case (stem, df) =>
-        RCsv.write(sortedAsWdiMain(stem, df), s"$out/$stem.csv")
+        RCsv.write(WdiPipelines.ordered(stem, df), s"$out/$stem.csv")
         stem
       }
     }
 
-  test("with its moments cached, each output is one job with no Exchange") {
-    val out = java.nio.file.Files.createTempDirectory("wdi-plan").toString
-    Seq(WdiPipelines.quad, WdiPipelines.dlog).foreach { v =>
-      WdiPipelines.moments(spark, dir, v).count()
+  test("constructing the 28 outputs over fresh extracts runs no job and builds nothing") {
+    val in = WdiFixture.write()
+    val entries = Memo.size
+    var n = 0
+    val jobs = jobsOf { n = WdiPipelines.variants.map(WdiPipelines.outputs(spark, in, _).size).sum }
+    assert(n == 28 && jobs == 0, s"constructing $n outputs ran $jobs jobs")
+    assert(Memo.size == entries, "construction built a memo entry")
+  }
+
+  test("with its rows built, each output runs no job and plans as a LocalTableScanExec") {
+    val out = Files.createTempDirectory("wdi-plan").toString
+    WdiPipelines.moments(spark, dir, WdiPipelines.quad).collect()
+    WdiPipelines.variants.foreach { v =>
       WdiPipelines.outputs(spark, dir, v).foreach { case (stem, df) =>
-        val sorted = sortedAsWdiMain(stem, df)
+        val sorted = WdiPipelines.ordered(stem, df)
         val n = jobsOf(RCsv.write(sorted, s"$out/$stem.csv"))
-        assert(n == 1, s"$stem ran $n jobs")
+        assert(n == 0, s"$stem ran $n jobs")
         val plan = sorted.queryExecution.executedPlan
-        assert(graft.Tables.exchanges(plan).isEmpty, s"$stem plans an Exchange:\n$plan")
+        assert(plan.isInstanceOf[LocalTableScanExec], s"$stem plans more than a local scan:\n$plan")
       }
     }
   }
 
+  test("an output persisted over one extract directory never serves another's") {
+    val (a, b) = (WdiFixture.write(), WdiFixture.write())
+    val stem = "sd_by_region_logquad"
+    def out(d: String) =
+      WdiPipelines.ordered(stem, WdiPipelines.outputs(spark, d, WdiPipelines.quad)(stem))
+    def cached(df: DataFrame) =
+      df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.nonEmpty
+    val want = out(a).collect().toSeq
+    val p = out(a).persist()
+    try {
+      assert(p.collect().toSeq == want)
+      assert(cached(out(a)), "the same output over the same extracts misses the cache")
+      assert(!cached(out(b)), "an output over other extracts matched the cache")
+      assert(out(b).collect().toSeq == want, "the fixture is seeded: both dirs hold the same rows")
+      out(b).foreachPartition((_: Iterator[Row]) => ())
+    } finally p.unpersist(blocking = true)
+  }
+
   test("one kernel shuffle and one moments aggregate serve all four variants") {
-    val cached = WdiPipelines.variants.map { v =>
+    val markers = WdiPipelines.variants.flatMap { v =>
       val m = WdiPipelines.moments(spark, dir, v)
-      m.count()
-      m.queryExecution.withCachedData.collect { case r: InMemoryRelation => r.cacheBuilder }
+      m.collect()
+      m.queryExecution.analyzed.collect { case r: WdiRows => r.canonicalized }
     }
-    assert(cached.forall(_.size == 1) && cached.flatten.distinct.size == 1,
-      s"the variants read ${cached.flatten.distinct.size} cached tables")
-    val plan = nodes(cached.head.head.cachedPlan)
+    assert(markers.size == 4 && markers.distinct.size == 1,
+      s"the variants read ${markers.distinct.size} row sets")
+    val cached = WdiPipelines.momentsAll(spark, dir).queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder
+    }
+    assert(cached.size == 1, s"the moments table reads ${cached.size} cached tables")
+    val plan = nodes(cached.head.cachedPlan)
     val kernels = plan.collect { case g: MapGroupsExec => g }
     assert(kernels.size == 1, s"${kernels.size} kernel groupByKeys:\n${plan.head}")
     val aggs = plan.collect {
@@ -75,14 +105,14 @@ class WdiPlanSpec extends SparkSpec {
       Seq("variant", "Country Code", "Region"), s"moments aggregates:\n${aggs.mkString("\n")}")
   }
 
-  test("a cold 28-output pass over fresh extracts runs at most 36 jobs") {
+  test("a cold 28-output pass over fresh extracts runs at most 10 jobs") {
     val out = Files.createTempDirectory("wdi-pass").toString
     var stems = Seq.empty[String]
     val n = jobsOf { stems = writeAll(WdiFixture.write(), out) }
     assert(stems.size == 28 && stems.distinct.size == 28)
-    // 28 one-job outputs, plus 8 that build the front half and the fused
-    // moments table (four per-variant tables took 18, 46 in all)
-    assert(n <= 28 + 8, s"cold pass ran $n jobs")
+    // 8 build the front half and the fused moments table, 2 collect its rows
+    // and its region aggregate; the outputs run none (one job each took 36)
+    assert(n <= 8 + 2, s"cold pass ran $n jobs")
   }
 
   test("the 28 files are byte-identical at 1, 2 and 4 shuffle partitions") {
