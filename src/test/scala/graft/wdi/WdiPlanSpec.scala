@@ -2,18 +2,21 @@ package graft.wdi
 
 import graft.{Memo, SparkSpec}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Final
-import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, MapGroupsExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, MapGroupsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression net for the WDI pass, on [[WdiFixture]]'s
-  * extracts: constructing the 28 outputs runs nothing; once the
-  * driver-local rows are built, every output — sorted the way `WdiMain`
+  * extracts: constructing the 28 outputs runs nothing; once the moments
+  * table is cached, a pass runs two jobs and no query plans an Exchange;
+  * once the driver-local rows are built, every output — sorted the way `WdiMain`
   * sorts it and written by [[RCsv.write]] — runs no Spark job and plans as
   * a bare `LocalTableScanExec`; an output persisted over one extract
   * directory never serves another's; the four variants share one cached
@@ -62,6 +65,31 @@ class WdiPlanSpec extends SparkSpec {
         val plan = sorted.queryExecution.executedPlan
         assert(plan.isInstanceOf[LocalTableScanExec], s"$stem plans more than a local scan:\n$plan")
       }
+    }
+  }
+
+  test("with its moments cached, each output is one job with no Exchange") {
+    // fresh extracts: the moments table is built and cached here, the rows
+    // are not, so the outputs below also pay for collecting them
+    val in = WdiFixture.write()
+    WdiPipelines.momentsAll(spark, in).count()
+    val out = Files.createTempDirectory("wdi-cached").toString
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    var stems = Seq.empty[String]
+    spark.listenerManager.register(l)
+    val n = try jobsOf { stems = writeAll(in, out) } finally spark.listenerManager.unregister(l)
+    assert(stems.size == 28 && stems.distinct.size == 28)
+    // the first output collects the cached moments and their region
+    // aggregate, one job each; the 28 outputs themselves run none
+    assert(n == 2, s"28 outputs over cached moments ran $n jobs")
+    assert(plans.size == 28 + 2, s"${plans.size} queries ran")
+    plans.forEach { p =>
+      assert(graft.Tables.exchanges(p).isEmpty, s"a query plans an Exchange:\n$p")
     }
   }
 
