@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.Paths
+import java.nio.file.{FileVisitOption, Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -73,15 +74,23 @@ object Memo {
       case _ => Nil
     }
 
-  /** Content fingerprint of a parquet file or directory: names, sizes and
-    * mtimes of its files, hashed to hex. The durable index keys embed it. */
+  /** Content fingerprint of a parquet file or directory: the relative
+    * paths, sizes and mtimes of every file under it, nested ones included
+    * (a partitioned dataset keeps its data in `k=v/` subdirectories),
+    * hashed to hex. A single file is listed under its own name. */
   def fp(path: String): String = {
-    val root = new java.io.File(local(path))
-    // testdata ships single-file parquet; a real dataset is a directory
+    val root = Paths.get(local(path))
     val files =
-      if (root.isFile) Array(root)
-      else Option(root.listFiles()).getOrElse(Array.empty).filter(_.isFile).sortBy(_.getName)
-    val sig = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString("|")
+      if (!Files.isDirectory(root)) Seq(root).filter(Files.isRegularFile(_))
+      else {
+        val walk = Files.walk(root, FileVisitOption.FOLLOW_LINKS)
+        try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList
+        finally walk.close()
+      }
+    val sig = files.map { f =>
+      val rel = if (f == root) f.getFileName.toString else root.relativize(f).toString
+      (rel, s"$rel:${f.toFile.length}:${f.toFile.lastModified}")
+    }.sortBy(_._1).map(_._2).mkString("|")
     java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(sig).toLong & 0xffffffffL)
   }
@@ -94,7 +103,7 @@ object Memo {
       .getOrElse("spark-warehouse/graft_ann_index"))
 
   /** Local absolute form of a path or `file:` URI. */
-  private def local(p: String): String =
+  private[graft] def local(p: String): String =
     Paths.get(new org.apache.hadoop.fs.Path(p).toUri.getPath).toAbsolutePath.normalize.toString
 
   private def release(v: Any): Unit = v match {

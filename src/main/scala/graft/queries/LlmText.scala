@@ -866,20 +866,16 @@ object LlmText {
     * rebuild's rn > 1 set. */
   private def substringAppendDups(s: SparkSession, docs: DataFrame,
       w: Int, storeKey: Option[StoreKey]): (DataFrame, DataFrame) = {
-    def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(k) => VectorOps.shared(s, s"$name:${k.key}", k.inputs)(build)
-      case None    => build
-    }
     val isDelta = col("doc_id") % 5 === 4
     val baseSpans = spanRows(tokenized(docs.filter(!isDelta)), w)
     val firstSeen = Window.partitionBy("span").orderBy("doc_id", "pos")
-    val spanIndex = keep("substr_span_index_base")(
+    val spanIndex = VectorOps.keep(s, storeKey, "substr_span_index_base", Seq(w))(
       baseSpans
         .groupBy("span")
         .agg(min(struct(col("doc_id"), col("pos"))).as("f"))
         .select(col("span"), col("f.doc_id").as("doc_id"),
           col("f.pos").as("pos")))
-    val baseDups = keep("substr_dups_base")(
+    val baseDups = VectorOps.keep(s, storeKey, "substr_dups_base", Seq(w))(
       baseSpans.withColumn("rn", row_number().over(firstSeen))
         .filter(col("rn") > 1).select(col("doc_id"), col("pos")))
     val deltaSpans = spanRows(tokenized(docs.filter(isDelta)), w)
@@ -1030,20 +1026,8 @@ object LlmText {
       docs: DataFrame, l: Int, cap: Int,
       storeKey: Option[StoreKey], deltaOnly: Boolean = false,
       nBkt: Int = 64): DataFrame = {
-    def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(k) => VectorOps.shared(s, s"$name:${k.key}", k.inputs)(build)
-      case None    => build
-    }
-    // The occurrence index goes through the PARTITIONED durable layer and
-    // is deliberately NOT session-persisted: a persist() would turn the
-    // probe into an InMemoryTableScan and the partition-dir pruning below
-    // could never reach the parquet scan (the r13 `weak`: one un-pruned
-    // scan of the whole stored index per ingest).
-    def keepOcc(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(k) =>
-        VectorOps.durablePartitioned(s, s"$name:${k.key}", Seq("span_bkt"))(build)
-      case None => build
-    }
+    // every base artifact is keyed on the window and the group cap
+    val ps = Seq(l, cap)
     val isDelta = col("doc_id") % 5 === 4
     val baseDocs = docs.filter(!isDelta)
     // Slim fixed-width occurrence index: (span_h, doc_id, pos) + the
@@ -1064,12 +1048,18 @@ object LlmText {
     // every later probe agree on the modulus by construction, and a
     // corpus regrown to a size that derives a different count keys a
     // fresh artifact instead of misreading the old layout
-    val baseOcc = keepOcc(s"substr_canon_occh_base_b$nBkt")(
+    // The occurrence index goes through the PARTITIONED durable layer and
+    // is deliberately NOT session-persisted: a persist() would turn the
+    // probe into an InMemoryTableScan and the partition-dir pruning below
+    // could never reach the parquet scan (the r13 `weak`: one un-pruned
+    // scan of the whole stored index per ingest).
+    val baseOcc = VectorOps.keep(s, storeKey, s"substr_canon_occh_base_b$nBkt", ps,
+        partCols = Seq("span_bkt"))(
       slim(spanRows(tokenized(baseDocs), l))
         .withColumn("span_bkt", pmod(col("span_h"), lit(nBkt)).cast("int")))
-    val baseIv = keep("substr_canon_ivh_base")(
+    val baseIv = VectorOps.keep(s, storeKey, "substr_canon_ivh_base", ps)(
       canonGroupIvs(baseOcc.drop("span_bkt"), baseDocs, l, cap))
-    val baseOut = keep("substr_canon_out_base")(
+    val baseOut = VectorOps.keep(s, storeKey, "substr_canon_out_base", ps)(
       assembleCanonicalOutput(tokenized(baseDocs),
         baseIv.select("doc_id", "s", "e")))
     // delta side: same slim shape; localCheckpoint because it feeds the
@@ -1385,14 +1375,14 @@ object LlmText {
     // ---- incremental substring dedup: delta spans vs the stored index ----
     "dedup_substring_append" -> ((s, d) =>
       substringDedupAppend(s, Tables.documents(s, d), w = 10,
-        storeKey = Some(VectorOps.docsKey(d, ":w10")))),
+        storeKey = Some(StoreKey("substr", Seq(VectorOps.docsIn(d)))))),
 
     // ---- the append's production OUTPUT shape: delta + changed docs only --
     // (same base store as dedup_substring_append — the entries share the
     // span index and base-dup artifacts; only the output clause differs)
     "dedup_substring_append_delta" -> ((s, d) =>
       substringDedupAppendDelta(s, Tables.documents(s, d), w = 10,
-        storeKey = Some(VectorOps.docsKey(d, ":w10")))),
+        storeKey = Some(StoreKey("substr", Seq(VectorOps.docsIn(d)))))),
 
     // ---- canonical variable-length excision: the Lee et al. end product ----
     "dedup_substring_canonical" -> ((s, d) =>
@@ -1401,13 +1391,13 @@ object LlmText {
     // ---- incremental canonical: delta groups only, rest from the store ----
     "dedup_substring_canonical_append" -> ((s, d) =>
       substringDedupCanonicalAppend(s, Tables.documents(s, d), l = 10,
-        cap = 20, storeKey = Some(VectorOps.docsKey(d, ":l10c20")),
+        cap = 20, storeKey = Some(StoreKey("substr_canon", Seq(VectorOps.docsIn(d)))),
         nBkt = occBucketCount(d))),
 
     // ---- the canonical append's production OUTPUT: affected docs only ----
     "dedup_substring_canonical_append_delta" -> ((s, d) =>
       substringDedupCanonicalAppendDelta(s, Tables.documents(s, d), l = 10,
-        cap = 20, storeKey = Some(VectorOps.docsKey(d, ":l10c20")),
+        cap = 20, storeKey = Some(StoreKey("substr_canon", Seq(VectorOps.docsIn(d)))),
         nBkt = occBucketCount(d))),
 
     // ---- suffix-sort + LCP: variable-length repeat profile ----
@@ -2250,8 +2240,7 @@ object LlmText {
       def postings(part: DataFrame): DataFrame = part
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-      val tfBase = VectorOps.shared(s,
-        s"bm25_postings_base:$d:${VectorOps.docsFp(d)}", Seq(VectorOps.docsIn(d)))(
+      val tfBase = VectorOps.shared(s, "bm25_postings_base", Seq(VectorOps.docsIn(d)))(
         postings(docs.filter(!isDelta)))
       val tf = tfBase.unionByName(postings(docs.filter(isDelta)))
       bm25RankedOf(s, d, tf, topN = 3, wgtKey = None, tfTag = "append")
@@ -2286,8 +2275,7 @@ object LlmText {
       // the store, never re-tokenized (store counters prove it in the
       // bench); the measured output is the DELTA segment alone — exactly
       // the file an ingest appends to the postings artifact
-      VectorOps.shared(s, s"bm25_postings_base:$d:${VectorOps.docsFp(d)}",
-        Seq(VectorOps.docsIn(d)))(
+      VectorOps.shared(s, "bm25_postings_base", Seq(VectorOps.docsIn(d)))(
         postings(docs.filter(!isDelta)))
       postings(docs.filter(isDelta)).orderBy("doc_id", "w")
     }),
@@ -2307,8 +2295,7 @@ object LlmText {
       // REUSE the entry's contract cares about registers where it is
       // measured: the append bench's fresh-JVM TimeEntry runs, whose
       // store_events show cr >= 1 on this entry (APPEND_r16).
-      val tfBase = VectorOps.shared(s,
-        s"bm25_postings_base:$d:${VectorOps.docsFp(d)}", Seq(VectorOps.docsIn(d)))(
+      val tfBase = VectorOps.shared(s, "bm25_postings_base", Seq(VectorOps.docsIn(d)))(
         postings(docs.filter(!isDelta)))
       val tf = tfBase.unionByName(postings(docs.filter(isDelta)))
       bm25WeightsOf(s, tf, wgtKey = None)
@@ -2350,8 +2337,7 @@ object LlmText {
     // corpus re-tokenize. Every one-shot consumer (this ranking, both RRF
     // fusions, the front door) REUSEs the postings the way the append
     // entry already reuses its base slice.
-    val tf = VectorOps.shared(s, s"bm25_postings:$d:${VectorOps.docsFp(d)}",
-      Seq(VectorOps.docsIn(d)))(
+    val tf = VectorOps.shared(s, "bm25_postings", Seq(VectorOps.docsIn(d)))(
       docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf")))
     bm25RankedOf(s, d, tf, topN,
@@ -2450,8 +2436,8 @@ object LlmText {
     // frame.
     val wgt = wgtKey match {
       case Some(_) => bm25WeightsOf(s, tf, wgtKey)
-      case None => VectorOps.sharedLocal(s, s"bm25_weights_session:$d:$tfTag",
-        Seq(VectorOps.docsIn(d)))(bm25WeightsOf(s, tf, wgtKey = None))
+      case None => VectorOps.sharedLocal(s, "bm25_weights_session",
+        Seq(VectorOps.docsIn(d)), tfTag)(bm25WeightsOf(s, tf, wgtKey = None))
     }
     // The impact metadata — per-term score upper bounds, the per-term
     // topN impact heads, and the per-doc (term -> weight) maps — is a
@@ -2462,9 +2448,9 @@ object LlmText {
     // fresh JVMs; on the store-less append path it stays session-local
     // by the same contract as the weights above.
     def keepMeta(suffix: String)(b: => DataFrame): DataFrame = wgtKey match {
-      case Some(k) => VectorOps.shared(s, s"${k.key}:$suffix", k.inputs)(b)
-      case None => VectorOps.sharedLocal(s, s"bm25_session_$suffix:$d:$tfTag",
-        Seq(VectorOps.docsIn(d)))(b)
+      case Some(k) => VectorOps.shared(s, s"${k.name}:$suffix", k.inputs, k.params: _*)(b)
+      case None => VectorOps.sharedLocal(s, s"bm25_session_$suffix",
+        Seq(VectorOps.docsIn(d)), tfTag)(b)
     }
     val q = bm25QueryTerms(docs, qmod)
     // Candidate scoring is ONE row per (query, candidate-doc): each doc
@@ -2596,7 +2582,7 @@ object LlmText {
   /** The durable BM25 term-weight index over a raw-postings frame: the
     * BM25 term weight is QUERY-INDEPENDENT — idf(w) · tfterm(doc, w) — so
     * it's computed once per (doc, term) posting and PERSISTED as a durable
-    * artifact keyed by the data fingerprint, exactly like the IVF inverted
+    * artifact keyed by the documents' fingerprint, exactly like the IVF inverted
     * file: this (doc_id, w, wbm) table IS the inverted index a real BM25
     * engine stores, and every consumer (sim_bm25_topk, both RRF fusions,
     * the hard-negative miner, the front door, the ONLINE serving drain)
@@ -2621,15 +2607,12 @@ object LlmText {
               (col("dl").cast("double") /
                 (col("n_tok").cast("double") / col("n_docs").cast("double"))))))
         .select(col("doc_id"), col("w"), col("wbm"))
-    wgtKey match {
-      case Some(k) => VectorOps.shared(s, k.key, k.inputs)(weigh)
-      case None    => weigh
-    }
+    wgtKey.fold(weigh)(k => VectorOps.shared(s, k.name, k.inputs, k.params: _*)(weigh))
   }
 
   /** Key of the durable weight index over the standard postings of `d`. */
   private def bm25WeightsKey(d: String): StoreKey =
-    StoreKey(s"bm25_weights:$d:${VectorOps.docsFp(d)}", Seq(VectorOps.docsIn(d)))
+    StoreKey("bm25_weights", Seq(VectorOps.docsIn(d)))
 
   /** The durable weight index for the STANDARD postings of `d` — the
     * serving handle the online drain reads (same artifact key as the
@@ -2637,8 +2620,7 @@ object LlmText {
   private[graft] def bm25Weights(s: SparkSession, d: String): DataFrame = {
     // same durable postings artifact as bm25Ranked: serving reads the
     // store, never re-tokenizes
-    val tf = VectorOps.shared(s, s"bm25_postings:$d:${VectorOps.docsFp(d)}",
-      Seq(VectorOps.docsIn(d)))(
+    val tf = VectorOps.shared(s, "bm25_postings", Seq(VectorOps.docsIn(d)))(
       Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id", "w").agg(count(lit(1)).as("tf")))

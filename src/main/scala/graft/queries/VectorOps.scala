@@ -5,10 +5,6 @@ import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import graft.{Memo, Tables}
 
-/** A durable-key prefix shared by one family's artifacts, and the input files
-  * those artifacts are built from (their memo inputs). */
-private[graft] final case class StoreKey(key: String, inputs: Seq[String])
-
 /** Similarity search + near-dedup over embeddings and documents.
   *
   * Scale shapes:
@@ -33,11 +29,10 @@ object VectorOps {
   /** Bounded index-build sample (4096 vectors, ~2 MB) of `emb`, shared by
     * the IVF and PQ codebook trainings: one driver-side sample job per
     * dataset instead of one per registered query (topk and its recall gate
-    * used to re-run it). `tag` names which frame of the dataset `emb` is. */
-  private def indexSample(s: SparkSession, emb: DataFrame, tag: String,
-      inputs: Seq[String]): Array[Array[Double]] =
-    Memo.value(s, "index_sample", inputs, memoName(tag, inputs))(
-      sampleOf(Memo.declared(inputs)(emb)))
+    * used to re-run it). `params` name which frame of the dataset `emb` is. */
+  private def indexSample(s: SparkSession, emb: DataFrame, inputs: Seq[String],
+      params: Any*): Array[Array[Double]] =
+    Memo.value(s, "index_sample", inputs, params: _*)(sampleOf(Memo.declared(inputs)(emb)))
   private def sampleOf(emb: DataFrame): Array[Array[Double]] =
     emb.orderBy("vec_id").limit(4096).select("e").collect().map(_.getSeq[Double](0).toArray)
 
@@ -46,25 +41,15 @@ object VectorOps {
     * written to parquet once per (dataset, params, format-version) and any
     * later session (or a second job) reads them back instead of re-encoding
     * the corpus. Rebuild-on-missing; the format version in the path
-    * invalidates old layouts when the index schema changes. Disabled via
+    * invalidates old layouts when the index schema or the key changes
+    * (2: keys and manifests derived from [[StoreKey]]). Disabled via
     * SPARK_GRAFT_NO_INDEX_STORE=1 (tests that mutate build logic). */
-  private[queries] val IndexFormatVersion = 1
+  private[queries] val IndexFormatVersion = 2
 
-  /** The source file of every embeddings-derived artifact, and its
-    * fingerprint as the durable keys embed it: a regenerated dataset at the
-    * SAME path (the driver rewrites testdata per round) can never hit a
-    * stale durable index. Recomputed per call — a directory listing. */
+  /** The source file of every embeddings-derived artifact. */
   private[graft] def embIn(d: String): String = s"$d/embeddings.parquet"
-  private[graft] def dataFp(d: String): String = Memo.fp(embIn(d))
-  /** Same over documents.parquet — keys the text-derived artifacts. */
+  /** Same over documents.parquet — the text-derived artifacts' input. */
   private[queries] def docsIn(d: String): String = s"$d/documents.parquet"
-  private[queries] def docsFp(d: String): String = Memo.fp(docsIn(d))
-  /** The `dir:fingerprint` prefix of `d`'s embeddings-derived durable keys,
-    * and of its text-derived ones (plus `suffix`). */
-  private[queries] def embKey(d: String): StoreKey =
-    StoreKey(s"$d:${dataFp(d)}", Seq(embIn(d)))
-  private[queries] def docsKey(d: String, suffix: String = ""): StoreKey =
-    StoreKey(s"$d:${docsFp(d)}$suffix", Seq(docsIn(d)))
 
   /** Per-key JVM-local build monitors, lazily striped by artifact path.
     * In-process builders of ONE key must serialize here because JVM file
@@ -99,13 +84,15 @@ object VectorOps {
   private[graft] val storeBuildCount = new java.util.concurrent.atomic.AtomicLong
   private[graft] val storeReuseCount = new java.util.concurrent.atomic.AtomicLong
 
-  private[queries] def durable(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    Memo.storeRoot match {
-      case None => build
-      case Some(root) => durableAt(s, root, key)(build)
-    }
+  /** `build`, written once to the durable store under the key that
+    * [[StoreKey]] derives from `name`, `inputs` and `params`, and read back
+    * from there; the bare build when the store is off. */
+  private[queries] def durable(s: SparkSession, name: String, inputs: Seq[String],
+      params: Any*)(build: => DataFrame): DataFrame =
+    durablePartitioned(s, Nil, name, inputs, params: _*)(build)
 
-  /** [[durable]] with a PARTITIONED on-disk layout and NO session persist:
+  /** [[durable]] with a PARTITIONED on-disk layout (none when `partCols` is
+    * empty) and NO session persist:
     * the artifact is written `partitionBy(partCols)` (hash-bucket columns
     * the caller computes), so a later probe that filters on those columns
     * PRUNES to the touched partition directories instead of scanning the
@@ -115,25 +102,25 @@ object VectorOps {
     * a `.persist()` on top of the parquet read would turn the probe into an
     * InMemoryTableScan and the disk-level partition pruning would never
     * happen. Reads back with the partition columns (directory-encoded). */
-  private[queries] def durablePartitioned(s: SparkSession, key: String,
-      partCols: Seq[String])(build: => DataFrame): DataFrame =
+  private[queries] def durablePartitioned(s: SparkSession, partCols: Seq[String],
+      name: String, inputs: Seq[String], params: Any*)(build: => DataFrame): DataFrame =
     Memo.storeRoot match {
       case None => build
-      case Some(root) => durableAt(s, root, key, partCols)(build)
+      case Some(root) => durableAt(s, root, StoreKey(name, inputs, params: _*), partCols)(build)
     }
 
   /** Root-parameterized store write/read — the body of [[durable]], also
     * used directly by the vacuum gate entry against its own throwaway
     * root (so the gate certifies the verb without touching the session's
-    * real store and independent of SPARK_GRAFT_NO_INDEX_STORE). */
-  private[queries] def durableAt(s: SparkSession, root: String, key: String,
+    * real store and independent of SPARK_GRAFT_NO_INDEX_STORE). The
+    * artifact lives at `v<IndexFormatVersion>/<key.dirName>`; a build is
+    * checked against `key.inputs` ([[Memo.declared]]) before it is written,
+    * since a key is only as good as its declared inputs. */
+  private[queries] def durableAt(s: SparkSession, root: String, key: StoreKey,
       partCols: Seq[String] = Nil)(
       build: => DataFrame): DataFrame = {
-        val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
-        // short digest disambiguates keys that sanitize to the same name
-        val digest = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(key).toLong & 0xffffffffL)
-        val name = s"${safe}_$digest"
+        val manifest = key.manifest
+        val name = key.dirName(manifest)
         val vroot = new java.io.File(s"$root/v$IndexFormatVersion")
         val path = s"${vroot.getPath}/$name"
         // Per-KEY JVM-local monitor (serializes this process's builders of
@@ -146,33 +133,22 @@ object VectorOps {
         // JVM overlap freely (IndexStoreSpec pins it).
         storeLockFor(path).synchronized {
           val built = StorePublish.buildOnce(vroot, name) { tmp =>
-            if (partCols.isEmpty) build.write.mode("overwrite").parquet(tmp.getPath)
+            val df = Memo.declared(key.inputs)(build)
+            if (partCols.isEmpty) df.write.mode("overwrite").parquet(tmp.getPath)
             else
               // one exchange on the bucket columns before the partitioned
               // write: without it every task writes a file per bucket it
               // holds (tasks x buckets small files); with it each bucket
               // lands wholly inside one task's output
-              build.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
+              df.repartition(partCols.map(org.apache.spark.sql.functions.col): _*)
                 .write.partitionBy(partCols: _*).mode("overwrite").parquet(tmp.getPath)
-            // key manifest for vacuumStore: records WHICH (dataset, fp)
-            // this artifact was keyed to, since the sanitized dir name is
-            // not reliably parseable back. Underscore prefix = invisible
-            // to the parquet reader, like _SUCCESS. `parts` are the key's
-            // ':'-separated components recorded AT BUILD TIME — every call
-            // site embeds the dataset dir and its fingerprint as whole
-            // components, so vacuum's liveness test is exact component
-            // equality, never substring containment (a liveDir
-            // '/data/sf0.1' must not match a key for '/data/sf0.12', and
-            // an 8-hex fingerprint must not match inside another
-            // component). Written INSIDE the temp dir, pre-publish: the
-            // data, its committer marker, and the vacuum manifest become
-            // visible in one rename, so the data-committed-manifest-pending
-            // window a concurrent vacuum had to tolerate no longer exists
-            // for new artifacts (vacuum stays conservative for legacy ones).
+            // the key manifest for vacuumStore: the inputs and fingerprints
+            // this artifact was built from. Underscore prefix = invisible
+            // to the parquet reader, like _SUCCESS. Written INSIDE the temp
+            // dir, pre-publish: the data, its committer marker and the
+            // manifest become visible in one rename.
             try java.nio.file.Files.writeString(
-              java.nio.file.Paths.get(tmp.getPath, "_graft_key.json"),
-              s"""{"key": ${graft.Json.str(key)}, "parts": ${
-                key.split(':').toSeq.map(graft.Json.str).mkString("[", ", ", "]")}}""")
+              java.nio.file.Paths.get(tmp.getPath, "_graft_key.json"), manifest)
             catch { case scala.util.control.NonFatal(_) => () }
           }
           if (built) {
@@ -191,18 +167,16 @@ object VectorOps {
     }
 
   /** Store GC — the eviction verb of the durable artifact store. Artifacts
-    * accumulate one dir per (dataset path, fingerprint, params); every
+    * accumulate one dir per (name, params, input fingerprints); every
     * regeneration of a dataset (the driver rewrites testdata per round; a
     * production warehouse re-ingests) strands the previous fingerprint's
-    * index files forever. Vacuum drops every artifact whose key manifest
-    * names a dataset that is NOT live anymore — either the path is not in
-    * `liveDirs` or its recorded fingerprint no longer matches the CURRENT
-    * content fingerprint of any key-bearing file in that dataset (the same
-    * name|size|mtime fingerprint the keys embed, recomputed fresh).
-    * Conservative by construction: artifacts without a manifest (written
-    * by older builds, or non-dataset test keys) are left untouched and
-    * reported, never deleted. Returns one
-    * (artifact, action) row per store entry: kept | dropped | kept_no_meta.
+    * index files forever. Vacuum keeps an artifact iff its key manifest's
+    * inputs all lie under `liveDirs` and still have their recorded
+    * fingerprints ([[StoreKey.live]]), and drops the rest. Conservative by
+    * construction: artifacts without a manifest are left untouched and
+    * reported, never deleted. Returns one (artifact, action) row per store
+    * entry: kept | dropped | kept_no_meta, and for in-flight temp dirs
+    * dropped_stale_tmp | kept_building.
     */
   private[graft] def vacuumStore(liveDirs: Seq[String]): Seq[(String, String)] =
     Memo.storeRoot match {
@@ -226,18 +200,6 @@ object VectorOps {
         // the OS on process death). Probe errs toward "held" → spared.
         val tmps = all.filter(f => f.isDirectory && f.getName.startsWith(".tmp_"))
           .sortBy(_.getName)
-        // fresh fingerprints of every child a key can embed (embeddings,
-        // documents — plus the rest of the dir for future key shapes).
-        // Children are files OR directories: Spark-written datasets are
-        // parquet DIRECTORIES (the production shape; Memo.fp handles both),
-        // and filtering to plain files left liveTags empty for exactly
-        // that layout — every artifact keyed to a live Spark-written
-        // dataset failed the fingerprint match and was deleted.
-        val liveTags: Map[String, Set[String]] = liveDirs.map { d =>
-          val children = Option(new java.io.File(d).listFiles())
-            .getOrElse(Array.empty)
-          d -> children.map(f => Memo.fp(f.getPath)).toSet
-        }.toMap
         vacuumLock.synchronized {
           val tmpReport = tmps.toSeq.map { t =>
             StorePublish.tmpOwner(t.getName) match {
@@ -250,35 +212,11 @@ object VectorOps {
           tmpReport ++ arts.toSeq.map { art =>
             val metaPath = java.nio.file.Paths.get(s"${art.getPath}/_graft_key.json")
             if (!java.nio.file.Files.exists(metaPath)) art.getName -> "kept_no_meta"
+            else if (StoreKey.live(java.nio.file.Files.readString(metaPath), liveDirs))
+              art.getName -> "kept"
             else {
-              // exact-match liveness: the build-time `parts` components
-              // (manifests from before the field carried it fall back to
-              // re-splitting the stored key — same grammar) must contain
-              // the live dataset DIR and one of its CURRENT fingerprints
-              // as whole components. Substring containment is wrong in
-              // both directions: path-prefix collisions ('/data/sf0.1'
-              // inside a '/data/sf0.12' key) and a fingerprint's 8 hex
-              // chars appearing inside an unrelated component.
-              val fields = org.json4s.jackson.JsonMethods
-                .parse(java.nio.file.Files.readString(metaPath)) match {
-                case org.json4s.JObject(fs) => fs.toMap
-                case _ => Map.empty[String, org.json4s.JValue]
-              }
-              val parts: Set[String] = fields.get("parts") match {
-                case Some(org.json4s.JArray(vs)) =>
-                  vs.collect { case org.json4s.JString(v) => v }.toSet
-                case _ => fields.get("key") match {
-                  case Some(org.json4s.JString(k)) => k.split(':').toSet
-                  case _ => Set.empty
-                }
-              }
-              val live = liveDirs.exists(d =>
-                parts.contains(d) && liveTags(d).exists(parts.contains))
-              if (live) art.getName -> "kept"
-              else {
-                new scala.reflect.io.Directory(art).deleteRecursively()
-                art.getName -> "dropped"
-              }
+              new scala.reflect.io.Directory(art).deleteRecursively()
+              art.getName -> "dropped"
             }
           }
         }
@@ -290,12 +228,12 @@ object VectorOps {
     * persisted once per session, so a topk query and its recall gate share
     * one encoding of the corpus. The per-query SCORING scans stay un-cached
     * so bench times keep measuring real query execution. `inputs` are the
-    * files `build` reads; the build is checked against them before its
-    * store write. */
-  private[queries] def shared(s: SparkSession, key: String, inputs: Seq[String])(
-      build: => DataFrame): DataFrame =
-    Memo.frame(s, memoName(key, inputs), inputs)(
-      durable(s, key)(Memo.declared(inputs)(build)))
+    * files `build` reads; the session memo and the store both key on
+    * (`name`, `params`, `inputs`), and the build is checked against the
+    * inputs before its store write. */
+  private[queries] def shared(s: SparkSession, name: String, inputs: Seq[String],
+      params: Any*)(build: => DataFrame): DataFrame =
+    Memo.frame(s, name, inputs, params: _*)(durable(s, name, inputs, params: _*)(build))
 
   /** Session-scoped persist WITHOUT the durable layer: for frames that are
     * recomputed per session by CONTRACT (the BM25 append entry's
@@ -303,30 +241,33 @@ object VectorOps {
     * re-weight work the entry measures across fresh-JVM runs) but are
     * consumed by several subplans of one query family, where plain
     * laziness would recompute the build once per exchange. */
-  private[queries] def sharedLocal(s: SparkSession, key: String, inputs: Seq[String])(
-      build: => DataFrame): DataFrame =
-    Memo.frame(s, key, inputs)(build)
+  private[queries] def sharedLocal(s: SparkSession, name: String, inputs: Seq[String],
+      params: Any*)(build: => DataFrame): DataFrame =
+    Memo.frame(s, name, inputs, params: _*)(build)
 
-  /** `key` with each ':'-component that is an input's current fingerprint
-    * masked: durable keys embed their inputs' fingerprints as whole
-    * components (the store outlives the session), but the memo tracks the
-    * fingerprint itself, so a regenerated input supersedes its entry
-    * instead of adding one. */
-  private def memoName(key: String, inputs: Seq[String]): String = {
-    val fps = inputs.map(Memo.fp).toSet
-    key.split(":", -1).map(c => if (fps(c)) "*" else c).mkString(":")
-  }
+  /** `build` as the artifact `name` of the family `key` (an append path's
+    * base tables): [[shared]] under the family's inputs, with its name and
+    * params ahead of `params`, or [[durablePartitioned]] by `partCols` when
+    * they are given; the bare build when `key` is None (spec use). */
+  private[queries] def keep(s: SparkSession, key: Option[StoreKey], name: String,
+      params: Seq[Any] = Nil, partCols: Seq[String] = Nil)(build: => DataFrame): DataFrame =
+    key.fold(build) { k =>
+      val ps = (k.name +: k.params) ++ params
+      if (partCols.isEmpty) shared(s, name, k.inputs, ps: _*)(build)
+      else durablePartitioned(s, partCols, name, k.inputs, ps: _*)(build)
+    }
 
   /** Driver-green certificate for the store's GC verb — the fourth index
     * lifecycle verb made driver-visible (create = ann_index_store_gate,
     * append = ann_ivf_append_topk, delete = ann_ivf_delete_topk, vacuum =
     * here; it was spec-only before). Against a THROWAWAY root (never the
     * session's real store), build four artifacts spanning the contract's
-    * cases — live-keyed (current dataset dir + current fingerprint),
-    * stale-fingerprint, gone-dataset, and manifest-less — run the vacuum,
-    * and certify: exactly the live artifact kept, exactly the stale+gone
-    * pair dropped (and gone from disk), the manifest-less one spared
-    * conservatively, and the survivor still readable with NO rebuild.
+    * cases — live (the dataset's embeddings, unchanged), stale (a
+    * throwaway live file rewritten after the build), gone (a file outside
+    * every live dir), and manifest-less — run the vacuum, and certify:
+    * exactly the live artifact kept, exactly the stale+gone pair dropped
+    * (and gone from disk), the manifest-less one spared conservatively,
+    * and the survivor still readable with NO rebuild.
     * Store work happens at plan-build (the gate convention: Bench times
     * execution only); the emitted row is data-independent, so the oracle
     * states it as constants and any GC regression — deleting a live
@@ -336,24 +277,30 @@ object VectorOps {
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_vacgate").toString
     try {
-      val fp = dataFp(d)
-      def art(key: String): Unit =
+      val Seq(scratch, gone) = Seq("ds", "gone").map { sub =>
+        val f = java.nio.file.Paths.get(root, sub, "t")
+        java.nio.file.Files.createDirectories(f.getParent)
+        java.nio.file.Files.writeString(f, "a")
+      }
+      def art(key: StoreKey): Unit =
         durableAt(s, root, key)(s.range(1).toDF("id")).count()
-      art(s"vacgate_live:$d:$fp")
-      art(s"vacgate_stale:$d:00000000")
-      art(s"vacgate_gone:/graft/no/such/ds:$fp")
-      art(s"vacgate_nometa:$d:$fp")
+      val live = StoreKey("vacgate_live", Seq(embIn(d)))
+      art(live)
+      art(StoreKey("vacgate_stale", Seq(scratch.toString)))
+      art(StoreKey("vacgate_gone", Seq(gone.toString)))
+      art(StoreKey("vacgate_nometa", Seq(embIn(d))))
+      java.nio.file.Files.writeString(scratch, "bb") // a new size: a new fingerprint
       val vdir = new java.io.File(s"$root/v$IndexFormatVersion")
       vdir.listFiles().filter(_.getName.startsWith("vacgate_nometa")).foreach {
         a => java.nio.file.Files.deleteIfExists(
           java.nio.file.Paths.get(a.getPath, "_graft_key.json"))
       }
-      val report = vacuumAt(root, Seq(d))
+      val report = vacuumAt(root, Seq(d, scratch.getParent.toString))
       def n(action: String): Long = report.count(_._2 == action).toLong
       val droppedGone = !vdir.listFiles().exists(a =>
         a.getName.startsWith("vacgate_stale") || a.getName.startsWith("vacgate_gone"))
       val survivorOk = // reads back from parquet; the thunk must NOT run
-        durableAt(s, root, s"vacgate_live:$d:$fp")(
+        durableAt(s, root, live)(
           sys.error("vacuum gate: live artifact was rebuilt")).count() == 1
       val ok = report.size == 4 && droppedGone && survivorOk &&
         report.toMap.get(vdir.listFiles()
@@ -569,7 +516,7 @@ object VectorOps {
   /** The exact top-1 baseline every ANN recall gate compares against, as a
     * stored artifact shared by the gates. */
   private def storedTop1(s: SparkSession, d: String): DataFrame =
-    shared(s, s"bf_top1:$d:${dataFp(d)}", Seq(embIn(d)))(bruteForceTopK(embOf(s, d), 1))
+    shared(s, "bf_top1", Seq(embIn(d)))(bruteForceTopK(embOf(s, d), 1))
 
   /** RRF fusion of the cosine and BM25 top-20s, UNORDERED (see the
     * registry comment at `sim_rrf_topk`); the ordered entry and the swap
@@ -658,9 +605,9 @@ object VectorOps {
     // compute their full ordered rankings from scratch). The sampled swap
     // certificate (qmod=500) keeps its own unshared path.
     val ins = Seq(docsIn(d), embIn(d))
-    val ex = sharedLocal(s, s"swap_pairs_exact:$d", ins)(
+    val ex = sharedLocal(s, "swap_pairs_exact", ins)(
       rrfFused(s, d).select(col("qid"), col("nid")))
-    val an = sharedLocal(s, s"swap_pairs_ann:$d", ins)(
+    val an = sharedLocal(s, "swap_pairs_ann", ins)(
       rrfAnnFused(s, d).select(col("qid"), col("nid")))
     val common = ex.join(an, Seq("qid", "nid"))
       .groupBy("qid").agg(count(lit(1)).as("cnt"))
@@ -785,7 +732,7 @@ object VectorOps {
       d: String): DataFrame = {
     // The signature table is the LSH index artifact: computed once per
     // dataset, shared between topk and its recall gate.
-    val sigs = shared(s, s"lsh_sigs:$d:${dataFp(d)}", Seq(embIn(d)))(
+    val sigs = shared(s, "lsh_sigs", Seq(embIn(d)))(
       lshSignatures(s, emb, kBits = 5, nTables = 24, seed = 42L))
     // Same query set as the brute-force baseline; LSH prunes the corpus
     // side to bucket collisions instead of scanning all n per query.
@@ -867,9 +814,9 @@ object VectorOps {
   private[graft] def ivfIndexHandle(s: SparkSession, d: String,
       k: Int): (DataFrame, Array[Array[Double]]) = {
     val emb = embOf(s, d)
-    val sample = indexSample(s, emb, d, Seq(embIn(d)))
+    val sample = indexSample(s, emb, Seq(embIn(d)))
     val centers = lloyd(sample, k, iters = 10)
-    val inverted = shared(s, s"ivf_inverted:$d:${dataFp(d)}:$k", Seq(embIn(d)))(
+    val inverted = shared(s, "ivf_inverted", Seq(embIn(d)), k)(
       withNorm(emb).withColumn("cell", ivfAssignUdf(centers)(col("e")))
         .select(col("vec_id"), col("cell"), col("e"), col("nrm")))
     (inverted, centers)
@@ -959,10 +906,10 @@ object VectorOps {
     val emb = embOf(s, d)
     val base = emb.filter(col("vec_id") % 5 =!= 4)
     val delta = emb.filter(col("vec_id") % 5 === 4)
-    val sample = indexSample(s, base, s"$d#ivfbase", Seq(embIn(d)))
+    val sample = indexSample(s, base, Seq(embIn(d)), "ivfbase")
     val centers = lloyd(sample, k, iters = 10)
     def encode(part: DataFrame, name: String): DataFrame =
-      shared(s, s"ivf_append_$name:$d:${dataFp(d)}:$k", Seq(embIn(d)))(
+      shared(s, s"ivf_append_$name", Seq(embIn(d)), k)(
         withNorm(part).withColumn("cell", ivfAssignUdf(centers)(col("e")))
           .select(col("vec_id"), col("cell"), col("e"), col("nrm")))
     val inverted = encode(base, "base").unionByName(encode(delta, "delta"))
@@ -993,36 +940,34 @@ object VectorOps {
     // maintenance verb on the existing store, not a parallel index
     val (inverted, centers) = ivfIndexHandle(s, d, k)
     val live = ivfLive(s, inverted, col("vec_id") % 7 === 3,
-      key = StoreKey(s"$d:${dataFp(d)}:$k", Seq(embIn(d))), compactAt = 0.1)
+      key = StoreKey("ivf", Seq(embIn(d)), k), compactAt = 0.1)
     ivfQueryTopK(live, centers, nProbe, topK)
   }
 
   /** Tombstone/compaction core, factored for the spec: returns the LIVE
     * view of `inverted` under `deleted`, compacting the durable store when
-    * the tombstone ratio exceeds `compactAt`. The delete predicate and the
-    * threshold are FOLDED INTO the artifact keys (as the predicate's SQL
-    * text): two callers sharing a dataset key but deleting under different
+    * the tombstone ratio exceeds `compactAt`. The delete predicate (as its
+    * SQL text) and the threshold are params of every artifact key beside
+    * `key`'s own: two callers sharing a dataset key but deleting under different
     * predicates — or compacting at different ratios — must never reuse each
     * other's tombstone/compacted files. The compact-or-not DECISION is
-    * memoized per full key alongside the artifacts, so repeat calls (a
+    * memoized under the same identity, so repeat calls (a
     * median-of-3 bench, a topk + its gate) don't re-run the two ratio
     * count() jobs once the verdict is known. */
   private[queries] def ivfLive(s: SparkSession, inverted: DataFrame,
       deleted: Column, key: StoreKey, compactAt: Double): DataFrame = {
     // Column#toString is the expression's stable SQL-ish rendering —
-    // deterministic for the literal predicates the callers pass; `durable`
-    // sanitizes + digests it into the on-disk path
-    val fullKey = s"${key.key}:del=${deleted.toString()}:at=$compactAt"
-    val ins = key.inputs
-    val tombs = shared(s, s"ivf_tombstones:$fullKey", ins)(
+    // deterministic for the literal predicates the callers pass
+    val ps = Seq(deleted.toString(), compactAt)
+    val tombs = keep(s, Some(key), "ivf_tombstones", ps)(
       inverted.filter(deleted).select(col("vec_id")))
-    val compact = Memo.value(s, "ivf_compact", ins, memoName(fullKey, ins)) {
+    val compact = Memo.value(s, "ivf_compact", key.inputs, (key.name +: key.params) ++ ps: _*) {
       val nTomb = tombs.count()
       val nAll = inverted.count()
       nAll > 0 && nTomb.toDouble / nAll > compactAt
     }
     if (compact)
-      shared(s, s"ivf_inverted_compact:$fullKey", ins)(
+      keep(s, Some(key), "ivf_inverted_compact", ps)(
         inverted.join(tombs, Seq("vec_id"), "left_anti"))
     else
       inverted.join(tombs, Seq("vec_id"), "left_anti")
@@ -1052,7 +997,7 @@ object VectorOps {
     * keep column hash-matches bit-for-bit. */
   private[queries] def semDedup(s: SparkSession, d: String, k: Int,
       tau: Double): DataFrame =
-    semDedupOf(s, embOf(s, d), k, tau, storeKey = Some(embKey(d)))
+    semDedupOf(s, embOf(s, d), k, tau, storeKey = Some(StoreKey("semdedup", Seq(embIn(d)))))
 
   /** Core of SemDeDup over an arbitrary (vec_id, e) frame; `storeKey =
     * None` skips the sample cache and the durable cell artifact (spec use —
@@ -1060,17 +1005,14 @@ object VectorOps {
   private[graft] def semDedupOf(s: SparkSession, emb: DataFrame, k: Int,
       tau: Double, storeKey: Option[StoreKey]): DataFrame = {
     val sample = storeKey match {
-      case Some(key) => indexSample(s, emb, key.key, key.inputs)
+      case Some(key) => indexSample(s, emb, key.inputs, key.name +: key.params: _*)
       case None => sampleOf(emb)
     }
     val centers = lloyd(sample, k, iters = 10)
     // (vec_id, cell, simc, e, nrm): the cell/centroid-sim assignment is the
     // same class of durable index artifact as the IVF inverted file
     val en0 = semAssign(emb, centers)
-    val en = storeKey match {
-      case Some(key) => shared(s, s"semdedup_cells:${key.key}:$k", key.inputs)(en0)
-      case None      => en0
-    }
+    val en = keep(s, storeKey, "semdedup_cells", Seq(k))(en0)
     semVerdict(en, tau).orderBy("vec_id")
   }
 
@@ -1138,19 +1080,16 @@ object VectorOps {
     * training sample checks. */
   private[graft] def semDedupAppendOf(s: SparkSession, emb: DataFrame,
       k: Int, tau: Double, storeKey: Option[StoreKey]): DataFrame = {
-    def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(kk) => shared(s, s"$name:${kk.key}:$k:$tau", kk.inputs)(build)
-      case None     => build
-    }
     val isDelta = col("vec_id") % 5 === 4
     val base = emb.filter(!isDelta)
     val sample = storeKey match {
-      case Some(kk) => indexSample(s, base, s"${kk.key}#semddbase", kk.inputs)
+      case Some(kk) => indexSample(s, base, kk.inputs, (kk.name +: kk.params) :+ "semddbase": _*)
       case None     => sampleOf(base)
     }
     val centers = lloyd(sample, k, iters = 10)
-    val baseCells = keep("semdd_cells_base")(semAssign(base, centers))
-    val baseVerdict = keep("semdd_verdict_base")(semVerdict(baseCells, tau))
+    val baseCells = keep(s, storeKey, "semdd_cells_base", Seq(k, tau))(semAssign(base, centers))
+    val baseVerdict =
+      keep(s, storeKey, "semdd_verdict_base", Seq(k, tau))(semVerdict(baseCells, tau))
     val deltaCells = semAssign(emb.filter(isDelta), centers)
     val touched = deltaCells.select("cell").distinct()
     // untouched cells ship their stored verdict rows unchanged; touched
@@ -1173,14 +1112,14 @@ object VectorOps {
     * join stays a plain hash join on a composite key. */
   private[queries] def annIvfFilteredTopK(s: SparkSession, d: String,
       k: Int, nProbe: Int, topK: Int): DataFrame = {
-    val sample = indexSample(s, embOf(s, d), d, Seq(embIn(d)))
+    val sample = indexSample(s, embOf(s, d), Seq(embIn(d)))
     val centers = lloyd(sample, k, iters = 10)
     val embL = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("label"))
     // label-carrying inverted file: its own durable artifact (same cells as
     // the unfiltered index, plus the filterable attribute per entry)
-    val inverted = shared(s, s"ivf_inverted_flt:$d:${dataFp(d)}:$k", Seq(embIn(d)))(
+    val inverted = shared(s, "ivf_inverted_flt", Seq(embIn(d)), k)(
       withNorm(embL).withColumn("cell", ivfAssignUdf(centers)(col("e")))
         .select(col("vec_id"), col("label"), col("cell"), col("e"), col("nrm")))
     val queries = inverted.filter(col("vec_id") % 50 === 0)
@@ -1256,7 +1195,7 @@ object VectorOps {
     // report, balanced sample) consume this assignment, and inside the ANN
     // entry the frame is referenced twice (cells + probes) — without the
     // store each consumer would re-run the |corpus|x16 assignment pass.
-    val ranked = shared(s, s"anchor_ranked:$d:${dataFp(d)}", Seq(embIn(d)))(
+    val ranked = shared(s, "anchor_ranked", Seq(embIn(d)))(
       en.crossJoin(anchors)
         .select(col("vec_id"),
           col("aid"), (dot(col("e"), col("ae")) / (col("nrm") * col("an"))).as("ac"))
@@ -1331,7 +1270,7 @@ object VectorOps {
       m: Int, k: Int, topK: Int): DataFrame = {
     val dim = 64
     val sub = dim / m
-    val sample = indexSample(s, emb, d, Seq(embIn(d)))
+    val sample = indexSample(s, emb, Seq(embIn(d)))
     val books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
       lloyd(sample.map(v => v.slice(j * sub, (j + 1) * sub)), k, iters = 10)
     }
@@ -1355,7 +1294,7 @@ object VectorOps {
     val en = withNorm(emb)
     // The PQ code table is the index artifact: the corpus is encoded once
     // per (dataset, m, k) and shared between topk and its recall gate.
-    val codes = shared(s, s"pq_codes:$d:${dataFp(d)}:$m:$k", Seq(embIn(d)))(
+    val codes = shared(s, "pq_codes", Seq(embIn(d)), m, k)(
       en.withColumn("codes", assignU(col("e")))
         .select(col("vec_id").as("nid"), col("codes"), col("nrm")))
     val q = broadcast(en.filter(col("vec_id") % 50 === 0)
@@ -1449,7 +1388,7 @@ object VectorOps {
       (t1.map(_.toSeq).toSeq, t2.map(_.toSeq).toSeq)
     })
     // the byte-code table is the durable index artifact, like pq_codes
-    val codes = shared(s, s"sq_codes:$d:${dataFp(d)}", Seq(embIn(d)))(
+    val codes = shared(s, "sq_codes", Seq(embIn(d)))(
       en.withColumn("codes", encodeU(col("e")))
         .select(col("vec_id").as("nid"), col("codes")))
     val q = broadcast(en.filter(col("vec_id") % 50 === 0)
@@ -1500,7 +1439,7 @@ object VectorOps {
       kc: Int, nProbe: Int, m: Int, k: Int, topK: Int): DataFrame = {
     val dim = 64
     val sub = dim / m
-    val sample = indexSample(s, emb, d, Seq(embIn(d)))
+    val sample = indexSample(s, emb, Seq(embIn(d)))
     val centers = lloyd(sample, kc, iters = 10)
     val resSample = sample.map { v =>
       val c = centers(nearestCells(centers, v, 1).head)
@@ -1544,7 +1483,7 @@ object VectorOps {
     val en = withNorm(emb)
     // cell + residual codes per vector: the IVFADC index artifact, encoded
     // once per (dataset, params) and shared between topk and its recall gate
-    val codes = shared(s, s"ivfpq_codes:$d:${dataFp(d)}:$kc:$m:$k", Seq(embIn(d)))(
+    val codes = shared(s, "ivfpq_codes", Seq(embIn(d)), kc, m, k)(
       en.withColumn("enc", encodeU(col("e")))
         .select(col("vec_id").as("nid"), col("enc._1").as("cell"),
           col("enc._2").as("codes"), col("nrm")))
@@ -1782,7 +1721,7 @@ object VectorOps {
   private[queries] def embedCosineAppend(s: SparkSession, d: String,
       threshold: Double): DataFrame =
     embedCosineAppendOf(s, embOf(s, d), threshold,
-      storeKey = Some(embKey(d)), kBits = oracleLshBits(d))
+      storeKey = Some(StoreKey("embed_dedup", Seq(embIn(d)))), kBits = oracleLshBits(d))
 
   /** [[lshBitsFor]] with the oracle-soundness guard for the registered
     * embed-dedup entries: they are pinned to the EXACT all-pairs cosine
@@ -1811,15 +1750,11 @@ object VectorOps {
   private[queries] def embedCosineAppendOf(s: SparkSession, emb: DataFrame,
       threshold: Double, storeKey: Option[StoreKey],
       kBits: Int = 8): DataFrame = {
-    def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(k) => shared(s, s"${name}_k$kBits:${k.key}", k.inputs)(build)
-      case None    => build
-    }
     val isDelta = col("vec_id") % 5 === 4
-    val baseSigs = keep("lsh_dedup_sigs_base")(
+    val baseSigs = keep(s, storeKey, s"lsh_dedup_sigs_base_k$kBits")(
       lshSignatures(s, emb.filter(!isDelta), kBits = kBits, nTables = 24,
         seed = 7L))
-    val basePairs = keep("embed_pairs_base")(
+    val basePairs = keep(s, storeKey, s"embed_pairs_base_k$kBits")(
       cosineVerify(emb,
         baseSigs.as("x").join(baseSigs.as("y"), Seq("tbl", "bucket"))
           .filter(col("x.vec_id") < col("y.vec_id"))
@@ -2360,12 +2295,13 @@ object VectorOps {
     * connected-components resolve, the cluster histogram, PageRank triage)
     * used to each re-shingle and re-sign the whole corpus. Routed through
     * the same shared/durable artifact store as the ANN indexes — built once
-    * per (dataset, content fingerprint), persisted in-session, parquet-backed
-    * across sessions; staleness is keyed out by dataFp and correctness stays
+    * per documents fingerprint, persisted in-session, parquet-backed across
+    * sessions; the key derives from the declared documents input, so a
+    * rewritten documents table keys a new graph, and correctness stays
     * driver-checked every round (the stored pairs feed dedup_minhash_lsh,
     * whose all-pairs oracle would fail the hash on any store corruption). */
   private[queries] def minhashPairs(s: SparkSession, d: String): DataFrame =
-    shared(s, s"minhash_pairs:$d:${dataFp(d)}", Seq(docsIn(d)))(minhashPairsBuild(s, d))
+    shared(s, "minhash_pairs", Seq(docsIn(d)))(minhashPairsBuild(s, d))
 
   /** (doc_id, band_id, sig) MinHash band rows over word-3-gram shingles:
     * nBands bands of rowsPerBand minhashes each, from nBands*rowsPerBand
@@ -2483,16 +2419,16 @@ object VectorOps {
   private[queries] def minhashPairsAppend(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val isDelta = col("doc_id") % 5 === 4
-    val baseBands = shared(s, s"minhash_bands_base:$d:${docsFp(d)}", Seq(docsIn(d)))(
+    val baseBands = shared(s, "minhash_bands_base", Seq(docsIn(d)))(
       minhashBandRowsOf(s, docs.filter(!isDelta), nBands = 16, rowsPerBand = 4))
-    val basePairs = shared(s, s"minhash_pairs_base:$d:${docsFp(d)}", Seq(docsIn(d)))(
+    val basePairs = shared(s, "minhash_pairs_base", Seq(docsIn(d)))(
       jaccardVerify(s, d, bandSelfCandidates(baseBands)))
     // the verification FEATURE table is durable too (the containment
     // family's design): an ingest reads the base's shingle sets and
     // computes features for its delta alone — without this, the verify
     // stage re-shingled the WHOLE corpus per ingest, an O(corpus) pass
     // hiding inside an O(delta) operation
-    val baseSets = shared(s, s"minhash_sets_base:$d:${docsFp(d)}", Seq(docsIn(d)))(
+    val baseSets = shared(s, "minhash_sets_base", Seq(docsIn(d)))(
       shingleSetsOf(docs.filter(!isDelta)))
     val allSets = baseSets.unionByName(shingleSetsOf(docs.filter(isDelta)))
     val deltaBands =
@@ -2568,21 +2504,17 @@ object VectorOps {
   private[queries] def containmentAppendOf(s: SparkSession, docs: DataFrame,
       storeKey: Option[StoreKey]): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    def keep(name: String)(build: => DataFrame): DataFrame = storeKey match {
-      case Some(kk) => shared(s, s"$name:${kk.key}", kk.inputs)(build)
-      case None     => build
-    }
     val isDelta = col("doc_id") % 5 === 4
-    val tBase = keep("contain_sets_base")(shingleHashSets(docs.filter(!isDelta)))
-    val dfBase = keep("contain_df_base")(
+    val tBase = keep(s, storeKey, "contain_sets_base")(shingleHashSets(docs.filter(!isDelta)))
+    val dfBase = keep(s, storeKey, "contain_df_base")(
       tBase.select(explode(col("w")).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("df")))
-    val prefBase = keep("contain_pref_base")(containPrefix(tBase, dfBase))
+    val prefBase = keep(s, storeKey, "contain_pref_base")(containPrefix(tBase, dfBase))
     // postings re-derive from the stored sets (one cheap explode) —
     // storing them would duplicate the sets at shingle granularity
     val postBase = tBase.select(col("doc_id").as("id_b"),
       explode(col("w")).as("tok"))
-    val basePairs = keep("contain_pairs_base")(
+    val basePairs = keep(s, storeKey, "contain_pairs_base")(
       containVerify(tBase,
         prefBase.as("x").join(postBase,
             col("x.tok") === postBase("tok") &&
@@ -2685,7 +2617,7 @@ object VectorOps {
     // recomputes exact containment on candidates, the result is
     // hash-equal to the full rebuild — which IS the oracle.
     "dedup_containment_append" -> ((s, d) => containmentAppendOf(s,
-      Tables.documents(s, d), storeKey = Some(docsKey(d)))
+      Tables.documents(s, d), storeKey = Some(StoreKey("containment", Seq(docsIn(d)))))
       .orderBy("id_a", "id_b")),
 
     // ---- IVF ANN: coarse k-means quantizer, probe nearest cells ----
@@ -2807,7 +2739,7 @@ object VectorOps {
     // ---- driver-green recall gate for ann_ivf_filtered_topk (floor 0.5) ----
     "ann_ivf_filtered_recall_gate" -> ((s, d) =>
       recallGate(
-        shared(s, s"bf_filt_top1:$d:${dataFp(d)}", Seq(embIn(d)))(filteredExactTopK(s, d, 1)),
+        shared(s, "bf_filt_top1", Seq(embIn(d)))(filteredExactTopK(s, d, 1)),
         annIvfFilteredTopK(s, d, k = 16, nProbe = 8, topK = 3), floor = 0.5)),
 
     // ---- filtered ANN, deterministic anchored quantizer: EXACT oracle ----
@@ -2997,7 +2929,7 @@ object VectorOps {
     // ---- driver-green durability gate for the ANN index store ----
     // The brute-force top-1 baseline is an index artifact like any other:
     // it round-trips through the durable parquet store (rebuild-on-missing,
-    // keyed by dataset fingerprint + params + format version). The gate
+    // keyed by its declared inputs' fingerprints + params + format version). The gate
     // joins the STORED artifact (read back from parquet) against an
     // independent FRESH computation row-by-row; any loss of fidelity in the
     // store — truncated write, stale fingerprint hit, schema drift across
@@ -3064,7 +2996,7 @@ object VectorOps {
     // same base-trained codebook (the oracle restricts Lloyd's sample to
     // the base slice and verdicts the whole corpus).
     "dedup_semdedup_append" -> ((s, d) => semDedupAppendOf(s, embOf(s, d),
-      k = 16, tau = 0.45, storeKey = Some(embKey(d)))),
+      k = 16, tau = 0.45, storeKey = Some(StoreKey("semdedup", Seq(embIn(d)))))),
 
     // ---- the append verb AT the scale-right k ----
     // dedup_semdedup_append's touched-cell locality only pays off when k
@@ -3074,7 +3006,7 @@ object VectorOps {
     // stored verdicts ship verbatim. Same exact oracle, Lloyd sample
     // restricted to the base slice.
     "dedup_semdedup_scaled_append" -> ((s, d) => semDedupAppendOf(s,
-      embOf(s, d), k = 64, tau = 0.45, storeKey = Some(embKey(d)))),
+      embOf(s, d), k = 64, tau = 0.45, storeKey = Some(StoreKey("semdedup", Seq(embIn(d)))))),
 
     // ---- incremental embedding near-dup: delta-only signing vs base ----
     "dedup_embed_append" -> ((s, d) =>

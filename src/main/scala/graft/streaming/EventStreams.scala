@@ -7,7 +7,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Structured Streaming surface over the `events` schema.
   *
@@ -46,7 +46,7 @@ object EventStreams {
     * schema is [[graft.Tables.parquetSchema]]'s, inferred once per session
     * for each (dir, opts) and again when the dir's files change. */
   private def openEventsStream(s: SparkSession, dir: String,
-      opts: Map[String, String] = Map.empty): DataFrame = {
+      opts: Map[String, String]): DataFrame = {
     val df = s.readStream.schema(graft.Tables.parquetSchema(s, dir, opts))
       .options(opts).parquet(dir)
     df.schema("ts").dataType match {
@@ -65,11 +65,12 @@ object EventStreams {
     }
   }
 
-  /** Open a staged non-events dir as a one-file-per-micro-batch stream, its
-    * schema read from the staged files. */
-  private def openStaged(s: SparkSession, dir: Path): DataFrame =
-    s.readStream.schema(s.read.parquet(dir.toString).schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+  /** Open a staged dir as a one-file-per-micro-batch stream, with the
+    * `schema` [[stage]] returned for it: the staged frames' own, so the open
+    * reads no footer and memoizes nothing under a dir the drain deletes.
+    * Staged events already carry ts as TimestampType (see [[staged]]). */
+  private def openStaged(s: SparkSession, dir: Path, schema: StructType): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir.toString)
 
   /** Write `part` as a SINGLE parquet file named `name` inside `tmp`. Staged
     * frames carry ts as TimestampType (the openEventsStream no-conversion
@@ -92,9 +93,10 @@ object EventStreams {
     * file each, and pin the i-th file's mtime to 1000000 + (first + i)·60000
     * ms: the file source takes files oldest-first, so this order IS the
     * micro-batch order. A frame passed again (the same reference) is a
-    * replay: its earlier file is copied, not re-written. Returns `dir`. */
+    * replay: its earlier file is copied, not re-written. Returns the staged
+    * files' schema, the first frame's (every batch of a dir shares it). */
   private[streaming] def stage(dir: Path, batches: Seq[(String, DataFrame)],
-      first: Int = 0): Path = {
+      first: Int = 0): StructType = {
     batches.zipWithIndex.foreach { case ((name, part), i) =>
       batches.take(i).find(_._2 eq part) match {
         case Some((earlier, _)) => Files.copy(dir.resolve(earlier), dir.resolve(name))
@@ -103,7 +105,7 @@ object EventStreams {
       Files.setLastModifiedTime(dir.resolve(name),
         FileTime.fromMillis(1000000L + (first + i) * 60000L))
     }
-    dir
+    batches.head._2.schema
   }
 
   /** Run `query` to completion (Trigger.AvailableNow) into the memory sink
@@ -216,10 +218,6 @@ object EventStreams {
           .toDF("event_id", "user_id", "ts", "event_type", "value"))
       }
   }
-
-  /** Open a staged events dir, one file per micro-batch. */
-  private def openStagedEvents(s: SparkSession, dir: Path): DataFrame =
-    openEventsStream(s, dir.toString, Map("maxFilesPerTrigger" -> "1"))
 
   /** Tumbling event-time window counts per event type; late data beyond the
     * watermark is dropped, so state per (window, type) is finite. */
@@ -356,9 +354,9 @@ object EventStreams {
     import s.implicits._
     val tmp = newStaging("graft_stream_sess")
     drain("graft_stream_sessions", OutputMode.Append(), Some(tmp)) {
-      stage(tmp, ("a_events.parquet" -> stagedEvents(s, d)) +:
+      val schema = stage(tmp, ("a_events.parquet" -> stagedEvents(s, d)) +:
         sentinels(s, 2, -1L -> "sentinel"))
-      sessionize(openStagedEvents(s, tmp).as[Event], gapMinutes = 30,
+      sessionize(openStaged(s, tmp, schema).as[Event], gapMinutes = 30,
         watermark = "1 hour").toDF()
     }.filter(col("user_id") >= 0)
       .select(col("user_id"), col("session_start"), col("session_end"),
@@ -381,8 +379,8 @@ object EventStreams {
     val tmp = newStaging("graft_stream_dedup")
     drain("graft_stream_dedup", OutputMode.Append(), Some(tmp)) {
       val events = stagedEvents(s, d)
-      stage(tmp, Seq("a_events.parquet" -> events, "b_replay.parquet" -> events))
-      dedupStream(openStagedEvents(s, tmp), watermark = "36500 days")
+      val schema = stage(tmp, Seq("a_events.parquet" -> events, "b_replay.parquet" -> events))
+      dedupStream(openStaged(s, tmp, schema), watermark = "36500 days")
     }.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
@@ -435,9 +433,9 @@ object EventStreams {
     // batch, so the last real unmatched rows flush one batch after the
     // first sentinel lands.
     drain("graft_stream_ijoin_outer", OutputMode.Append(), Some(tmp)) {
-      stage(tmp, ("a_events.parquet" -> stagedEvents(s, d)) +:
+      val schema = stage(tmp, ("a_events.parquet" -> stagedEvents(s, d)) +:
         sentinels(s, 3, -1L -> "click", -2L -> "purchase"))
-      def src() = openStagedEvents(s, tmp).withWatermark("ts", "30 minutes")
+      def src() = openStaged(s, tmp, schema).withWatermark("ts", "30 minutes")
       val clicks = src().filter(col("event_type") === "click").alias("l")
       val buys = src().filter(col("event_type") === "purchase").alias("r")
       clicks.join(buys,
@@ -524,9 +522,9 @@ object EventStreams {
       val mid = tsMidpoint(raw)
       // strict split: a key's batch-1 rows all precede its batch-2 rows in
       // event time, so per-key order across batches is preserved by mtime
-      stage(tmp, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid)),
+      val schema = stage(tmp, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid)),
         "b_late.parquet" -> staged(raw.filter(col("ts") >= mid))))
-      ewmaStream(openStagedEvents(s, tmp).as[Event], alpha = 0.2, beta = 0.8)
+      ewmaStream(openStaged(s, tmp, schema).as[Event], alpha = 0.2, beta = 0.8)
         .toDF("event_id", "ewma_raw")
     }.select(col("event_id"), round(col("ewma_raw"), 6).as("ewma"))
       .orderBy("event_id")
@@ -547,20 +545,20 @@ object EventStreams {
     val data = Files.createDirectories(tmp.resolve("data"))
     val ckpt = Some(tmp.resolve("checkpoint").toString)
     val raw = graft.Tables.events(s, d)
-    def agg(): DataFrame = openEventsStream(s, data.toString)
+    def agg(schema: StructType): DataFrame = openStaged(s, data, schema)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).cast("double").as("total_value"))
     drain("graft_ckpt_phase2", OutputMode.Complete(), Some(tmp), ckpt) {
       val mid = tsMidpoint(raw)
       // phase 1: only the early half exists; the query drains it and STOPS
-      stage(data, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid))))
-      drain("graft_ckpt_phase1", OutputMode.Complete(), checkpoint = ckpt)(agg())
+      val schema = stage(data, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid))))
+      drain("graft_ckpt_phase1", OutputMode.Complete(), checkpoint = ckpt)(agg(schema))
       // phase 2: the late half lands; a NEW query on the SAME checkpoint
       // resumes from the recovered state + source progress
       stage(data, Seq("b_late.parquet" -> staged(raw.filter(col("ts") >= mid))),
         first = 1)
-      agg()
+      agg(schema)
     }.orderBy("event_type")
   }
 
@@ -580,9 +578,9 @@ object EventStreams {
     drain("graft_stream_latest", OutputMode.Complete(), Some(tmp)) {
       val raw = graft.Tables.events(s, d)
       val mid = tsMidpoint(raw)
-      stage(tmp, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid)),
+      val schema = stage(tmp, Seq("a_early.parquet" -> staged(raw.filter(col("ts") < mid)),
         "b_late.parquet" -> staged(raw.filter(col("ts") >= mid))))
-      openStagedEvents(s, tmp)
+      openStaged(s, tmp, schema)
         .groupBy("user_id")
         .agg(
           max_by(struct(col("value"), col("event_type")),
@@ -685,11 +683,11 @@ object EventStreams {
       // stragglers: the day before the midpoint, odd event_ids only
       val straggler = col("ts") >= mid - dayUs && col("ts") < mid &&
         col("event_id") % 2 === 1
-      stage(tmp, Seq(
+      val schema = stage(tmp, Seq(
         "a_early.parquet" -> staged(raw.filter(col("ts") < mid && !straggler)),
         "b_late.parquet" -> staged(raw.filter(col("ts") >= mid || straggler))) ++
         sentinels(s, 2, -1L -> "sentinel"))
-      ewmaReorderedStream(openStagedEvents(s, tmp).as[Event], alpha = 0.2,
+      ewmaReorderedStream(openStaged(s, tmp, schema).as[Event], alpha = 0.2,
         beta = 0.8, watermark = "48 hours").toDF("event_id", "ewma_raw")
     }.filter(col("event_id") >= 0)
       .select(col("event_id"), round(col("ewma_raw"), 6).as("ewma"))
@@ -718,7 +716,7 @@ object EventStreams {
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
     val tmp = newStaging("graft_stream_mh")
     val pairs = drain("graft_stream_minhash", OutputMode.Append(), Some(tmp)) {
-      val src = openStaged(s, stage(tmp, Seq(
+      val src = openStaged(s, tmp, stage(tmp, Seq(
         "a_docs.parquet" -> docs.filter(col("doc_id") % 3 < 2),
         "b_docs.parquet" -> docs.filter(col("doc_id") % 3 === 2))))
       graft.queries.VectorOps
@@ -879,9 +877,9 @@ object EventStreams {
   private def ttlTs(docId: Column): Column =
     timestamp_millis(lit(TtlT0) + ttlDayOf(docId) * lit(TtlDayMs))
   /** Stage the 4 era batches + 2 sentinels of `frame` (must carry doc_id)
-    * into `dir` in event-time order; returns `dir`. */
+    * into `dir` in event-time order; returns their schema. */
   private def stageTtlSchedule(dir: Path, frame: DataFrame,
-      sentinel: Long => DataFrame): Path =
+      sentinel: Long => DataFrame): StructType =
     stage(dir, Seq(
       "b0.parquet" -> frame.filter(col("doc_id") % 4 === 0),
       "b1.parquet" -> frame.filter(col("doc_id") % 4 === 1),
@@ -907,7 +905,7 @@ object EventStreams {
         .withColumn("ts", ttlTs(col("doc_id")))
     val tmp = newStaging("graft_stream_dedup_ttl")
     drain("graft_stream_dedup_ttl", OutputMode.Append(), Some(tmp)) {
-      val src = openStaged(s, stageTtlSchedule(tmp, docs, sentinel))
+      val src = openStaged(s, tmp, stageTtlSchedule(tmp, docs, sentinel))
       digestFirstSeenTtl(src.select("doc_id", "digest", "ts"),
         watermark = "1 hour", ttlMs = 2L * TtlDayMs).toDF("doc_id", "kept")
     }.filter(col("doc_id") >= 0).orderBy("doc_id")
@@ -928,7 +926,7 @@ object EventStreams {
       Seq((id, s"sentinelword$id")).toDF("doc_id", "text")
     val tmp = newStaging("graft_stream_mh_ttl")
     val pairs = drain("graft_stream_minhash_ttl", OutputMode.Append(), Some(tmp)) {
-      val src = openStaged(s, stageTtlSchedule(tmp, docs, sentinel))
+      val src = openStaged(s, tmp, stageTtlSchedule(tmp, docs, sentinel))
       val bands = graft.queries.VectorOps
         .minhashBandRowsOf(s, src, nBands = 16, rowsPerBand = 4)
         .withColumn("ts", ttlTs(col("doc_id")))
@@ -972,7 +970,7 @@ object EventStreams {
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qn"))
     val tmp = newStaging("graft_stream_ann")
     drain("graft_stream_ann", OutputMode.Append(), Some(tmp)) {
-      val src = openStaged(s, stage(tmp, Seq(
+      val src = openStaged(s, tmp, stage(tmp, Seq(
         "a_queries.parquet" -> queries.filter(col("qid") % 100 === 0),
         "b_queries.parquet" -> queries.filter(col("qid") % 100 =!= 0))))
       val probe = graft.queries.VectorOps.ivfProbeUdf(centers, nProbe)
@@ -1023,7 +1021,7 @@ object EventStreams {
       .bm25QueryTerms(graft.Tables.documents(s, d))
     val tmp = newStaging("graft_stream_bm25")
     drain("graft_stream_bm25", OutputMode.Append(), Some(tmp)) {
-      openStaged(s, stage(tmp, Seq(
+      openStaged(s, tmp, stage(tmp, Seq(
         "a_queries.parquet" -> queries.filter(col("qid") % 100 === 0),
         "b_queries.parquet" -> queries.filter(col("qid") % 100 =!= 0))))
         .join(wgt.select(col("doc_id").as("nid"), col("w"), col("wbm")), Seq("w"))
@@ -1086,7 +1084,7 @@ object EventStreams {
     val queries = denseQ.join(termQ, Seq("qid"), "full")
     val tmp = newStaging("graft_stream_rrf")
     drain("graft_stream_rrf", OutputMode.Append(), Some(tmp)) {
-      val src = openStaged(s, stage(tmp, Seq(
+      val src = openStaged(s, tmp, stage(tmp, Seq(
         "a_queries.parquet" -> queries.filter(col("qid") % 100 === 0),
         "b_queries.parquet" -> queries.filter(col("qid") % 100 =!= 0))))
       val probe = graft.queries.VectorOps.ivfProbeUdf(centers, nProbe)
@@ -1166,7 +1164,7 @@ object EventStreams {
     val mid = docIdMidpoint(s, d)
     val tmp = newStaging("graft_stream_cur")
     drain("graft_stream_curation", OutputMode.Append(), Some(tmp)) {
-      val src = openStaged(s, stage(tmp, Seq(
+      val src = openStaged(s, tmp, stage(tmp, Seq(
         "a_docs.parquet" -> docs.filter(col("doc_id") <= mid),
         "b_docs.parquet" -> docs.filter(col("doc_id") > mid))))
       graft.queries.Curation.stagedVerdicts(src)
@@ -1208,7 +1206,7 @@ object EventStreams {
     val mid = docIdMidpoint(s, d)
     val tmp = newStaging("graft_stream_pack")
     drain("graft_stream_pack", OutputMode.Append(), Some(tmp)) {
-      openStaged(s, stage(tmp, Seq(
+      openStaged(s, tmp, stage(tmp, Seq(
         "a_docs.parquet" -> docs.filter(col("doc_id") <= mid),
         "b_docs.parquet" -> docs.filter(col("doc_id") > mid))))
         .as[(Long, String, Long)]

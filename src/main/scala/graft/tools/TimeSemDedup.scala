@@ -34,15 +34,13 @@ object TimeSemDedup {
         graft.queries.VectorOps.semDedupOf(spark, emb, k, tau = 0.45,
           storeKey = None)
       case "append" =>
-        // the store key embeds the dataset fingerprint, matching the
-        // registered entries' keying convention: a fixture regenerated
-        // between the untimed prep run and the timed run must MISS the
-        // warm store (and read as a rebuild), never silently reuse
-        // artifacts built from the old corpus as a wrong measurement
+        // the store key derives from the embeddings file's fingerprint: a
+        // fixture regenerated between the untimed prep run and the timed
+        // run MISSES the warm store (and reads as a rebuild), never
+        // silently reuses artifacts built from the old corpus
         graft.queries.VectorOps.semDedupAppendOf(spark, emb, k, tau = 0.45,
-          storeKey = Some(graft.queries.StoreKey(
-            s"probe:$d:${graft.queries.VectorOps.dataFp(d)}:$k",
-            Seq(graft.queries.VectorOps.embIn(d)))))
+          storeKey = Some(graft.queries.StoreKey("probe",
+            Seq(graft.queries.VectorOps.embIn(d)), k)))
     }
     val t0 = System.nanoTime()
     df.write.format("noop").mode("overwrite").save()

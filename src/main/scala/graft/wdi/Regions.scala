@@ -1,15 +1,12 @@
 package graft.wdi
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.broadcast
-
 /** Embedded iso3c → World Bank region dimension.
   *
   * Replaces the reference's `countrycode(origin="iso3c",
   * destination="region")` lookup (detrendandstat_quad.R:127-130). The
   * countrycode package's mapping is data, not code; we embed the subset
   * covering every country code present in the three committed inputs
-  * (62 codes) so the lookup join is total.
+  * (62 codes) so the lookup is total.
   */
 object Regions {
   val EAP = "East Asia & Pacific"
@@ -30,13 +27,5 @@ object Regions {
       "NGA", "SLE", "SOM", "SSD", "STP", "SWZ", "ZMB"
     )
     (eap.map(_ -> EAP) ++ lac.map(_ -> LAC) ++ ssa.map(_ -> SSA)).toMap
-  }
-
-  /** Tiny dimension table; always broadcast on join. */
-  def dimension(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    broadcast(
-      iso3ToRegion.toSeq.sortBy(_._1).toDF("Country Code", "Region")
-    )
   }
 }

@@ -62,7 +62,7 @@ object WdiEtl {
     *    gate — five distinct variables survive — and the pivot: a row for
     *    each year where any variable survived, the other variables' cells
     *    null there (detrendandstat_quad.R:65, 103-118);
-    *  - P6 + J2: derive C,I,X,M,TB, attach Region via broadcast lookup
+    *  - P6 + J2: derive C,I,X,M,TB, attach Region by map lookup
     *    (detrendandstat_quad.R:120-130). */
   def frontHalf(spark: SparkSession, dir: String): DataFrame = {
     val recode = seriesToVariable.foldLeft(lit(null).cast("string")) {
@@ -94,6 +94,8 @@ object WdiEtl {
       .withColumn("X", col("Y") * col("Xper") / 100)
       .withColumn("M", col("Y") * col("Mper") / 100)
       .withColumn("TB", (col("X") - col("M")) / col("Y"))
-      .join(Regions.dimension(spark), Seq("Country Code"), "left")
+      // a map lookup in the plan, so no broadcast job per pass; an unknown
+      // code gets a NULL region
+      .withColumn("Region", try_element_at(typedLit(Regions.iso3ToRegion), col("Country Code")))
   }
 }

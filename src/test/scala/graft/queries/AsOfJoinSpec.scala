@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

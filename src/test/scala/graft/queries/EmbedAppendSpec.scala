@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The driver corpus has NO cosine-0.9 near-duplicates (max pairwise
   * cosine ~0.51), so the registered dedup_embed_cosine/_append entries

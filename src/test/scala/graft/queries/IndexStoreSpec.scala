@@ -31,17 +31,17 @@ class IndexStoreSpec extends SparkSpec {
         builds += 1
         Seq((1L, "a", 1.5), (2L, "b", -2.25)).toDF("id", "tag", "v")
       }
-      val first = VectorOps.durable(s, "spec:k1")(build())
+      val first = VectorOps.durable(s, "spec:k1", Nil)(build())
       assert(builds == 1)
       assert(first.orderBy("id").as[(Long, String, Double)].collect().toSeq ==
         Seq((1L, "a", 1.5), (2L, "b", -2.25)), "round-trip must preserve values")
       // same key again: the artifact exists, so the build thunk must not run
-      val again = VectorOps.durable(s, "spec:k1")(build())
+      val again = VectorOps.durable(s, "spec:k1", Nil)(build())
       assert(builds == 1, "second consumer re-ran the index build")
       assert(again.count() == 2)
       // a DIFFERENT session (fresh cache identity) must also reuse the file
       val s2 = s.newSession()
-      val other = VectorOps.durable(s2, "spec:k1")(build())
+      val other = VectorOps.durable(s2, "spec:k1", Nil)(build())
       assert(builds == 1, "a new session re-encoded instead of reading the store")
       assert(other.count() == 2)
     }
@@ -54,15 +54,15 @@ class IndexStoreSpec extends SparkSpec {
       val df = Seq((1L, "a", 0), (2L, "b", 1), (3L, "c", 1)).toDF("id", "tag", "bkt")
       def rows(d: org.apache.spark.sql.DataFrame) =
         d.select("id", "tag", "bkt").as[(Long, String, Int)].collect().sorted.toSeq
-      val plain = VectorOps.durable(s, "spec:schema")(df)
-      val parted = VectorOps.durablePartitioned(s, "spec:schema_p", Seq("bkt"))(df)
+      val plain = VectorOps.durable(s, "spec:schema", Nil)(df)
+      val parted = VectorOps.durablePartitioned(s, Seq("bkt"), "spec:schema_p", Nil)(df)
       assert(rows(plain) == rows(df) && rows(parted) == rows(df))
       // the partition column comes back from the directory layout
       assert(parted.columns.toSeq == Seq("id", "tag", "bkt"))
       // a second read of either artifact in the session runs no footer job
       val again = jobsOf {
-        assert(VectorOps.durable(s, "spec:schema")(df).schema == plain.schema)
-        assert(VectorOps.durablePartitioned(s, "spec:schema_p", Seq("bkt"))(df).schema ==
+        assert(VectorOps.durable(s, "spec:schema", Nil)(df).schema == plain.schema)
+        assert(VectorOps.durablePartitioned(s, Seq("bkt"), "spec:schema_p", Nil)(df).schema ==
           parted.schema)
       }
       assert(again == 0, s"second read ran $again jobs")
@@ -217,38 +217,46 @@ class IndexStoreSpec extends SparkSpec {
       val s = spark.newSession()
       import s.implicits._
       val Sf = "/root/testdata/sf0.001"
-      val liveFp = graft.Memo.fp(s"$Sf/embeddings.parquet")
-      // live: the dataset path + its CURRENT fingerprint
-      VectorOps.durable(s, s"vac_live:$Sf:$liveFp")(Seq(1L).toDF("id"))
-      // stale: same dataset, a fingerprint no live file matches anymore
-      VectorOps.durable(s, s"vac_stale:$Sf:00000000")(Seq(2L).toDF("id"))
-      // gone: a dataset path not in the live list at all
-      VectorOps.durable(s, s"vac_gone:/no/such/ds:$liveFp")(Seq(3L).toDF("id"))
-      // legacy: manifest-less artifact must NEVER be deleted
-      VectorOps.durable(s, s"vac_legacy:$Sf:$liveFp")(Seq(4L).toDF("id"))
-      val root = new java.io.File(sys.props("graft.index.dir"))
-      def dirs() = root.listFiles().flatMap(d => Option(d.listFiles())
-        .getOrElse(Array.empty)).filter(_.isDirectory).map(_.getName).toSet
-      val legacy = dirs().find(_.startsWith("vac_legacy")).get
-      java.nio.file.Files.delete(java.nio.file.Paths.get(
-        root.listFiles().head.getPath, legacy, "_graft_key.json"))
+      // a writable copy of the dataset, so one input can be rewritten
+      val ds = java.nio.file.Files.createTempDirectory("graft_vac_copy")
+      try {
+        Seq("embeddings.parquet", "documents.parquet").foreach { t =>
+          java.nio.file.Files.copy(java.nio.file.Paths.get(Sf, t), ds.resolve(t))
+        }
+        val emb = Seq(s"$ds/embeddings.parquet")
+        // live: an input of the live dataset, unchanged since the build
+        VectorOps.durable(s, "vac_live", emb)(Seq(1L).toDF("id"))
+        // stale: the same dataset, its input rewritten after the build
+        VectorOps.durable(s, "vac_stale", Seq(s"$ds/documents.parquet"))(Seq(2L).toDF("id"))
+        // gone: an input outside the live list altogether
+        VectorOps.durable(s, "vac_gone", Seq(s"$Sf/embeddings.parquet"))(Seq(3L).toDF("id"))
+        // legacy: manifest-less artifact must NEVER be deleted
+        VectorOps.durable(s, "vac_legacy", emb)(Seq(4L).toDF("id"))
+        java.nio.file.Files.writeString(ds.resolve("documents.parquet"), "rewritten")
+        val root = new java.io.File(sys.props("graft.index.dir"))
+        def dirs() = root.listFiles().flatMap(d => Option(d.listFiles())
+          .getOrElse(Array.empty)).filter(_.isDirectory).map(_.getName).toSet
+        val legacy = dirs().find(_.startsWith("vac_legacy")).get
+        java.nio.file.Files.delete(java.nio.file.Paths.get(
+          root.listFiles().head.getPath, legacy, "_graft_key.json"))
 
-      val report = VectorOps.vacuumStore(Seq(Sf))
-        .map { case (n, a) => n.takeWhile(_ != ':').split("__").head -> a }
-      def actionOf(prefix: String) =
-        report.find(_._1.startsWith(prefix)).map(_._2)
-      assert(actionOf("vac_live").contains("kept"))
-      assert(actionOf("vac_stale").contains("dropped"))
-      assert(actionOf("vac_gone").contains("dropped"))
-      assert(actionOf("vac_legacy").contains("kept_no_meta"))
-      val after = dirs()
-      assert(after.exists(_.startsWith("vac_live")), "live artifact deleted")
-      assert(after.exists(_.startsWith("vac_legacy")), "legacy artifact deleted")
-      assert(!after.exists(_.startsWith("vac_stale")), "stale artifact survived")
-      assert(!after.exists(_.startsWith("vac_gone")), "gone-dataset artifact survived")
-      // survivors still read back
-      assert(VectorOps.durable(s.newSession(), s"vac_live:$Sf:$liveFp")(
-        sys.error("rebuilt")).count() == 1)
+        val report = VectorOps.vacuumStore(Seq(ds.toString))
+          .map { case (n, a) => n.takeWhile(_ != ':').split("__").head -> a }
+        def actionOf(prefix: String) =
+          report.find(_._1.startsWith(prefix)).map(_._2)
+        assert(actionOf("vac_live").contains("kept"))
+        assert(actionOf("vac_stale").contains("dropped"))
+        assert(actionOf("vac_gone").contains("dropped"))
+        assert(actionOf("vac_legacy").contains("kept_no_meta"))
+        val after = dirs()
+        assert(after.exists(_.startsWith("vac_live")), "live artifact deleted")
+        assert(after.exists(_.startsWith("vac_legacy")), "legacy artifact deleted")
+        assert(!after.exists(_.startsWith("vac_stale")), "stale artifact survived")
+        assert(!after.exists(_.startsWith("vac_gone")), "gone-dataset artifact survived")
+        // survivors still read back
+        assert(VectorOps.durable(s.newSession(), "vac_live", emb)(
+          sys.error("rebuilt")).count() == 1)
+      } finally new scala.reflect.io.Directory(ds.toFile).deleteRecursively()
     }
   }
 
@@ -257,8 +265,8 @@ class IndexStoreSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       // ':' and '/' both sanitize to '_' — the key digest must still split them
-      val a = VectorOps.durable(s, "spec:x:1")(Seq(1L).toDF("id"))
-      val b = VectorOps.durable(s, "spec/x/1")(Seq(2L, 3L).toDF("id"))
+      val a = VectorOps.durable(s, "spec:x:1", Nil)(Seq(1L).toDF("id"))
+      val b = VectorOps.durable(s, "spec/x/1", Nil)(Seq(2L, 3L).toDF("id"))
       assert(a.count() == 1 && b.count() == 2)
     }
   }
@@ -269,20 +277,20 @@ class IndexStoreSpec extends SparkSpec {
       import s.implicits._
       // production shape: the dataset dir holds Spark-WRITTEN parquet
       // DIRECTORIES (testdata ships single-file parquet; fixtures and any
-      // real warehouse do not) — liveTags must fingerprint directory
-      // children too, or every artifact keyed to such a dataset is
-      // wrongly judged stale and deleted
+      // real warehouse do not) — the recorded fingerprint of a directory
+      // input must match its current one, or every artifact keyed to such
+      // a dataset is wrongly judged stale and deleted
       val ds = java.nio.file.Files.createTempDirectory("graft_vac_ds").toString
       try {
         Seq((1L, "a")).toDF("vec_id", "t").write.parquet(s"$ds/embeddings.parquet")
         Seq((1L, "x")).toDF("doc_id", "text").write.parquet(s"$ds/documents.parquet")
-        val fp = graft.Memo.fp(s"$ds/embeddings.parquet")
-        VectorOps.durable(s, s"vac_dirds:$ds:$fp")(Seq(7L).toDF("id"))
+        val emb = Seq(s"$ds/embeddings.parquet")
+        VectorOps.durable(s, "vac_dirds", emb)(Seq(7L).toDF("id"))
         val report = VectorOps.vacuumStore(Seq(ds))
         assert(report.exists { case (n, a) => n.startsWith("vac_dirds") && a == "kept" },
           s"directory-dataset artifact not kept: $report")
         // the survivor still reads back with no rebuild
-        assert(VectorOps.durable(s.newSession(), s"vac_dirds:$ds:$fp")(
+        assert(VectorOps.durable(s.newSession(), "vac_dirds", emb)(
           sys.error("rebuilt")).count() == 1)
       } finally new scala.reflect.io.Directory(new java.io.File(ds)).deleteRecursively()
     }
@@ -301,26 +309,27 @@ class IndexStoreSpec extends SparkSpec {
           new java.io.File(d).mkdirs()
           Seq((1L, "a")).toDF("vec_id", "t").write.parquet(s"$d/embeddings.parquet")
         }
-        val liveFp = graft.Memo.fp(s"$live/embeddings.parquet")
-        val otherFp = graft.Memo.fp(s"$other/embeddings.parquet")
-        VectorOps.durable(s, s"vac_pfx_live:$live:$liveFp")(Seq(1L).toDF("id"))
-        // keyed to the NON-live sibling: substring matching would see the
-        // live path '/…/sf0.1' inside '/…/sf0.12' and wrongly keep it
-        VectorOps.durable(s, s"vac_pfx_other:$other:$otherFp")(Seq(2L).toDF("id"))
-        // fingerprint must also match as a whole component — an artifact of
-        // the live dataset under a STALE fp whose hex happens to appear
-        // inside the key elsewhere must still drop
-        VectorOps.durable(s, s"vac_pfx_stalefp:$live:00000000:tag$liveFp")(
+        VectorOps.durable(s, "vac_pfx_live", Seq(s"$live/embeddings.parquet"))(
+          Seq(1L).toDF("id"))
+        // keyed to the NON-live sibling: prefix matching would see the live
+        // path '/…/sf0.1' as a prefix of '/…/sf0.12' and wrongly keep it
+        VectorOps.durable(s, "vac_pfx_other", Seq(s"$other/embeddings.parquet"))(
+          Seq(2L).toDF("id"))
+        // an input of the live dataset whose recorded fingerprint is no
+        // longer its current one must drop
+        Seq((1L, "x")).toDF("doc_id", "text").write.parquet(s"$live/documents.parquet")
+        VectorOps.durable(s, "vac_pfx_stalefp", Seq(s"$live/documents.parquet"))(
           Seq(3L).toDF("id"))
+        Seq((2L, "y")).toDF("doc_id", "text").write.mode("append")
+          .parquet(s"$live/documents.parquet")
         val report = VectorOps.vacuumStore(Seq(live)).toMap
         def act(p: String) = report.collectFirst {
           case (n, a) if n.startsWith(p) => a }
         assert(act("vac_pfx_live").contains("kept"))
         assert(act("vac_pfx_other").contains("dropped"),
           "path-prefix collision kept a non-live dataset's artifact")
-        // 'tag$liveFp' is one component — the bare fp must not match inside it
         assert(act("vac_pfx_stalefp").contains("dropped"),
-          "fingerprint substring inside another component judged live")
+          "an input rewritten since the build judged live")
       } finally new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
     }
   }
@@ -330,7 +339,7 @@ class IndexStoreSpec extends SparkSpec {
       val s = spark.newSession()
       import s.implicits._
       val Sf = "/root/testdata/sf0.001"
-      val liveFp = graft.Memo.fp(s"$Sf/embeddings.parquet")
+      val emb = Seq(s"$Sf/embeddings.parquet")
       val root = new java.io.File(sys.props("graft.index.dir"))
       // (1) deterministic replay of the mid-build states a concurrent
       // vacuum can observe (since the atomic-rename publish, state (a) is
@@ -340,7 +349,7 @@ class IndexStoreSpec extends SparkSpec {
       //   b. write in flight (no _SUCCESS, no manifest)
       // both must be conservatively KEPT — a vacuum between the data
       // commit and the manifest write must not destroy the new artifact.
-      VectorOps.durable(s, s"vac_race_a:$Sf:$liveFp")(Seq(1L).toDF("id"))
+      VectorOps.durable(s, "vac_race_a", emb)(Seq(1L).toDF("id"))
       val vdir = root.listFiles().head
       val aDir = vdir.listFiles().find(_.getName.startsWith("vac_race_a")).get
       java.nio.file.Files.delete(
@@ -358,16 +367,16 @@ class IndexStoreSpec extends SparkSpec {
         "in-flight write was not spared")
       // (2) same-JVM interleaving: vacuum and fresh materializations race
       // on storeLock from two threads; every key must read back afterwards
-      val keys = (0 until 4).map(i => s"vac_race_k$i:$Sf:$liveFp")
+      val keys = (0 until 4).map(i => s"vac_race_k$i")
       val builder = new Thread(() => keys.foreach { k =>
-        VectorOps.durable(s, k)(Seq(1L, 2L).toDF("id"))
+        VectorOps.durable(s, k, emb)(Seq(1L, 2L).toDF("id"))
       })
       val vacuumer = new Thread(() =>
         (0 until 4).foreach(_ => VectorOps.vacuumStore(Seq(Sf))))
       builder.start(); vacuumer.start()
       builder.join(60000); vacuumer.join(60000)
       keys.foreach { k =>
-        assert(VectorOps.durable(s.newSession(), k)(sys.error("lost")).count() == 2,
+        assert(VectorOps.durable(s.newSession(), k, emb)(sys.error("lost")).count() == 2,
           s"artifact for $k lost to a concurrent vacuum")
       }
     }
@@ -377,7 +386,7 @@ class IndexStoreSpec extends SparkSpec {
     withStoreDir {
       val s = spark
       import s.implicits._
-      VectorOps.durable(s, "spec:atomic:1")(Seq(1L, 2L).toDF("id")).count()
+      VectorOps.durable(s, "spec:atomic:1", Nil)(Seq(1L, 2L).toDF("id")).count()
       val vdir = new java.io.File(sys.props("graft.index.dir")).listFiles().head
       val entries = vdir.listFiles().map(_.getName).toSet
       assert(!entries.exists(_.startsWith(".tmp_")),
@@ -398,15 +407,14 @@ class IndexStoreSpec extends SparkSpec {
       val root = new java.io.File(sys.props("graft.index.dir"))
       // simulate a crashed builder: its keyed temp dir is on disk, its
       // process (and so its OS file lock) is gone
-      val digest = java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash("spec:crash:1").toLong & 0xffffffffL)
-      val name = s"spec_crash_1_$digest"
+      val key = StoreKey("spec:crash:1", Nil)
+      val name = key.dirName(key.manifest)
       val vdir = new java.io.File(root, s"v${VectorOps.IndexFormatVersion}")
       val dead = new java.io.File(vdir, s".tmp_${name}_99999_deadbeef")
       dead.mkdirs()
       java.nio.file.Files.writeString(
         new java.io.File(dead, "part-00000.parquet").toPath, "junk")
-      val got = VectorOps.durable(s, "spec:crash:1")(Seq(5L).toDF("id"))
+      val got = VectorOps.durable(s, "spec:crash:1", Nil)(Seq(5L).toDF("id"))
       assert(got.count() == 1, "rebuild after a crashed builder failed")
       assert(!dead.exists(), "dead builder's temp dir survived the rebuild")
       assert(!vdir.listFiles().exists(_.getName.startsWith(".tmp_")))
@@ -418,7 +426,7 @@ class IndexStoreSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       val Sf = "/root/testdata/sf0.001"
-      VectorOps.durable(s, s"spec:vtmp:$Sf:${graft.Memo.fp(s"$Sf/embeddings.parquet")}")(
+      VectorOps.durable(s, "spec:vtmp", Seq(s"$Sf/embeddings.parquet"))(
         Seq(1L).toDF("id")).count()
       val root = new java.io.File(sys.props("graft.index.dir"))
       val vdir = root.listFiles().head
@@ -497,7 +505,7 @@ class IndexStoreSpec extends SparkSpec {
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
       val tA = new Thread(() =>
         try {
-          val r = VectorOps.durable(s, "spec:stripe:a") {
+          val r = VectorOps.durable(s, "spec:stripe:a", Nil) {
             aEntered.countDown()
             assert(bDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
               "key-B build did not overlap key-A build (global store lock?)")
@@ -508,7 +516,7 @@ class IndexStoreSpec extends SparkSpec {
       val tB = new Thread(() =>
         try {
           assert(aEntered.await(60, java.util.concurrent.TimeUnit.SECONDS))
-          val r = VectorOps.durable(s, "spec:stripe:b")(Seq(2L, 3L).toDF("id"))
+          val r = VectorOps.durable(s, "spec:stripe:b", Nil)(Seq(2L, 3L).toDF("id"))
           assert(r.count() == 2)
           bDone.countDown()
         } catch { case t: Throwable => errs.add(t); bDone.countDown() })
@@ -517,9 +525,9 @@ class IndexStoreSpec extends SparkSpec {
       assert(!tA.isAlive && !tB.isAlive, "striped-lock threads did not finish")
       assert(errs.isEmpty, s"concurrent builds failed: ${errs.peek()}")
       // both artifacts published and reusable from a fresh session
-      assert(VectorOps.durable(s.newSession(), "spec:stripe:a")(
+      assert(VectorOps.durable(s.newSession(), "spec:stripe:a", Nil)(
         sys.error("rebuilt")).count() == 1)
-      assert(VectorOps.durable(s.newSession(), "spec:stripe:b")(
+      assert(VectorOps.durable(s.newSession(), "spec:stripe:b", Nil)(
         sys.error("rebuilt")).count() == 2)
     }
   }
@@ -649,8 +657,8 @@ class IndexStoreSpec extends SparkSpec {
       val nBkt = 64
       val src = s.range(0, 10000).select(col("id"),
         pmod(xxhash64(col("id")), lit(nBkt)).cast("int").as("span_bkt"))
-      val stored = VectorOps.durablePartitioned(s, "spec:part1",
-        Seq("span_bkt"))(src)
+      val stored = VectorOps.durablePartitioned(s, Seq("span_bkt"), "spec:part1",
+        Nil)(src)
       val wanted = Seq(3, 17, 42)
       val probe = stored.filter(col("span_bkt").isin(wanted.map(Integer.valueOf): _*))
       // plan-level: the scan carries a partition filter and lists only the

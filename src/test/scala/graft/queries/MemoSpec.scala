@@ -3,7 +3,7 @@ package graft.queries
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, reverse}
+import org.apache.spark.sql.functions.{col, reverse, sum}
 import graft.{Memo, SparkSpec}
 import graft.wdi.{WdiFixture, WdiPipelines}
 
@@ -136,6 +136,69 @@ class MemoSpec extends SparkSpec {
       // the declared read builds
       assert(Memo.frame(s, "memo_spec_declared", docs)(s.read.parquet(docs.head)).count() == 500)
     }
+  }
+
+  test("(f) rewritten documents under unchanged embeddings rebuild the stored minhash pairs") {
+    withCopy { (s, d, cold) =>
+      val warm = rows(s, "dedup_minhash_lsh", d)
+      Memo.fireSessionEnd(s)
+      val docs = s.read.parquet(s"$d/documents.parquet")
+      rewrite(docs.filter(col("doc_id") % 2 === 0).localCheckpoint(),
+        Paths.get(d, "documents.parquet"))
+      // a second session over the same index store: the pair graph must be
+      // keyed on the documents it reads, not on the unchanged embeddings
+      val s2 = spark.newSession()
+      val after = try rows(s2, "dedup_minhash_lsh", d) finally Memo.fireSessionEnd(s2)
+      val fresh = rows(cold(), "dedup_minhash_lsh", d)
+      assert(fresh != warm, "the rewritten documents do not move the pair graph")
+      assert(after == fresh, "the store served the pairs of the old documents")
+    }
+  }
+
+  test("(g) a file rewritten inside a partitioned dataset changes its fingerprint") {
+    val s = spark.newSession()
+    val dir = Files.createTempDirectory("graft_memo_nested")
+    try {
+      import s.implicits._
+      val ds = dir.resolve("x.parquet")
+      Seq((1L, 1), (2L, 2)).toDF("id", "k").write.partitionBy("k").parquet(ds.toString)
+      var builds = 0
+      def total(): Long = Memo.value(s, "memo_spec_nested", Seq(ds.toString)) {
+        builds += 1
+        s.read.parquet(ds.toString).agg(sum("id")).head().getLong(0)
+      }
+      assert(total() == 3L && builds == 1)
+      val before = Memo.fp(ds.toString)
+      val part = ds.resolve("k=1")
+      val file = Files.list(part).iterator.asScala.find(_.toString.endsWith(".parquet")).get
+      // the checksum sidecar would no longer match the rewritten file
+      Files.deleteIfExists(part.resolve(s".${file.getFileName}.crc"))
+      rewrite(Seq(10L).toDF("id"), file)
+      assert(Memo.fp(ds.toString) != before, "a nested rewrite left the fingerprint unchanged")
+      assert(total() == 12L && builds == 2, "the memo served the old partition")
+    } finally {
+      Memo.fireSessionEnd(s)
+      new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
+  }
+
+  test("no fingerprint typed into a key in src/main") {
+    // the store derives keys from declared inputs (StoreKey); only the memo
+    // and the store's key and liveness code read fingerprints
+    val call = """\bMemo\.fp\(""".r
+    val owners = Set("Memo.scala", "StoreKey.scala")
+    val inString = """\$\{[^}]*Fp[^}]*\}|\$[A-Za-z_]\w*Fp\b""".r
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val offenders = files.flatMap { p =>
+      val src = Files.readString(p)
+      val calls = if (owners(p.getFileName.toString)) Nil else call.findAllIn(src).toList
+      (calls ++ inString.findAllIn(src)).map(m => s"$p: $m")
+    }
+    assert(offenders.isEmpty, s"fingerprints outside the key rule: ${offenders.mkString(", ")}")
   }
 
   test("no memo map in src/main outside Memo.scala") {

@@ -36,6 +36,26 @@ class SessionCachesSpec extends SparkSpec {
     assert(!Memo.isHooked(s), "listener hook not released on session end")
   }
 
+  test("constructing the stream entries again memoizes no further footer schema") {
+    val tmp = java.nio.file.Files.createTempDirectory("session_caches_spec_store")
+    sys.props("graft.index.dir") = tmp.toString
+    val s = spark.newSession()
+    try {
+      val entries = graft.SparkEntry.queries.filter(_._1.startsWith("stream_")).values
+      entries.foreach(_(s, Sf))
+      val schemas = Memo.size("parquet_schema")
+      entries.foreach(_(s, Sf))
+      // a staged dir's schema is its frames' own: no entry under a dir the
+      // drain has deleted
+      assert(Memo.size("parquet_schema") == schemas,
+        s"a second construction memoized ${Memo.size("parquet_schema") - schemas} schemas")
+    } finally {
+      Memo.fireSessionEnd(s)
+      sys.props.remove("graft.index.dir")
+      new scala.reflect.io.Directory(tmp.toFile).deleteRecursively()
+    }
+  }
+
   test("application end unpersists and drops the WDI pipeline tables") {
     import graft.wdi.{WdiFixture, WdiPipelines}
     val s = spark.newSession()

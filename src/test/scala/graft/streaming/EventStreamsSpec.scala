@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 class EventStreamsSpec extends SparkSpec {
   import EventStreams._
-  import graft.streaming.{Event, Session}
+  import graft.streaming.Event
 
   private def ev(id: Long, user: Long, minute: Long, typ: String = "click",
       value: Double = 1.0): Event =

@@ -44,7 +44,6 @@ class ZipfFixtureSpec extends AnyFunSuite {
     assert((c & dn).size == c.size)
     // substring dup: idx % 37 == 4 -> a 60-token span of idx-4 appears
     val span = {
-      val w41 = docs(41).split(" ")
       val w37 = docs(37).split(" ")
       // the splice sits at the host's midpoint cut
       w37.sliding(60).exists(s => docs(41).contains(s.mkString(" "))) ||

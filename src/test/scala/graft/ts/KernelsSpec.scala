@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class KernelsSpec extends AnyFunSuite {
 
-  private def approx(a: Double, b: Double, tol: Double = 1e-9): Boolean =
+  private def approx(a: Double, b: Double, tol: Double): Boolean =
     math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 
   // ---- quadratic detrend ----

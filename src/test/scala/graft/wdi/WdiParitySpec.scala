@@ -87,7 +87,8 @@ class WdiParitySpec extends SparkSpec {
         .withColumn("X", col("Y") * col("Xper") / 100)
         .withColumn("M", col("Y") * col("Mper") / 100)
         .withColumn("TB", (col("X") - col("M")) / col("Y"))
-        .join(Regions.dimension(spark), Seq("Country Code"), "left")
+        .join(broadcast(spark.createDataFrame(Regions.iso3ToRegion.toSeq.sorted)
+          .toDF("Country Code", "Region")), Seq("Country Code"), "left")
 
     def frontHalf(spark: SparkSession, dir: String): DataFrame =
       toWide(spark, allVarsOnly(cleanRuns(unionLong(spark, dir))))

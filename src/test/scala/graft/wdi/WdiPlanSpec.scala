@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression net for the WDI pass, on [[WdiFixture]]'s
@@ -145,7 +145,11 @@ class WdiPlanSpec extends SparkSpec {
   test("the moments plan shuffles by country, by (variant, country) and to one partition") {
     val moments = WdiPipelines.momentsAll(spark, WdiFixture.write())
     moments.collect()
-    val shuffles = nodes(moments.queryExecution.executedPlan).collect {
+    val plan = nodes(moments.queryExecution.executedPlan)
+    // the region is a map lookup in the plan, not a broadcast join
+    assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"the moments plan broadcasts:\n${moments.queryExecution.executedPlan}")
+    val shuffles = plan.collect {
       case e: ShuffleExchangeExec => e.outputPartitioning match {
         case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).mkString(", ")
         case SinglePartition => "single partition"
@@ -158,17 +162,17 @@ class WdiPlanSpec extends SparkSpec {
       s"shuffles: ${shuffles.mkString("; ")}\n${moments.queryExecution.executedPlan}")
   }
 
-  test("a cold 28-output pass over fresh extracts runs at most 7 jobs") {
+  test("a cold 28-output pass over fresh extracts runs at most 6 jobs") {
     val in = WdiFixture.write()
     val idle = persisted
     val out = Files.createTempDirectory("wdi-pass").toString
     var stems = Seq.empty[String]
     val n = jobsOf { stems = writeAll(in, out) }
     assert(stems.size == 28 && stems.distinct.size == 28)
-    // 5 build the moments table (the region lookup's broadcast, its three
-    // shuffle stages and the cache of it), 2 collect its rows and its
-    // region aggregate; the outputs run none (one job each took 36)
-    assert(n <= 5 + 2, s"cold pass ran $n jobs")
+    // 4 build the moments table (its three shuffle stages and the cache of
+    // it), 2 collect its rows and its region aggregate; the outputs run none
+    // (one job each took 36)
+    assert(n <= 4 + 2, s"cold pass ran $n jobs")
     // nothing the pass built stays persisted: the rows are driver-local
     assert(persisted == idle, s"a pass left RDDs persisted: ${persisted -- idle}")
   }
