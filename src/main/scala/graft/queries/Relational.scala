@@ -666,9 +666,12 @@ object Relational {
         .orderBy("l_returnflag")),
 
     // ---- A5: Pearson corr (reference: detrendandstat_quad.R:226-231) ----
+    // null_safe_corr: corr's bits, but a constant group gives NULL where
+    // corr fails the query under ANSI mode
     "a5_corr" -> ((s, d) =>
       Tables.lineitem(s, d).groupBy("l_returnflag")
-        .agg(round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qty_price"))
+        .agg(round(call_function("null_safe_corr", col("l_quantity"), col("l_extendedprice")), 6)
+          .as("corr_qty_price"))
         .orderBy("l_returnflag")),
 
     // ---- A6: lag-1 autocorrelation (reference: quad.R:266-269) ----
@@ -676,7 +679,8 @@ object Relational {
       Tables.events(s, d)
         .withColumn("prev_value", lag(col("value"), 1).over(wUser))
         .groupBy("user_id")
-        .agg(round(corr(col("value"), col("prev_value")), 6).as("acf_value"))
+        .agg(round(call_function("null_safe_corr", col("value"), col("prev_value")), 6)
+          .as("acf_value"))
         .orderBy("user_id")),
 
     // ---- A7: distinct (reference: detrendandstat_quad.R:100-101) ----

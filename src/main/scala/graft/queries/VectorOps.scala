@@ -176,7 +176,9 @@ object VectorOps {
     * construction: artifacts without a manifest are left untouched and
     * reported, never deleted. Returns one (artifact, action) row per store
     * entry: kept | dropped | kept_no_meta, and for in-flight temp dirs
-    * dropped_stale_tmp | kept_building.
+    * dropped_stale_tmp | kept_building. The whole store of an older format
+    * version (`v<k>`, k < [[IndexFormatVersion]]), which a format bump
+    * strands, is dropped as one dropped_old_version row.
     */
   private[graft] def vacuumStore(liveDirs: Seq[String]): Seq[(String, String)] =
     Memo.storeRoot match {
@@ -200,7 +202,17 @@ object VectorOps {
         // the OS on process death). Probe errs toward "held" → spared.
         val tmps = all.filter(f => f.isDirectory && f.getName.startsWith(".tmp_"))
           .sortBy(_.getName)
+        // the store of an older format version: no reader of this version
+        // opens it, so every artifact in it is garbage
+        val oldVersions = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+          .filter(f => f.isDirectory && f.getName.matches("v[0-9]+") &&
+            f.getName.tail.toInt < IndexFormatVersion)
+          .sortBy(_.getName)
         vacuumLock.synchronized {
+          val oldReport = oldVersions.toSeq.map { v =>
+            StorePublish.deleteRecursively(v)
+            v.getName -> "dropped_old_version"
+          }
           val tmpReport = tmps.toSeq.map { t =>
             StorePublish.tmpOwner(t.getName) match {
               case Some(owner) if !StorePublish.keyLockHeld(vdir, owner) =>
@@ -209,7 +221,7 @@ object VectorOps {
               case _ => t.getName -> "kept_building"
             }
           }
-          tmpReport ++ arts.toSeq.map { art =>
+          oldReport ++ tmpReport ++ arts.toSeq.map { art =>
             val metaPath = java.nio.file.Paths.get(s"${art.getPath}/_graft_key.json")
             if (!java.nio.file.Files.exists(metaPath)) art.getName -> "kept_no_meta"
             else if (StoreKey.live(java.nio.file.Files.readString(metaPath), liveDirs))

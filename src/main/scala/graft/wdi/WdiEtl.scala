@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * series) in long form and pivots back. Here each extract row already is
   * one (country, series) vector of 60 years, so the cleaning runs on that
   * row, and after ONE shuffle by `Country Code` one aggregation gates the
-  * countries and emits their year rows. One Catalyst plan from CSV scan to
-  * cleaned wide table, reading each extract once; the region dim is
-  * broadcast, so the table stays hash-partitioned by `Country Code` for the
-  * per-country work after it.
+  * countries ([[countries]]: one row of five vectors per country, what the
+  * moments fold reads) and [[frontHalf]] emits their year rows. One Catalyst
+  * plan from CSV scan to cleaned wide table, reading each extract once; the
+  * region is a map lookup, so the table stays hash-partitioned by
+  * `Country Code` for the per-country work after it.
   */
 object WdiEtl {
   import WdiSchemas._
@@ -52,19 +53,17 @@ object WdiEtl {
 
   private val keepRunsUdf = udf(keepRuns _)
 
-  /** The full shared front half: cleaned wide table with derived columns and
-    * Region, one row per surviving (country, year).
+  /** The gated countries, one row each: `Country Code` and the cleaned
+    * 60-year vector of each of [[WdiSchemas.variables]], in year order.
     *  - P4 + R1: per extract row, recode `Series Code` → Variable, drop the
     *    other series and clean the year cells ([[keepRuns]]); a series with
     *    no surviving cell counts for nothing below
     *    (detrendandstat_quad.R:8-98);
-    *  - U1 + J1 + R2: per country, over the three extracts, the all-vars
-    *    gate — five distinct variables survive — and the pivot: a row for
-    *    each year where any variable survived, the other variables' cells
-    *    null there (detrendandstat_quad.R:65, 103-118);
-    *  - P6 + J2: derive C,I,X,M,TB, attach Region by map lookup
-    *    (detrendandstat_quad.R:120-130). */
-  def frontHalf(spark: SparkSession, dir: String): DataFrame = {
+    *  - U1 + J1: per country, over the three extracts, the all-vars gate:
+    *    five distinct variables survive (detrendandstat_quad.R:65, 103-110).
+    * The rows are hash-partitioned by `Country Code`, so per-country work
+    * over them ([[WdiPipelines]]'s moments) needs no shuffle of its own. */
+  def countries(spark: SparkSession, dir: String): DataFrame = {
     val recode = seriesToVariable.foldLeft(lit(null).cast("string")) {
       case (acc, (code, v)) => when(col("Series Code") === code, v).otherwise(acc)
     }
@@ -79,13 +78,25 @@ object WdiEtl {
       first(when(col("Variable") === v, col("cells")), ignoreNulls = true).as(v))
     series
       // spread over the cores at a fixed count: what runs per country on
-      // this partitioning (the dlog window and the kernels) costs per
-      // series, not per shuffled byte, and AQE would read the few bytes of
-      // thousands of countries into one task
+      // this partitioning (the moments, the kernels) costs per series, not
+      // per shuffled byte, and AQE would read the few bytes of thousands of
+      // countries into one task
       .repartition(spark.sparkContext.defaultParallelism, col("Country Code"))
       .groupBy("Country Code")
       .agg(size(collect_set(kept)).as("nVars"), cells: _*)
       .filter(col("nVars") === variables.size)
+      .select(col("Country Code") +: variables.map(col): _*)
+  }
+
+  /** The full shared front half: cleaned wide table with derived columns and
+    * Region, one row per surviving (country, year).
+    *  - [[countries]]: the cleaned, gated series of each country;
+    *  - R2: the pivot — a row for each year where any variable survived,
+    *    the other variables' cells null there (detrendandstat_quad.R:112-118);
+    *  - P6 + J2: derive C,I,X,M,TB, attach Region by map lookup
+    *    (detrendandstat_quad.R:120-130). */
+  def frontHalf(spark: SparkSession, dir: String): DataFrame =
+    countries(spark, dir)
       .select(col("Country Code"), inline(arrays_zip(
         sequence(lit(YearStart), lit(YearEnd)).as("Year") +: variables.map(col): _*)))
       .filter(coalesce(variables.map(col): _*).isNotNull)
@@ -97,5 +108,4 @@ object WdiEtl {
       // a map lookup in the plan, so no broadcast job per pass; an unknown
       // code gets a NULL region
       .withColumn("Region", try_element_at(typedLit(Regions.iso3ToRegion), col("Country Code")))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.wdi
 
-import org.apache.spark.sql.{DataFrame, PlanFrames, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, PlanFrames, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -8,76 +8,63 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.Memo
 
-/** The four reference pipelines end-to-end: front half → the four detrend
-  * variants in one fused pass → one per-country moments table for all of
-  * them → its rows and one region aggregate of them, collected to the
-  * driver once per (session, extracts) → the seven outputs each variant
-  * writes, each a view of those rows that collects with no Spark job
-  * (detrendandstat_quad.R, dtrendandstat_HP100.R, dtrendandstat_HP625.R,
-  * dtrendandstat_dlog.R). From the CSV scan to the moments aggregate the
-  * rows are shuffled by country once; nothing stays persisted once the
-  * driver-local rows exist.
+/** The four reference pipelines end-to-end: the gated countries of the
+  * front half → per country, the four detrend variants and every moment of
+  * each, on executors ([[WdiStats]]) → those rows, collected to the driver
+  * once per (session, extracts), and their per-region mean/sd, folded on
+  * the driver → the seven outputs each variant writes, each a view of those
+  * rows that collects with no Spark job (detrendandstat_quad.R,
+  * dtrendandstat_HP100.R, dtrendandstat_HP625.R, dtrendandstat_dlog.R).
+  * From the CSV scan to the moments the rows are shuffled by country once,
+  * and a cold pass runs two Spark jobs: that shuffle's map stage and the
+  * collect. Nothing is persisted.
   */
 object WdiPipelines {
 
   /** Output column names for the per-country volatility block, in golden
-    * header order (dlog names its sd columns differently). */
+    * header order (dlog names its sd columns differently). `makeCycles` is
+    * the variant's DataFrame operator over the front half, `detrend` the
+    * same cycles of one country on arrays, which the outputs read. */
   case class Variant(
       key: String,
       goldenSuffix: String,
       sdNames: Seq[(String, String)],
-      makeCycles: DataFrame => DataFrame)
+      makeCycles: DataFrame => DataFrame,
+      detrend: WdiStats.Country => Seq[WdiStats.Cells])
 
-  val quad = Variant("quad", "logquad",
-    Seq("Y_cyc" -> "sd_Y", "C_cyc" -> "sd_C", "I_cyc" -> "sd_I", "TB_cyc" -> "sd_TB"),
-    WdiCycles.quad)
-  val hp100 = Variant("hp100", "hp",
-    Seq("Y_cyc" -> "sd_Y", "C_cyc" -> "sd_C", "I_cyc" -> "sd_I", "TB_cyc" -> "sd_TB"),
-    WdiCycles.hp(_, lambda = 100.0))
-  val hp625 = Variant("hp625", "hp625",
-    Seq("Y_cyc" -> "sd_Y", "C_cyc" -> "sd_C", "I_cyc" -> "sd_I", "TB_cyc" -> "sd_TB"),
-    WdiCycles.hp(_, lambda = 6.25))
+  /** The sd column names of every variant but dlog, and of the rows: each
+    * variant renames them to its own `sdNames`. */
+  private val levelSd = Seq("Y_cyc" -> "sd_Y", "C_cyc" -> "sd_C", "I_cyc" -> "sd_I",
+    "TB_cyc" -> "sd_TB")
+
+  val quad = Variant("quad", "logquad", levelSd, WdiCycles.quad, WdiStats.quadCycles)
+  val hp100 = Variant("hp100", "hp", levelSd,
+    WdiCycles.hp(_, lambda = 100.0), WdiStats.hpCycles(_, lambda = 100.0))
+  val hp625 = Variant("hp625", "hp625", levelSd,
+    WdiCycles.hp(_, lambda = 6.25), WdiStats.hpCycles(_, lambda = 6.25))
   val dlog = Variant("dlog", "dlog",
     Seq("Y_cyc" -> "sd_dlogY", "C_cyc" -> "sd_dlogC", "I_cyc" -> "sd_dlogI",
       "TB_cyc" -> "sd_TB"),
-    WdiCycles.dlog)
+    WdiCycles.dlog, WdiStats.dlogCycles)
 
   val variants: Seq[Variant] = Seq(quad, hp100, hp625, dlog)
 
   /** The declared inputs of every table below: the three extracts. */
   private def extracts(dir: String): Seq[String] = WdiEtl.extracts.map(f => s"$dir/$f")
 
-  /** The variant's cycle table over the front half (not persisted: the
-    * outputs read the rows of [[WdiCycles.all]]'s moments instead). */
+  /** The variant's cycle table over the front half, by its DataFrame
+    * operator (the outputs do not read it). */
   def cycles(spark: SparkSession, dir: String, v: Variant): DataFrame =
     v.makeCycles(WdiEtl.frontHalf(spark, dir))
 
-  /** The sd columns of the fused moments table; each variant renames them
-    * to its own `sdNames`. */
-  private val fusedSdNames = quad.sdNames
-
-  /** Every moment column of the fused tables, in golden header order. */
+  /** Every moment column of the rows, in golden header order. */
   private val statCols: Seq[String] = {
     import WdiStats.{acfCols, corrCols, ratioCols}
-    fusedSdNames.map(_._2) ++ ratioCols ++ corrCols ++ acfCols
+    levelSd.map(_._2) ++ ratioCols ++ corrCols ++ acfCols
   }
 
-  /** [[WdiStats.countryMoments]] of all four variants at once, keyed by
-    * `variant`: one kernel grouping ([[WdiCycles.all]]), one window and one
-    * aggregation serve every variant. The plan has three Exchanges: the
-    * front half's hash on `Country Code`, which the dlog window and the
-    * kernels reuse; the moments' hash on (`variant`, `Country Code`); and
-    * `repartition(1)`. That last one shuffles after the aggregate, so the
-    * window and the aggregation keep their parallelism (`coalesce(1)` would
-    * pull them into one task), and the region aggregate over it sums each
-    * region's countries in code order in one partition, with no Exchange.
-    * Not persisted: [[rows]] persists it for its two collects only. */
-  private[graft] def momentsAll(spark: SparkSession, dir: String): DataFrame =
-    WdiStats.countryMoments(WdiCycles.all(WdiEtl.frontHalf(spark, dir)), fusedSdNames,
-      by = Seq("variant"))
-      .repartition(1)
-
-  /** The two levels of driver-local rows ([[WdiRows]]). */
+  /** The two levels of driver-local rows ([[WdiRows]]), each split by
+    * variant. */
   private val Country = "country"
   private val Region = "region"
 
@@ -92,50 +79,59 @@ object WdiPipelines {
       cells.map(StructField(_, DoubleType)))
   }
 
-  /** `level`'s rows of the extracts in `dir`, in [[schema]] order: the
-    * collected moments table, and one region aggregate of all four variants
-    * over it ([[WdiStats.byRegion]] keyed by `variant`, in code order in one
-    * partition, so every cell has the bits of a per-variant aggregate). Both
-    * are built together, once per (session, extracts), and rebuilt when an
-    * extract's fingerprint moves. The moments table is persisted for the two
-    * collects, so the region aggregate does not recompute the pipeline, and
-    * released once they hold their rows: nothing reads it after. */
-  private[wdi] def rows(spark: SparkSession, dir: String, level: String): Seq[InternalRow] = {
-    val (country, region) = Memo.value(spark, "wdi_rows", extracts(dir)) {
-      val m = Memo.declared(extracts(dir))(momentsAll(spark, dir)).persist()
-      try (collected(m, Country),
-        collected(WdiStats.byRegion(m, statCols, by = Seq("variant")), Region))
-      finally m.unpersist(blocking = true)
-    }
-    if (level == Country) country else region
-  }
+  /** Every per-country moment of the four variants, one row per (variant,
+    * country) in [[schema]] order: over the gated countries, which the front
+    * half's one shuffle leaves partitioned by country, each task folds its
+    * countries into one row per variant ([[WdiStats.moments]] of the
+    * variant's `detrend`). */
+  private[wdi] def countryRows(spark: SparkSession, dir: String): Dataset[Row] =
+    Memo.declared(extracts(dir))(WdiEtl.countries(spark, dir))
+      .flatMap { r =>
+        val c = WdiStats.Country(r)
+        variants.map(v =>
+          Row.fromSeq(Seq(v.key, c.code, c.region) ++ WdiStats.moments(v.detrend(c))))
+      }(Encoders.row(schema(Country)))
 
-  private def collected(df: DataFrame, level: String): Seq[InternalRow] = {
+  /** Variant `variant`'s rows at `level` of the extracts in `dir`, in
+    * [[schema]] order: the collected [[countryRows]], and
+    * [[WdiStats.byRegion]] of them, folded on the driver. Every level and
+    * variant is built together, once per (session, extracts), by one Spark
+    * query, and rebuilt when an extract's fingerprint moves. */
+  private[wdi] def rows(spark: SparkSession, dir: String, level: String,
+      variant: String): Seq[InternalRow] =
+    Memo.value(spark, "wdi_rows", extracts(dir)) {
+      val perCountry = countryRows(spark, dir).collect().toSeq
+      def split(rows: Seq[Row], level: String) =
+        compact(rows, level).groupBy(_.getUTF8String(0).toString).map {
+          case (v, rs) => (level, v) -> rs
+        }
+      split(perCountry, Country) ++ split(WdiStats.byRegion(perCountry), Region)
+    }.getOrElse((level, variant), Nil)
+
+  /** `rows` as compact rows of `level`'s schema: a third of the bytes of
+    * the converter's boxed cells. */
+  private def compact(rows: Seq[Row], level: String): Seq[InternalRow] = {
     val s = schema(level)
-    val out = df.select(s.fieldNames.toSeq.map(col): _*)
-    require(out.schema.map(_.dataType) == s.map(_.dataType),
-      s"WDI $level rows are ${out.schema.simpleString}, declared ${s.simpleString}")
-    // compact rows: a third of the bytes of the converter's boxed cells
     val toRow = CatalystTypeConverters.createToCatalystConverter(s)
-    val compact = UnsafeProjection.create(s)
-    out.collect().toSeq.map(r => compact(toRow(r).asInstanceOf[InternalRow]).copy())
+    val project = UnsafeProjection.create(s)
+    rows.map(r => project(toRow(r).asInstanceOf[InternalRow]).copy())
   }
 
   /** `level`'s rows of variant `v`: the level's keys, then each of `stats`
     * under the variant's own name — at region level as its `_mean`, `_sd`
-    * pair. A filter and a projection over a [[WdiRows]] marker, so
+    * pair. A projection over the variant's [[WdiRows]] marker, so
     * constructing it runs nothing and executing it runs no job once the
     * rows are built. */
   private def view(spark: SparkSession, dir: String, level: String, v: Variant,
       stats: Seq[String]): DataFrame = {
-    val fused = v.sdNames.map(_._2).zip(fusedSdNames.map(_._2)).toMap.withDefault(identity)
+    val fused = v.sdNames.map(_._2).zip(levelSd.map(_._2)).toMap.withDefault(identity)
+    def cell(in: String, out: String) = if (in == out) col(in) else col(in).as(out)
     val (keys, cells) =
-      if (level == Country) (Seq("Country Code", "Region"), stats.map(c => col(fused(c)).as(c)))
+      if (level == Country) (Seq("Country Code", "Region"), stats.map(c => cell(fused(c), c)))
       else (Seq("Region"),
-        stats.flatMap(c => Seq("_mean", "_sd").map(x => col(fused(c) + x).as(c + x))))
-    PlanFrames.of(spark, WdiRows(dir, level, DataTypeUtils.toAttributes(schema(level)))(spark))
-      .filter(col("variant") === v.key)
-      .select(keys.map(col) ++ cells: _*)
+        stats.flatMap(c => Seq("_mean", "_sd").map(x => cell(fused(c) + x, c + x))))
+    val marker = WdiRows(dir, level, v.key, DataTypeUtils.toAttributes(schema(level)))(spark)
+    PlanFrames.of(spark, marker).select(keys.map(col) ++ cells: _*)
   }
 
   /** The variant's per-country moments, with its own sd column names. */

@@ -260,6 +260,38 @@ class IndexStoreSpec extends SparkSpec {
     }
   }
 
+  test("vacuumStore drops an older format version's store, v2 actions unchanged") {
+    withStoreDir {
+      val s = spark.newSession()
+      import s.implicits._
+      // a live dataset with one input, and an input outside it
+      val ds = java.nio.file.Files.createTempDirectory("graft_vo_live")
+      val live = java.nio.file.Files.writeString(ds.resolve("t"), "a").toString
+      val gone = java.nio.file.Files.createTempFile("graft_vo_gone", ".parquet")
+      VectorOps.durable(s, "vo_live", Seq(live))(Seq(1L).toDF("id"))
+      VectorOps.durable(s, "vo_gone", Seq(gone.toString))(Seq(2L).toDF("id"))
+      // a store the previous format version left: one artifact with data
+      val root = sys.props("graft.index.dir")
+      val old = java.nio.file.Paths.get(root, "v1", "vo_old_0123456789abcdef")
+      java.nio.file.Files.createDirectories(old)
+      java.nio.file.Files.writeString(old.resolve("part-0.parquet"), "old layout")
+      try {
+        val report = VectorOps.vacuumStore(Seq(ds.toString))
+        def actionOf(prefix: String) = report.filter(_._1.startsWith(prefix)).map(_._2)
+        assert(actionOf("v1") == Seq("dropped_old_version"), report)
+        assert(actionOf("vo_live") == Seq("kept"), report)
+        assert(actionOf("vo_gone") == Seq("dropped"), report)
+        assert(report.size == 3, report)
+        assert(!java.nio.file.Files.exists(old.getParent), "the v1 store survived")
+        assert(VectorOps.durable(s.newSession(), "vo_live", Seq(live))(
+          sys.error("rebuilt")).count() == 1)
+      } finally {
+        java.nio.file.Files.deleteIfExists(gone)
+        new scala.reflect.io.Directory(ds.toFile).deleteRecursively()
+      }
+    }
+  }
+
   test("distinct keys get distinct artifacts even when names sanitize alike") {
     withStoreDir {
       val s = spark

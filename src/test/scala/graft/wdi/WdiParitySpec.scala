@@ -122,9 +122,19 @@ class WdiParitySpec extends SparkSpec {
       lagged.groupBy(col("Country Code"), col("Region")).agg(aggs.head, aggs.tail: _*)
     }
 
+    /** Region-level mean and sample sd of each country moment, as
+      * `<col>_mean`, `<col>_sd` pairs, the countries summed in code order. */
+    def byRegion(countryStats: DataFrame, cols: Seq[String]): DataFrame = {
+      val aggs = cols.flatMap { c =>
+        Seq(avg(col(c)).as(s"${c}_mean"), stddev_samp(col(c)).as(s"${c}_sd"))
+      }
+      countryStats.sortWithinPartitions("Country Code")
+        .groupBy(col("Region")).agg(aggs.head, aggs.tail: _*)
+    }
+
     def outputs(spark: SparkSession, dir: String,
         v: WdiPipelines.Variant): Map[String, DataFrame] = {
-      import WdiStats.{acfCols, byRegion, corrCols, ratioCols}
+      import WdiStats.{acfCols, corrCols, ratioCols}
       val cyc = v.makeCycles(frontHalf(spark, dir))
       val sd = sdByCountry(cyc, v.sdNames)
       val corrs = corrByCountry(cyc)

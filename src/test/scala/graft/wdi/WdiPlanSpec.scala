@@ -5,28 +5,27 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.aggregate.Final
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, MapGroupsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Plan-shape regression net for the WDI pass, on [[WdiFixture]]'s
-  * extracts: constructing the 28 outputs runs nothing; once the moments
-  * table is cached, a pass runs two jobs and no query plans an Exchange;
+  * extracts: constructing the 28 outputs runs nothing; a cold pass runs
+  * one query that builds the rows beside 28 outputs that plan no Exchange;
   * once the driver-local rows are built, every output — sorted the way `WdiMain`
   * sorts it and written by [[RCsv.write]] — runs no Spark job and plans as
   * a bare `LocalTableScanExec`; an output persisted over one extract
   * directory never serves another's; the four variants share one set of
-  * rows, from one moments table built by one kernel grouping and one
-  * aggregate, which is shuffled by country once, by (variant, country) once
-  * and to one partition; a cold 28-output pass stays within its job budget
-  * and leaves nothing persisted; the 28 files do not depend on the shuffle
-  * partition count; and the front half scans each extract once.
+  * rows, built by one query with no window, kernel grouping or cache, which
+  * shuffles once, by country; a cold 28-output pass stays within its job
+  * budget and leaves nothing persisted; the 28 files do not depend on the
+  * shuffle partition count; and the front half scans each extract once.
   */
 class WdiPlanSpec extends SparkSpec {
 
@@ -40,9 +39,9 @@ class WdiPlanSpec extends SparkSpec {
   }
 
   /** The RDDs persisted on the shared context. A table is matched to its
-    * cache by plan, and a freshly built moments plan never matches (its
-    * kernels are new closures), so "nothing stays persisted" is checked on
-    * the context itself. */
+    * cache by plan, and a freshly built rows query never matches (its fold
+    * is a new closure), so "nothing stays persisted" is checked on the
+    * context itself. */
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Writes the 28 outputs the way `WdiMain` does; returns their stems. */
@@ -77,13 +76,12 @@ class WdiPlanSpec extends SparkSpec {
     }
   }
 
-  test("a cold pass collects the persisted moments and plans no Exchange") {
-    // fresh extracts: the first output builds the rows, persisting the
-    // moments table for its two collects; were the region aggregate not
-    // over the persisted table, its plan would hold the pipeline's shuffles
+  test("a cold pass runs one rows query; its 28 outputs plan no Exchange") {
+    // fresh extracts: the first output builds the rows, in one query that
+    // scans the extracts; the outputs read driver-local rows
     val in = WdiFixture.write()
     val idle = persisted
-    val out = Files.createTempDirectory("wdi-cached").toString
+    val out = Files.createTempDirectory("wdi-cold").toString
     val plans = new ConcurrentLinkedQueue[SparkPlan]
     val l = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -93,14 +91,14 @@ class WdiPlanSpec extends SparkSpec {
     spark.listenerManager.register(l)
     val stems = try writeAll(in, out) finally spark.listenerManager.unregister(l)
     assert(stems.size == 28 && stems.distinct.size == 28)
-    // the first output collects the moments and their region aggregate:
-    // two queries beside the 28 outputs
-    assert(plans.size == 28 + 2, s"${plans.size} queries ran")
-    plans.forEach { p =>
-      assert(graft.Tables.exchanges(p).isEmpty, s"a query plans an Exchange:\n$p")
+    assert(plans.size == 28 + 1, s"${plans.size} queries ran")
+    val (build, outputs) = plans.asScala.partition(p =>
+      nodes(p).exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(build.size == 1, s"${build.size} queries scan the extracts")
+    outputs.foreach { p =>
+      assert(graft.Tables.exchanges(p).isEmpty, s"an output plans an Exchange:\n$p")
     }
-    // the rows build releases the table once it holds the rows
-    assert(persisted == idle, "the moments table is still persisted after its rows were built")
+    assert(persisted == idle, "the rows build left a table persisted")
   }
 
   test("an output persisted over one extract directory never serves another's") {
@@ -121,34 +119,42 @@ class WdiPlanSpec extends SparkSpec {
     } finally p.unpersist(blocking = true)
   }
 
-  test("one kernel shuffle and one moments aggregate serve all four variants") {
+  test("one rows query serves all four variants: no window, kernel grouping or cache") {
     val idle = persisted
-    val markers = WdiPipelines.variants.flatMap { v =>
+    // each variant reads its own marker over the same rows: once the first
+    // has built them, the other three run no job
+    val read = WdiPipelines.variants.map { v =>
       val m = WdiPipelines.moments(spark, dir, v)
-      m.collect()
-      m.queryExecution.analyzed.collect { case r: WdiRows => r.canonicalized }
+      val jobs = jobsOf(m.collect())
+      (m.queryExecution.analyzed.collect { case r: WdiRows => (r.dir, r.level, r.variant) }, jobs)
     }
-    assert(markers.size == 4 && markers.distinct.size == 1,
-      s"the variants read ${markers.distinct.size} row sets")
-    assert(persisted == idle, "the moments table outlived its rows")
-    val moments = WdiPipelines.momentsAll(spark, dir)
-    val plan = nodes(moments.queryExecution.executedPlan)
-    val kernels = plan.collect { case g: MapGroupsExec => g }
-    assert(kernels.size == 1, s"${kernels.size} kernel groupings:\n${plan.head}")
-    val aggs = plan.collect {
-      case h: HashAggregateExec if h.aggregateExpressions.exists(_.mode == Final) => h
+    val markers = read.flatMap(_._1)
+    assert(markers.map(m => (m._1, m._2)).distinct.size == 1 &&
+      markers.map(_._3) == WdiPipelines.variants.map(_.key), s"markers: $markers")
+    assert(read.tail.forall(_._2 == 0), s"jobs per variant: ${read.map(_._2)}")
+    assert(persisted == idle, "the rows build left a table persisted")
+    // the detrends and the moments run per country inside the tasks that
+    // read the front half's shuffle: no window, kernel grouping or
+    // aggregate of their own, and nothing cached between them
+    val rows = WdiPipelines.countryRows(spark, dir)
+    assert(rows.collect().length == 4 * (WdiFixture.countries.size - WdiFixture.Dropped.size))
+    val plan = nodes(rows.queryExecution.executedPlan)
+    val banned = plan.collect {
+      case w: WindowExec => w
+      case g: MapGroupsExec => g
+      case c: InMemoryTableScanExec => c
     }
-    assert(aggs.size == 1 && aggs.head.groupingExpressions.map(_.references.head.name) ==
-      Seq("variant", "Country Code", "Region"), s"moments aggregates:\n${aggs.mkString("\n")}")
+    assert(banned.isEmpty, s"the rows query plans:\n${banned.mkString("\n")}")
+    assert(rows.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.isEmpty)
   }
 
-  test("the moments plan shuffles by country, by (variant, country) and to one partition") {
-    val moments = WdiPipelines.momentsAll(spark, WdiFixture.write())
-    moments.collect()
-    val plan = nodes(moments.queryExecution.executedPlan)
+  test("the rows query shuffles once, by country") {
+    val rows = WdiPipelines.countryRows(spark, WdiFixture.write())
+    rows.collect()
+    val plan = nodes(rows.queryExecution.executedPlan)
     // the region is a map lookup in the plan, not a broadcast join
     assert(!plan.exists(_.isInstanceOf[BroadcastExchangeExec]),
-      s"the moments plan broadcasts:\n${moments.queryExecution.executedPlan}")
+      s"the rows query broadcasts:\n${rows.queryExecution.executedPlan}")
     val shuffles = plan.collect {
       case e: ShuffleExchangeExec => e.outputPartitioning match {
         case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).mkString(", ")
@@ -156,23 +162,21 @@ class WdiPlanSpec extends SparkSpec {
         case p => p.toString
       }
     }
-    // the front half's country shuffle is the only one before the moments:
-    // the dlog window and the kernel grouping reuse it
-    assert(shuffles.sorted == Seq("Country Code", "single partition", "variant, Country Code"),
-      s"shuffles: ${shuffles.mkString("; ")}\n${moments.queryExecution.executedPlan}")
+    assert(shuffles == Seq("Country Code"),
+      s"shuffles: ${shuffles.mkString("; ")}\n${rows.queryExecution.executedPlan}")
   }
 
-  test("a cold 28-output pass over fresh extracts runs at most 6 jobs") {
+  test("a cold 28-output pass over fresh extracts runs at most 2 jobs") {
     val in = WdiFixture.write()
     val idle = persisted
     val out = Files.createTempDirectory("wdi-pass").toString
     var stems = Seq.empty[String]
     val n = jobsOf { stems = writeAll(in, out) }
     assert(stems.size == 28 && stems.distinct.size == 28)
-    // 4 build the moments table (its three shuffle stages and the cache of
-    // it), 2 collect its rows and its region aggregate; the outputs run none
-    // (one job each took 36)
-    assert(n <= 4 + 2, s"cold pass ran $n jobs")
+    // the rows query: the country shuffle's map stage, then the stage that
+    // folds the countries and collects them; the outputs run none (one job
+    // each took 36)
+    assert(n <= 2, s"cold pass ran $n jobs")
     // nothing the pass built stays persisted: the rows are driver-local
     assert(persisted == idle, s"a pass left RDDs persisted: ${persisted -- idle}")
   }

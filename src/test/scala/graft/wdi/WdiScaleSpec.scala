@@ -1,6 +1,8 @@
 package graft.wdi
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Scale-shape check: the WDI pipeline on ~100x the reference's country
@@ -8,11 +10,14 @@ import org.apache.spark.sql.functions._
   * written as the three wide-by-year extracts). Verifies the plan completes
   * with per-group kernels distributed across partitions and produces
   * exactly one cycle row per (country, year) — the property that must hold
-  * when countries no longer fit one executor. */
+  * when countries no longer fit one executor — and that the moment fold
+  * runs in executor tasks and emits one row per (variant, country). */
 class WdiScaleSpec extends SparkSpec {
 
-  test("front half + quad/HP kernels at 5,000 countries") {
-    val nCountries = 5000
+  private val nCountries = 5000
+
+  /** The extracts: 5,000 countries, every one of which survives the gate. */
+  private lazy val dir = {
     // deterministic synthetic series, one row per (country, series):
     // positive, trending, with a leading invalid run for every 7th country
     // (exercises the run-length gate)
@@ -36,7 +41,10 @@ class WdiScaleSpec extends SparkSpec {
       wide.filter(col("k") % 3 === i).drop("k")
         .write.option("header", true).csv(s"$dir/$f")
     }
+    dir
+  }
 
+  test("front half + quad/HP kernels at 5,000 countries") {
     val front = WdiEtl.frontHalf(spark, dir)
     val quad = WdiCycles.quad(front)
     val n = quad.count()
@@ -49,5 +57,26 @@ class WdiScaleSpec extends SparkSpec {
     assert(hpRows == expect, s"hp cycle rows $hpRows != $expect")
     // kernels ran across >1 partition (distributed, not driver-collected)
     assert(quad.rdd.getNumPartitions > 1)
+  }
+
+  test("the moment fold runs in executor tasks at 5,000 countries") {
+    val foldTasks = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      // the fold runs in the collect's result stage, after the shuffle
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask") foldTasks.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    val rows = try {
+      val r = WdiPipelines.countryRows(spark, dir).collect()
+      ListenerBusDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(l)
+    assert(foldTasks.get > 1, s"the fold ran in ${foldTasks.get} task")
+    val surviving = WdiEtl.countries(spark, dir).count()
+    assert(surviving == nCountries)
+    assert(rows.length == 4 * surviving, s"${rows.length} rows for $surviving countries")
   }
 }
